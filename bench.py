@@ -78,6 +78,19 @@ def _minima_key(sf: str, cpus: str) -> str:
     return sf if str(cpus) == "32" else f"{sf}@{cpus}cpu"
 
 
+def _key_fps(table: dict, key: str) -> dict[str, str]:
+    """The source fingerprints recorded with ``key``'s minima, stored per
+    key as ``_fp@<key>``: a run under one (sf, cpus) key must not mark
+    another key's older minima current. Tables written when fingerprints
+    were one shared ``_fp`` map migrate here once: each present key
+    inherits a copy of it."""
+    legacy = table.pop("_fp", None)
+    if legacy is not None:
+        for k in [k for k in table if not k.startswith("_")]:
+            table.setdefault(f"_fp@{k}", dict(legacy))
+    return table.setdefault(f"_fp@{key}", {})
+
+
 def _load_minima(key: str, fps: dict[str, str]) -> dict[str, float]:
     """Persisted per-query minima for this (sf, cpus) key, DROPPING entries
     whose query source changed since the minimum was recorded."""
@@ -88,7 +101,7 @@ def _load_minima(key: str, fps: dict[str, str]) -> dict[str, float]:
     except (OSError, ValueError):
         return {}
     mins = dict(table.get(key, {}))
-    old_fp = table.get("_fp", {})
+    old_fp = _key_fps(table, key)
     return {
         n: v for n, v in mins.items()
         if old_fp.get(n) is None or old_fp.get(n) == fps.get(n)
@@ -110,7 +123,7 @@ def _update_minima(
     except (OSError, ValueError):
         table = {}
     mins = table.setdefault(key, {})
-    old_fp = table.setdefault("_fp", {})
+    old_fp = _key_fps(table, key)
     # drop minima for names no longer in the registry (merged-away rows):
     # they are inert for min_total (which sums over THIS run's queries)
     # but a stale 39-entry tail misreads as live benchmark surface

@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 
 from nimhdfstore_spark.rowid import ROWID
 from nimhdfstore_spark.store import Store, StoreError, Table
+from nimhdfstore_spark.tables import local_frame
 
 VALUE = "value"
 
@@ -206,18 +207,9 @@ class Dataset:
     # -- mutation (M10-M14) --------------------------------------------------
 
     def _value_frame(self, spark: SparkSession, rowids: list[int], values: list):
-        dtype = self.dtype
-        from nimhdfstore_spark.tables import local_frame
-
-        rows = list(zip(rowids, values))
-        schema = f"{ROWID} long, {VALUE} {dtype}"
-        try:
-            # LocalRelation (job-free) for the numeric dtypes every HDF5
-            # dataset uses; local_frame refuses exotic value types loudly —
-            # fall back to the classic conversion for those
-            return local_frame(spark, rows, schema)
-        except ValueError:
-            return spark.createDataFrame(rows, schema)
+        return local_frame(
+            spark, zip(rowids, values), f"{ROWID} long, {VALUE} {self.dtype}"
+        )
 
     def write_coords(self, coords: Sequence[Sequence[int]], values: Sequence) -> None:
         """M13 coordinate write (datasets.nim:1117-1275): scatter-update the
@@ -396,14 +388,7 @@ def create_dataset(
         if shape is not None and [int(d) for d in shape] != dshape:
             raise StoreError(f"data shape {dshape} != declared {list(shape)}")
         shape = dshape
-        from nimhdfstore_spark.tables import local_frame
-
-        rows = list(zip(range(len(flat)), flat))
-        schema = f"{ROWID} long, {VALUE} {dtype}"
-        try:
-            df = local_frame(spark, rows, schema)
-        except ValueError:
-            df = spark.createDataFrame(rows, schema)
+        df = local_frame(spark, enumerate(flat), f"{ROWID} long, {VALUE} {dtype}")
     else:
         if shape is None:
             raise StoreError("need data or shape")

@@ -966,11 +966,8 @@ def embedding_lsh_pairs(
     else:
         from nimhdfstore_spark.tables import local_frame
 
-        spark = df.sparkSession
-        # LocalRelation (job-free broadcast side) instead of a
-        # Python-RDD-backed frame
         hot_df = local_frame(
-            spark,
+            df.sparkSession,
             [
                 (int(r["band"]), int(r["bucket"]),
                  int(min(_S_MAX, -(-int(r["count"]) // split))))
@@ -1138,9 +1135,6 @@ def connected_components(
             id_type = nodes.schema[id_col].dataType
             from nimhdfstore_spark.tables import local_frame
 
-            # LocalRelation, not createDataFrame(list): the latter is
-            # Python-RDD-backed and schedules a Python-worker job every
-            # time the mapping is (re)read by the labeling join
             mapping = local_frame(
                 pairs.sparkSession,
                 [(x, int(comp_min[find(x)])) for x in parent],

@@ -658,7 +658,9 @@ def knn_graph(
         )
     rows = [r for r in rows if r[1] is not None]
     if not rows:
-        return df.sparkSession.createDataFrame([], schema).withColumn(
+        from nimhdfstore_spark.tables import local_frame
+
+        return local_frame(df.sparkSession, [], schema).withColumn(
             "cosine", F.round(F.col("cosine_raw"), 6)
         ).select(*out_schema)
     ids = np.array([r[0] for r in rows])

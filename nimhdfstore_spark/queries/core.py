@@ -515,8 +515,8 @@ def q13(spark, sf_dir):
 #     j/10.0, len = id % 7, round-tripped through a store table.
 #   leg 1 (hdf5 interchange) — the reference's native format actually
 #     flowing (nimtables.nim:94-171): lineitem written through the
-#     connector (h5py when present, else the from-scratch h5lite backend)
-#     and read back with chunk-aligned partition planning.
+#     connector (the from-scratch h5lite backend) and read back with
+#     chunk-aligned partition planning.
 #   leg 2 (hdf5 vlen) — array<double> through the HDF5 leg (global-heap
 #     objects in h5lite; nimhdf5/datasets.nim:1023-1115 /
 #     datatypes.nim:376-382 semantics), generated deterministically from

@@ -222,7 +222,9 @@ def _keys_sorted_distributed(spark, files: list[str], keys: Sequence[str]) -> bo
     (``_file_keys_sorted`` — bounded memory at any file size), the driver
     collects one boolean per file. At 100 TB this is the only acceptable
     shape — the driver never reads data pages."""
-    spec = spark.createDataFrame([(f,) for f in files], "path string").repartition(
+    from nimhdfstore_spark.tables import local_frame
+
+    spec = local_frame(spark, [(f,) for f in files], "path string").repartition(
         len(files)
     )
     keylist = list(keys)
@@ -353,7 +355,10 @@ def rowid_from_sorted_parquet(
             F.col("_metadata.row_index").cast("long").alias(ROWID), *cols
         )
         return out
-    base_df = spark.createDataFrame(
+    from nimhdfstore_spark.tables import local_frame
+
+    base_df = local_frame(
+        spark,
         [(f"file://{f}" if not f.startswith("file:") else f, b) for f, b, _ in bases],
         "__fp string, __base long",
     )

@@ -4,15 +4,14 @@ file-format specification to round-trip the reference's table shape
 COMPOUND-type datasets under the root group, contiguous layout,
 little-endian scalar + fixed-width string members.
 
-Why this exists: the connector in ``hdf5.py`` is written against h5py, but
-h5py is not installed in this container — which left the HDF5 read/write
-legs never executing. This module implements the subset of the format the
-connector needs directly from the published spec (HDF5 File Format
-Specification v2/v0 structures: superblock v0, v1 object headers, local
-heap, v1 group B-tree, SNOD symbol nodes, dataspace/datatype/layout
-messages), so the leg runs everywhere. h5py, when present, reads these
-files; the structures written here are the same ones libhdf5 emits for a
-plain contiguous compound dataset.
+Why this exists: it is the I/O backend of the connector in ``hdf5.py``,
+with no dependency on libhdf5 or h5py. It implements the subset of the
+format the connector needs directly from the published spec (HDF5 File
+Format Specification v2/v0 structures: superblock v0, v1 object headers,
+local heap, v1 group B-tree, SNOD symbol nodes, dataspace/datatype/layout
+messages), so the leg runs everywhere. The structures written here are the
+same ones libhdf5 emits for a plain contiguous compound dataset, so
+libhdf5-based readers (h5py included) read these files.
 
 Variable-length (VLEN) members are supported through the HDF5 GLOBAL HEAP
 (spec III.E; reference surface nimhdf5/datasets.nim:1023-1115,

@@ -6,13 +6,13 @@ selection touches. The Spark-side mirror: the *driver* opens the file once
 for catalog metadata (shape, dtype, chunk size — the ``H5TBget_table_info``
 analog, nimtables.nim:111-131), plans **chunk-aligned record ranges** as
 input partitions, and executors each open the file independently and read
-only their range via h5py's hyperslab slicing — one Spark partition per
-chunk-aligned range, so no chunk is decompressed by two tasks.
+only their range — one Spark partition per chunk-aligned range, so no chunk
+is decompressed by two tasks. The write leg is a single-writer job (HDF5
+has no parallel write without MPI).
 
-h5py is not installed in this container, so the open/read calls are gated:
-the pure planning logic (partitioning, dtype mapping) is fully tested, and
-the executor read path raises a clear error if h5py is absent. The write
-leg is a single-writer job (HDF5 has no parallel write without MPI).
+File I/O goes through ``h5lite``, the package's pure-Python implementation
+of the format subset the reference's tables use (contiguous + chunked/gzip
+compound datasets, VLEN via the global heap, scalar attributes).
 """
 
 from __future__ import annotations
@@ -36,31 +36,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
-try:  # optional: absent in this container
-    import h5py  # type: ignore
-
-    HAVE_H5PY = True
-except ImportError:
-    h5py = None
-    HAVE_H5PY = False
-
-#: I/O backend: h5py when installed, else the from-scratch pure-Python
-#: implementation in h5lite.py (contiguous + chunked/gzip compound
-#: datasets, VLEN via the global heap, scalar attributes) — so the HDF5
-#: legs EXECUTE everywhere.
-BACKEND = "h5py" if HAVE_H5PY else "h5lite"
-
-
-def _require_h5py() -> None:
-    if not HAVE_H5PY:
-        raise RuntimeError(
-            "h5py is required for this feature (h5py special dtypes) but "
-            "is not installed; table I/O (scalar/string/vlen columns, "
-            "chunked/gzip layouts, attrs) goes through the built-in "
-            "h5lite backend, and the Parquet store remains the scale "
-            "default"
-        )
-
+from nimhdfstore_spark.sources import h5lite
+from nimhdfstore_spark.tables import local_frame
 
 # -- type mapping (SURVEY §1.2; typeinspect.nim:28-41, datatypes.nim:247-364)
 
@@ -145,26 +122,6 @@ def _attr_value(v):
 
 def table_info(path: str, dataset: str) -> dict:
     """Driver-side catalog lookup: (nrecords, chunk_size, schema)."""
-    if HAVE_H5PY:
-        with h5py.File(path, "r") as f:
-            d = f[dataset]
-            return {
-                "nrecords": int(d.shape[0]),
-                "chunk_size": int(d.chunks[0]) if d.chunks else int(d.shape[0]) or 1,
-                "schema": compound_to_schema(d.dtype),
-                "columns": list(d.dtype.names),
-                "attrs": {
-                    # h5py yields numpy scalars/bytes; Store.put meta is
-                    # json.dump'd, which cannot serialize np.int64/np.bool_.
-                    # .item() only applies to size-1 values — a foreign file
-                    # with an array-valued attribute must degrade to a list,
-                    # not crash the whole table_info call.
-                    k: _attr_value(v)
-                    for k, v in d.attrs.items()
-                },
-            }
-    from nimhdfstore_spark.sources import h5lite
-
     info = h5lite.catalog(path)[dataset]
     return {
         "nrecords": int(info["nrows"]),
@@ -188,9 +145,9 @@ def read_hdf5_table(
 ) -> DataFrame:
     """Parallel scan of an HDF5 compound table: one task per chunk-aligned
     record range; each executor reads only its hyperslab (mirrors
-    ``H5TBread_records`` + chunk intersection). Column projection happens in
-    the h5py read (field subsetting), the analog of ``H5TBread_fields_name``
-    (P8, hl/H5TBpublic.nim:73-76)."""
+    ``H5TBread_records`` + chunk intersection). Column projection keeps
+    only the requested fields of each read range, the analog of
+    ``H5TBread_fields_name`` (P8, hl/H5TBpublic.nim:73-76)."""
     info = _info if _info is not None else table_info(path, dataset)
     schema = info["schema"]
     if columns:
@@ -198,7 +155,7 @@ def read_hdf5_table(
         schema = StructType(keep)
     names = [f.name for f in schema.fields]
     parts = plan_partitions(info["nrecords"], info["chunk_size"], target_records)
-    spec = spark.createDataFrame(parts, "start long, stop long").repartition(
+    spec = local_frame(spark, parts, "start long, stop long").repartition(
         max(1, len(parts))
     )
 
@@ -221,20 +178,11 @@ def read_hdf5_table(
                 cols[n] = v
             return pd.DataFrame(cols)
 
-        if HAVE_H5PY:
-            with h5py.File(path, "r") as f:
-                d = f[dataset]
-                for pdf in batches:
-                    for start, stop in zip(pdf["start"], pdf["stop"]):
-                        yield to_frame(d[int(start):int(stop)])
-        else:
-            from nimhdfstore_spark.sources import h5lite
-
-            for pdf in batches:
-                for start, stop in zip(pdf["start"], pdf["stop"]):
-                    yield to_frame(
-                        h5lite.read_range(path, dataset, int(start), int(stop))
-                    )
+        for pdf in batches:
+            for start, stop in zip(pdf["start"], pdf["stop"]):
+                yield to_frame(
+                    h5lite.read_range(path, dataset, int(start), int(stop))
+                )
 
     return spec.mapInPandas(read_range, schema=schema)
 
@@ -251,84 +199,14 @@ def write_hdf5_table(
 ) -> None:
     """Single-writer HDF5 table write (H5TBmake_table analog, nimtables.nim:
     94-104; default chunk 5000 and optional deflate match openHDFStore,
-    nimtables.nim:60-67). HDF5 has no parallel non-MPI write, so partitions
-    stream through the driver (``toLocalIterator``) — the format's inherent
-    bottleneck, documented rather than hidden."""
-    if not HAVE_H5PY:
-        return _write_hdf5_table_lite(
-            df, path, dataset, chunk_size=chunk_size, compression=compression,
-            attrs=attrs,
-        )
+    nimtables.nim:60-67). HDF5 has no parallel non-MPI write, so the whole
+    table materializes driver-side (``toArrow``) — the format's inherent
+    bottleneck, documented rather than hidden. Scalar, string and
+    VLEN-sequence columns: arrays go through h5lite's global heap writer
+    (reference nimhdf5/datasets.nim:1023-1115); strings become EXACT-max-
+    width fixed S members measured from the data (never a silent fixed-width
+    truncation)."""
     import numpy as np
-
-    fields = [(f.name, spark_to_numpy_descriptor(f.dataType)) for f in df.schema.fields]
-    dt = _resolve_dtype(fields)
-    with h5py.File(path, "a") as f:
-        if dataset in f:
-            del f[dataset]
-        d = f.create_dataset(
-            dataset, shape=(0,), maxshape=(None,), dtype=dt,
-            chunks=(chunk_size,), compression="gzip" if compression else None,
-        )
-        for k, v in _scalar_attrs(attrs).items():
-            d.attrs[k] = v
-        n = 0
-        # stream Arrow batches driver-side (bounded memory, no row loop for
-        # fixed-width columns; vlen columns are per-cell objects by nature)
-        for batch in df.toArrow().to_batches():
-            rec = np.empty(batch.num_rows, dtype=dt)
-            for name, (kind, np_t) in fields:
-                col = batch.column(name)
-                if kind == "fixed":
-                    rec[name] = col.to_numpy(zero_copy_only=False)
-                elif kind == "vlen_str":
-                    vals = np.empty(batch.num_rows, dtype=object)
-                    vals[:] = ["" if v is None else v for v in col.to_pylist()]
-                    rec[name] = vals
-                else:  # vlen sequence
-                    vals = np.empty(batch.num_rows, dtype=object)
-                    vals[:] = [
-                        np.asarray([] if v is None else v, dtype=np_t)
-                        for v in col.to_pylist()
-                    ]
-                    rec[name] = vals
-            d.resize((n + len(rec),))
-            d[n : n + len(rec)] = rec
-            n += len(rec)
-
-
-def _scalar_attrs(attrs: dict | None) -> dict:
-    """Store attrs → HDF5-attachable scalars: int/float/str/bool pass
-    through, anything else (lists, dicts) JSON-stringifies — HDF5 scalar
-    attributes can't hold them natively and dropping them silently would
-    lose catalog metadata in a migration."""
-    import json as _json
-
-    out = {}
-    for k, v in (attrs or {}).items():
-        out[k] = v if isinstance(v, (int, float, str, bool)) else _json.dumps(v)
-    return out
-
-
-def _write_hdf5_table_lite(
-    df: DataFrame,
-    path: str,
-    dataset: str,
-    chunk_size: int = 5000,
-    compression: bool = False,
-    attrs: dict | None = None,
-) -> None:
-    """h5lite write leg: scalar, string and VLEN-sequence columns. Arrays
-    go through h5lite's global heap writer (reference
-    nimhdf5/datasets.nim:1023-1115); strings become EXACT-max-width fixed
-    S members measured from the data (never the silent S64 truncation of
-    round 1); chunked layout + gzip mirror the reference's table defaults
-    (nimtables.nim:60-67); the whole table materializes driver-side
-    (single-writer interchange leg, same bottleneck class as the h5py
-    streaming path, only less incremental)."""
-    import numpy as np
-
-    from nimhdfstore_spark.sources import h5lite
 
     fields = [(f.name, spark_to_numpy_descriptor(f.dataType)) for f in df.schema.fields]
     batches = list(df.toArrow().to_batches())
@@ -397,6 +275,19 @@ def _write_hdf5_table_lite(
     )
 
 
+def _scalar_attrs(attrs: dict | None) -> dict:
+    """Store attrs → HDF5-attachable scalars: int/float/str/bool pass
+    through, anything else (lists, dicts) JSON-stringifies — HDF5 scalar
+    attributes can't hold them natively and dropping them silently would
+    lose catalog metadata in a migration."""
+    import json as _json
+
+    out = {}
+    for k, v in (attrs or {}).items():
+        out[k] = v if isinstance(v, (int, float, str, bool)) else _json.dumps(v)
+    return out
+
+
 #: fixed-width Spark → numpy codes (unsigned never appears on the write leg);
 #: both the DDL aliases and simpleString() spellings (bigint/smallint/...)
 _FIXED_NP = {
@@ -409,8 +300,7 @@ _FIXED_NP = {
 
 
 def spark_to_numpy_descriptor(t: DataType) -> tuple[str, str | None]:
-    """Spark type → pure write-leg descriptor (no h5py needed, so the
-    mapping is testable in this container): ``('fixed', np_code)``,
+    """Spark type → pure write-leg descriptor: ``('fixed', np_code)``,
     ``('vlen_str', None)`` for strings (variable-width — no S64 truncation),
     or ``('vlen', base_code)`` for ``array<fixed>`` columns (reference VLEN,
     datatypes.nim:376-382). Nested arrays / non-numeric elements are
@@ -426,23 +316,6 @@ def spark_to_numpy_descriptor(t: DataType) -> tuple[str, str | None]:
     if s in _FIXED_NP:
         return ("fixed", _FIXED_NP[s])
     raise TypeError(f"unsupported type for HDF5 write: {s}")
-
-
-def _resolve_dtype(fields: Sequence[tuple[str, tuple[str, str | None]]]):
-    """Descriptors → concrete compound numpy dtype with h5py special dtypes
-    for the vlen members (gated: the special dtypes carry HDF5 type info)."""
-    _require_h5py()
-    import numpy as np
-
-    out = []
-    for name, (kind, np_t) in fields:
-        if kind == "fixed":
-            out.append((name, np_t))
-        elif kind == "vlen_str":
-            out.append((name, h5py.string_dtype(encoding="utf-8")))
-        else:
-            out.append((name, h5py.vlen_dtype(np.dtype(np_t))))
-    return np.dtype(out)
 
 
 # -- migration path (reference user -> this engine, and back) -----------------

@@ -46,6 +46,7 @@ from pyspark.sql.types import StructType
 
 from nimhdfstore_spark.operators import positional
 from nimhdfstore_spark.rowid import ROWID, with_rowid
+from nimhdfstore_spark.tables import local_frame
 
 _VALID_KEY = re.compile(r"^[A-Za-z0-9_\-./]+$")
 _SNAP = "snap-{:08d}"
@@ -1682,20 +1683,19 @@ class Store:
         mutation APIs take a driver seq), so a Spark write job would spend
         ~0.7 s of scheduler/committer fixed cost to move a handful of rows.
         A pyarrow file write lands the same sorted, stat-carrying Parquet
-        in milliseconds. Taken when the frame carries the driver-rows
-        marker ``_new_rows`` attaches (zero jobs: the rows are already on
-        the driver), Spark reports the plan local (one ``toArrow``), or the
-        committer knows the rewrite is small (``expected_rows`` <=
+        in milliseconds. Taken when Spark reports the plan local (a
+        ``local_frame`` LocalRelation — every driver-rows payload, e.g.
+        ``_new_rows``' output: ``collect()`` reads it with zero jobs), or
+        the committer knows the rewrite is small (``expected_rows`` <=
         ``LOCAL_REWRITE_MAX_ROWS``: one bounded collect-as-Arrow job
         replaces the range-shuffle + Hadoop-committer write job, the
         dominant fixed cost of small mutations), and
         only for types whose pyarrow encoding matches Spark's writer
         (mixed snapshots must stay uniform); returns False to fall through
         to the distributed path otherwise."""
-        local_rows = getattr(body, "_nimhdfstore_rows", None)
+        local = body.isLocal()
         small_rewrite = (
-            local_rows is None
-            and expected_rows is not None
+            expected_rows is not None
             and expected_rows <= self.LOCAL_REWRITE_MAX_ROWS
         )
         # caller-promised row bound (e.g. a CTAS whose source is bounded by
@@ -1704,24 +1704,18 @@ class Store:
         # but checked <= bound instead of == (the caller knows a bound, not
         # the exact count). A violated promise raises loudly below.
         hinted = (
-            local_rows is None
-            and not small_rewrite
+            not small_rewrite
             and local_max_rows is not None
             and local_max_rows <= self.LOCAL_REWRITE_MAX_ROWS
         )
-        if (
-            local_rows is None and not small_rewrite and not hinted
-            and not body.isLocal()
-        ):
+        if not local and not small_rewrite and not hinted:
             return False
         pq_codec = self._LOCAL_WRITE_CODECS.get(codec)
         if pq_codec is None:
             return False
         if any(not self._local_type_ok(t) for _c, t in body.dtypes):
             return False
-        if (small_rewrite or hinted) and not body.isLocal() and any(
-            t == "binary" for _c, t in body.dtypes
-        ):
+        if not local and any(t == "binary" for _c, t in body.dtypes):
             # the row gate doesn't bound BYTES: binary cells (media blobs)
             # can be MBs each, so a 256k-row rewrite could be tens of GB.
             # Blob tables keep the distributed writer.
@@ -1731,24 +1725,15 @@ class Store:
         import pyarrow as pa
         import pyarrow.parquet as pq
 
-        if local_rows is not None:
-            rows, schema = local_rows
-            # the marker is only valid when the frame flowed unmodified from
-            # _new_rows: a caller that filtered/unioned the marked frame but
-            # kept the attribute would silently write the stale marker rows.
-            # The committer knows the row count it expects — cross-check it.
-            if expected_rows is not None and len(rows) != expected_rows:
-                raise StoreError(
-                    f"driver-rows marker has {len(rows)} rows but the commit "
-                    f"expects {expected_rows}: the marked frame was "
-                    "transformed after _new_rows — drop the marker or pass "
-                    "the transformed frame without it"
-                )
+        if local:
+            # the rows already sit in the driver-side plan: collect() reads
+            # them with no job, where toArrow() would schedule one
             from pyspark.sql.pandas.types import to_arrow_schema
 
+            cols = body.columns
             tbl = pa.Table.from_pylist(
-                [dict(zip(schema.names, r)) for r in rows],
-                schema=to_arrow_schema(schema),
+                [dict(zip(cols, r)) for r in body.collect()],
+                schema=to_arrow_schema(body.schema),
             )
         else:
             # The hinted bound is a CALLER promise, so enforce it BEFORE
@@ -1756,23 +1741,23 @@ class Store:
             # executeTake, no shuffle, rows in partition order exactly like
             # the plain collect — so a wrong promise moves at most bound+1
             # rows to the driver instead of the whole frame. Within bound
-            # the limited table IS the full table. expected_rows
-            # (small_rewrite) is the committer's own accounting, not a
-            # promise — its equality check below stays the validator.
+            # the limited table IS the full table.
             src = body.limit(local_max_rows + 1) if hinted else body
             tbl = src.toArrow()
-            if expected_rows is not None and tbl.num_rows != expected_rows:
-                raise StoreError(
-                    f"rewrite produced {tbl.num_rows} rows but the commit "
-                    f"expects {expected_rows}: manifest row accounting and "
-                    "the rewrite plan disagree"
-                )
-            if hinted and tbl.num_rows > local_max_rows:
-                raise StoreError(
-                    f"local_max_rows={local_max_rows} promised but the frame "
-                    f"produced {tbl.num_rows} rows: the caller's bound is "
-                    "wrong — drop the hint or fix the bound"
-                )
+        # expected_rows is the committer's own accounting, not a promise:
+        # this equality check is its validator
+        if expected_rows is not None and tbl.num_rows != expected_rows:
+            raise StoreError(
+                f"rewrite produced {tbl.num_rows} rows but the commit "
+                f"expects {expected_rows}: manifest row accounting and "
+                "the rewrite plan disagree"
+            )
+        if hinted and tbl.num_rows > local_max_rows:
+            raise StoreError(
+                f"local_max_rows={local_max_rows} promised but the frame "
+                f"produced {tbl.num_rows} rows: the caller's bound is "
+                "wrong — drop the hint or fix the bound"
+            )
         if ROWID in tbl.column_names:
             tbl = tbl.sort_by(ROWID)
         snap_dir = os.path.join(self._table_dir(name), snap)
@@ -2008,7 +1993,7 @@ class Table:
                 "no schema to type the empty frame with (rewrite the table "
                 "with Store.put to repair)"
             )
-        return self.store.spark.createDataFrame([], schema)
+        return local_frame(self.store.spark, [], schema)
 
     def _catalog_empty(self) -> bool:
         """True iff the CURRENT snapshot provably has zero files, from the
@@ -2180,8 +2165,8 @@ class Table:
     def _zone_map_distributed(self, column: str, names: list[str]) -> list[dict]:
         spark = self.store.spark
         snap = self.snapshot_path
-        spec = spark.createDataFrame(
-            [(n,) for n in names], "name string"
+        spec = local_frame(
+            spark, [(n,) for n in names], "name string"
         ).repartition(len(names))
 
         def stats(batches):
@@ -2727,8 +2712,10 @@ class Table:
 
         If the frame carries a ``_rowid`` it is re-based onto the splice
         point (caller-defined local order). Otherwise the rows are numbered
-        by their arrival order on a single partition — mutation payloads are
-        driver-built and small; bulk loads go through :meth:`Store.put`.
+        by their arrival order and returned as a ``local_frame``
+        LocalRelation, which ``_write_local`` writes with zero jobs —
+        mutation payloads are driver-built and small; bulk loads go
+        through :meth:`Store.put`.
 
         The payload schema must match the table's exactly (name AND type per
         column): a silent type widening (int32 table, int64 payload) would
@@ -2782,12 +2769,7 @@ class Table:
                 [StructField(ROWID, LongType())] + list(df.schema.fields)
             )
             positioned = [(start + i, *r) for i, r in enumerate(rows)]
-            out = self.store.spark.createDataFrame(positioned, schema)
-            # driver-rows marker: _write_local writes these rows directly
-            # (createDataFrame plans are RDD-backed, so isLocal() can't
-            # identify them as driver-sized)
-            out._nimhdfstore_rows = (positioned, schema)
-            return out, n
+            return local_frame(self.store.spark, positioned, schema), n
         cols = [ROWID] + [c for c in df.columns if c != ROWID]
         return body.select(*cols), n
 
@@ -3206,7 +3188,7 @@ class Table:
             }
             for r in rows
         })
-        return self.store.spark.createDataFrame(rows, stats.schema)
+        return local_frame(self.store.spark, rows, stats.schema)
 
     def cluster_by(self, *cluster_cols) -> None:
         """OPTIMIZE-ZORDER-style physical re-clustering: rewrite the current
@@ -3255,7 +3237,7 @@ class Table:
             else:
                 keep.append(e)
         old = self._read_files(touched)
-        pay_df = self.store.spark.createDataFrame(rows, df.schema)
+        pay_df = local_frame(self.store.spark, rows, df.schema)
         body = self._drop_rowids(old, ids).unionByName(pay_df)
         self._commit_pruned(keep, body, sum(e["rows"] for e in touched))
 
@@ -3266,10 +3248,6 @@ class Table:
         6.7 s for 10k literals vs 0.5 s for the anti-join) and payloads can
         reach ``PAYLOAD_MAX_ROWS``; the anti-join plan is O(1) in expression
         size and broadcast-hash at any table scale."""
-        from nimhdfstore_spark.tables import local_frame
-
-        # LocalRelation: a Python-RDD-backed id list would schedule a
-        # Python-worker job inside every delete/update commit
         ids_df = local_frame(
             self.store.spark, [(int(i),) for i in ids], f"{ROWID} long"
         )
@@ -3308,7 +3286,7 @@ class Table:
         # rowids to replace: broadcast the (small) payload keys against the
         # table — at cluster scale this is a broadcast-hash semi-join, no
         # fact-side shuffle.
-        pay_df = self.store.spark.createDataFrame(rows, pay.schema)
+        pay_df = local_frame(self.store.spark, rows, pay.schema)
         matched = (
             cur.select(ROWID, key)
             .join(F.broadcast(pay_df.select(key)), on=key, how="inner")
@@ -3339,7 +3317,7 @@ class Table:
             old = self._read_files(touched)
             body = self._drop_rowids(old, ids).unionByName(upd)
         if n_ins:
-            ins_df = self.store.spark.createDataFrame(ins_rows, pay.schema)
+            ins_df = local_frame(self.store.spark, ins_rows, pay.schema)
             tail, _ = self._new_rows(ins_df, self.nrows, n_ins)
             body = tail if body is None else body.unionByName(
                 tail.select(*body.columns)

@@ -81,25 +81,31 @@ def table_nrows(sf_dir: str, table: str) -> int:
 
 
 def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
-    """Driver-rows DataFrame as a JVM LocalRelation.
+    """Driver rows as a DataFrame: the package's one driver-rows path.
 
     ``spark.createDataFrame(list)`` parallelizes the rows into a
-    Python-RDD-backed plan: ``isLocal()`` is False and every ``collect()``
-    on it schedules a real job through a Python worker (~0.3 s of fixed
-    cost for a handful of rows — round-13 profile of the mutation payload
-    path). Building through a pyarrow Table instead lands the rows in a
-    LocalRelation: ``isLocal()`` is True, ``collect()``/``toArrow()`` are
-    job-free, and the Store's payload gate (``_collect_payload``) and
-    driver-direct writer (``_write_local``) both take their zero-job
-    branches. Works regardless of the Arrow session conf; types follow
+    Python-RDD-backed plan (``Scan ExistingRDD``): ``isLocal()`` is False
+    and every job that reads it runs a Python-worker stage (~0.3 s of fixed
+    cost for a handful of rows). Building through a pyarrow Table instead
+    lands the rows in a LocalRelation (``LocalTableScan``): ``isLocal()``
+    is True and ``collect()`` is job-free (``toArrow()`` still fires one
+    job), so the Store's payload gate (``_collect_payload``) and
+    driver-direct writer (``_write_local``) take their zero-job branches.
+    Works regardless of the Arrow session conf; types follow
     ``to_arrow_schema`` exactly.
 
-    Use for driver-built payloads of fixed-width/string/array-of-primitive
-    columns. Timestamp columns keep the classic path (arrow/pickle
-    timezone coercions differ), enforced here by refusing them loudly.
-    """
-    import pyarrow as pa
+    Schemas with a timestamp column fall back to the classic
+    ``createDataFrame`` conversion (arrow and pickle coerce naive datetimes
+    to different time zones), so those frames stay Python-RDD-backed.
 
+    Sequence rows bind positionally and must match the schema width;
+    Mapping rows bind by name and must carry exactly the schema's field
+    names (a short row would silently read null, an extra key would be
+    silently dropped).
+    """
+    from collections.abc import Mapping
+
+    import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
     from pyspark.sql.types import StructType, _parse_datatype_string
 
@@ -108,31 +114,27 @@ def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
         if not isinstance(parsed, StructType):  # pragma: no cover
             raise ValueError(f"expected a struct schema, got {parsed}")
         schema = parsed
-    if any("timestamp" in f.dataType.simpleString() for f in schema.fields):
-        raise ValueError(
-            "local_frame does not support timestamp columns; use "
-            "spark.createDataFrame (classic conversion) for those payloads"
-        )
-
-    # Rows bind positionally; a Mapping row would silently zip over its
-    # KEYS (field names written as values — a corrupt frame, not an error),
-    # so mappings pass through by name and sequences must match the schema
-    # width exactly (r13 ADVICE).
-    from collections.abc import Mapping
+    names = schema.names
 
     def _as_dict(r):
         if isinstance(r, Mapping):
+            if set(r) != set(names):
+                raise ValueError(
+                    f"local_frame mapping row keys {sorted(r)} differ from "
+                    f"the schema fields {names}"
+                )
             return dict(r)
-        if len(r) != len(schema.names):
+        if len(r) != len(names):
             raise ValueError(
                 f"local_frame row has {len(r)} values for "
-                f"{len(schema.names)} schema fields: {r!r}"
+                f"{len(names)} schema fields: {r!r}"
             )
-        return dict(zip(schema.names, r))
+        return dict(zip(names, r))
 
-    tbl = pa.Table.from_pylist(
-        [_as_dict(r) for r in rows], schema=to_arrow_schema(schema)
-    )
+    dicts = [_as_dict(r) for r in rows]
+    if any("timestamp" in f.dataType.simpleString() for f in schema.fields):
+        return spark.createDataFrame(dicts, schema)
+    tbl = pa.Table.from_pylist(dicts, schema=to_arrow_schema(schema))
     return spark.createDataFrame(tbl)
 
 

@@ -1,7 +1,7 @@
 """HDF5 connector (sources/hdf5.py): planning/type logic plus the I/O
-legs, which run on EVERY box — through h5py when installed, else through
-the from-scratch h5lite backend (sources/h5lite.py): contiguous and
-chunked(+gzip) layouts, VLEN via the global heap."""
+legs, which run on EVERY box through the from-scratch h5lite backend
+(sources/h5lite.py): contiguous and chunked(+gzip) layouts, VLEN via the
+global heap."""
 
 from __future__ import annotations
 
@@ -97,14 +97,6 @@ def test_spark_to_numpy_descriptor():
         h5src.spark_to_numpy_descriptor(BooleanType())
 
 
-@pytest.mark.skipif(h5src.HAVE_H5PY, reason="asserts the h5py-only gates")
-def test_h5py_only_gates_without_h5py(spark, tmp_path):
-    # _resolve_dtype builds h5py special dtypes and stays gated; ALL I/O
-    # (scalar/string/vlen) now runs via h5lite
-    with pytest.raises(RuntimeError, match="h5py"):
-        h5src._resolve_dtype([("k", ("fixed", "i8"))])
-
-
 def test_hdf5_roundtrip(spark, tmp_path):
     path = str(tmp_path / "store.h5")
     df = spark.createDataFrame(
@@ -121,8 +113,7 @@ def test_hdf5_roundtrip(spark, tmp_path):
 def test_hdf5_roundtrip_vlen_and_strings(spark, tmp_path):
     # VLEN sequences + variable-width strings (reference
     # datatypes.nim:376-382,424-453), incl. strings longer than the old
-    # fixed-S64 limit; runs on BOTH backends (h5py when present, else the
-    # h5lite global-heap implementation)
+    # fixed-S64 limit, through the h5lite global-heap implementation
     path = str(tmp_path / "vlen.h5")
     rows = [
         (i, "x" * (i % 100), [float(j) for j in range(i % 5)])
@@ -204,12 +195,11 @@ def test_hdf5_chunked_compressed_roundtrip(spark, tmp_path):
         "k long, v double, tag string",
     )
     h5src.write_hdf5_table(df, path, "t", chunk_size=1024, compression=True)
-    if not h5src.HAVE_H5PY:
-        from nimhdfstore_spark.sources import h5lite
+    from nimhdfstore_spark.sources import h5lite
 
-        info = h5lite.catalog(path)["t"]
-        assert info["chunk_rows"] == 1024 and "btree" in info
-        assert any(fid == 1 for fid, _v in info["filters"])  # gzip
+    info = h5lite.catalog(path)["t"]
+    assert info["chunk_rows"] == 1024 and "btree" in info
+    assert any(fid == 1 for fid, _v in info["filters"])  # gzip
     back = h5src.read_hdf5_table(spark, path, "t", target_records=3000)
     assert back.count() == 20_000
     got = {r["k"]: (r["v"], r["tag"]) for r in back.where("k % 4999 = 0").collect()}

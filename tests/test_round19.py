@@ -3,10 +3,12 @@
 - ``put(local_max_rows=)``'s violation branch must fire LOUDLY and must be
   enforced through a bounded collect (a wrong caller promise must not
   materialize the whole frame on the driver before the error);
-- ``local_frame``'s timestamp refusal and row-shape guards (a Mapping row
-  silently zipping over its keys was a corrupt frame, not an error);
-- the bench minima table is keyed by (sf, cpus) so a non-default-core run
-  can never lower the 32-core reference minima.
+- ``local_frame``'s timestamp fallback and row-shape guards (a Mapping row
+  silently zipping over its keys, or silently losing/gaining fields, was a
+  corrupt frame, not an error);
+- the bench minima table, source fingerprints included, is keyed by
+  (sf, cpus) so a non-default-core run can never lower the 32-core
+  reference minima nor mark another key's stale minima current.
 """
 
 from __future__ import annotations
@@ -87,11 +89,22 @@ def test_local_max_rows_within_bound_writes_full_table(spark, tmp_path):
 # --------------------------------------------------------------------------
 
 
-def test_local_frame_refuses_timestamps(spark):
+def test_local_frame_timestamps_use_classic_conversion(spark):
+    """Timestamp schemas fall back to the classic conversion inside the
+    helper: same rows and types as ``spark.createDataFrame`` would give."""
+    import datetime
+
     from nimhdfstore_spark.tables import local_frame
 
-    with pytest.raises(ValueError, match="timestamp"):
-        local_frame(spark, [], "a bigint, ts timestamp")
+    ts = datetime.datetime(2024, 1, 2, 3, 4, 5)
+    rows = [(1, ts, [ts]), {"a": 2, "ts": None, "tss": []}]
+    df = local_frame(spark, rows, "a bigint, ts timestamp, tss array<timestamp>")
+    assert df.dtypes == [
+        ("a", "bigint"), ("ts", "timestamp"), ("tss", "array<timestamp>"),
+    ]
+    assert sorted(map(tuple, df.collect()), key=lambda r: r[0]) == [
+        (1, ts, [ts]), (2, None, []),
+    ]
 
 
 def test_local_frame_rejects_wrong_width_rows(spark):
@@ -99,6 +112,18 @@ def test_local_frame_rejects_wrong_width_rows(spark):
 
     with pytest.raises(ValueError, match="2 values for 3 schema fields"):
         local_frame(spark, [(1, "x")], "a bigint, b string, c bigint")
+
+
+@pytest.mark.parametrize(
+    "row", [{"a": 1}, {"a": 1, "b": "x", "c": 2}, {"a": 1, "c": "x"}]
+)
+def test_local_frame_rejects_mapping_rows_with_other_keys(spark, row):
+    """A Mapping row must name exactly the schema's fields: a missing key
+    would read as null and an extra one would be dropped, both silently."""
+    from nimhdfstore_spark.tables import local_frame
+
+    with pytest.raises(ValueError, match="differ from the schema fields"):
+        local_frame(spark, [{"a": 0, "b": "ok"}, row], "a bigint, b string")
 
 
 def test_local_frame_accepts_mapping_rows_by_name(spark):
@@ -148,6 +173,32 @@ def test_minima_key_is_cpu_scoped():
     assert b._minima_key("0.001", "16") == "0.001@16cpu"
     # distinct keys can never alias
     assert b._minima_key("0.1", "8") != b._minima_key("0.1", "32")
+
+
+def test_minima_fingerprints_are_per_key(tmp_path, monkeypatch):
+    """A run under ``0.1@8cpu`` after a source change must not let the bare
+    ``0.1`` key's stale minimum survive: each key checks staleness against
+    the fingerprints recorded with its own minima. A legacy shared ``_fp``
+    map migrates into every present key."""
+    import json
+
+    import nimhdfstore_spark.queries as Q
+
+    Q.load_all()
+    b = _bench()
+    monkeypatch.setattr(b, "REPO", str(tmp_path))
+    q = "q01_full_scan"
+    with open(tmp_path / "bench_minima.json", "w") as f:
+        json.dump({"0.1": {q: 1.0}, "0.1@8cpu": {q: 2.0}, "_fp": {q: "old"}}, f)
+
+    assert b._update_minima("0.1@8cpu", {q: 3.0}, {q: "new"}) == 3.0
+    with open(tmp_path / "bench_minima.json") as f:
+        table = json.load(f)
+    assert "_fp" not in table
+    assert table["_fp@0.1"] == {q: "old"} and table["_fp@0.1@8cpu"] == {q: "new"}
+    assert b._load_minima("0.1", {q: "new"}) == {}, "stale 0.1 minimum survived"
+    assert b._update_minima("0.1", {q: 5.0}, {q: "new"}) == 5.0
+    assert b._load_minima("0.1", {q: "new"}) == {q: 5.0}
 
 
 # --------------------------------------------------------------------------

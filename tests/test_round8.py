@@ -173,20 +173,22 @@ def test_commit_pruned_hardlink_survives_stale_dir(spark):
 
 
 # --------------------------------------------------------------------------
-# driver-rows marker cross-check (ADVICE r4 low)
+# rewrite row-count cross-check: the committer's expected count is checked
+# against the rows a driver-direct write actually lands
 # --------------------------------------------------------------------------
 
-def test_stale_marker_rows_fail_loudly(spark):
-    st = _store(spark, "marker")
-    t = st.put("t", spark.range(3).select(F.col("id").alias("k")), order_by=["k"])
-    from pyspark.sql.types import LongType, StructField, StructType
+def test_local_rewrite_row_count_mismatch_fails_loudly(spark):
+    from nimhdfstore_spark.tables import local_frame
 
-    schema = StructType([StructField(ROWID, LongType()),
-                         StructField("k", LongType())])
-    frame = spark.createDataFrame([(3, 30), (4, 40)], schema)
-    frame._nimhdfstore_rows = ([(3, 30), (4, 40), (5, 50)], schema)  # stale: 3 rows
-    with pytest.raises(StoreError, match="marker"):
+    st = _store(spark, "rowcount")
+    t = st.put("t", spark.range(3).select(F.col("id").alias("k")), order_by=["k"])
+    frame = local_frame(spark, [(3, 30), (4, 40), (5, 50)], f"{ROWID} long, k long")
+    assert frame.isLocal()
+    with pytest.raises(
+        StoreError, match="rewrite produced 3 rows but the commit expects 2"
+    ):
         t._commit_pruned(t._ranges(), frame, 2)
+    assert t.nrows == 3
 
 
 # --------------------------------------------------------------------------
