@@ -46,7 +46,7 @@ from pyspark.sql.types import StructType
 
 from nimhdfstore_spark.operators import positional
 from nimhdfstore_spark.rowid import ROWID, with_rowid
-from nimhdfstore_spark.tables import local_frame
+from nimhdfstore_spark.tables import arrow_rows, local_frame
 
 _VALID_KEY = re.compile(r"^[A-Za-z0-9_\-./]+$")
 _SNAP = "snap-{:08d}"
@@ -1628,12 +1628,14 @@ class Store:
         return scan_rowid_ranges(snap_dir, skip)
 
     # Spark dtypes whose pyarrow-written Parquet encoding is byte-compatible
-    # with Spark's own writer within one mixed snapshot. Timestamps are
-    # excluded (Spark's default INT96 vs arrow's int64-micros), as are
-    # decimals and deeper nested types (physical-encoding variants).
+    # with Spark's own writer within one mixed snapshot. Timestamps qualify
+    # only while the session writes them as INT96 (``_int96_timestamps``):
+    # pyarrow then writes INT96 too, where its default is int64-micros.
+    # Decimals and deeper nested types stay excluded (physical-encoding
+    # variants).
     _LOCAL_WRITE_TYPES = frozenset(
         ("bigint", "int", "smallint", "tinyint", "double", "float", "string",
-         "boolean", "binary", "date")
+         "boolean", "binary", "date", "timestamp")
     )
     # One-level arrays of fixed-width/string primitives are also compatible:
     # Spark's ``toArrow`` names the list element field "element", so the
@@ -1645,6 +1647,17 @@ class Store:
         ("bigint", "int", "smallint", "tinyint", "double", "float", "string",
          "boolean")
     )
+
+    def _int96_timestamps(self) -> bool:
+        """The session's Parquet writer stores timestamps as INT96 with no
+        Julian rebase (and no refusal of old values): the encoding pyarrow's
+        INT96 writer produces."""
+        conf = self.spark.conf
+        return (
+            conf.get("spark.sql.parquet.outputTimestampType").upper() == "INT96"
+            and conf.get("spark.sql.parquet.int96RebaseModeInWrite").upper()
+            == "CORRECTED"
+        )
 
     @classmethod
     def _local_type_ok(cls, t: str) -> bool:
@@ -1691,8 +1704,12 @@ class Store:
         replaces the range-shuffle + Hadoop-committer write job, the
         dominant fixed cost of small mutations), and
         only for types whose pyarrow encoding matches Spark's writer
-        (mixed snapshots must stay uniform); returns False to fall through
-        to the distributed path otherwise."""
+        (mixed snapshots must stay uniform): timestamps are written as
+        INT96, and only while the session's own writer uses INT96 without
+        Julian rebase. Each file's footer carries Spark's version key, so
+        readers take its dates and timestamps as they take Spark-written
+        ones, whatever the session's read rebase modes. Returns False to
+        fall through to the distributed path otherwise."""
         local = body.isLocal()
         small_rewrite = (
             expected_rows is not None
@@ -1715,6 +1732,10 @@ class Store:
             return False
         if any(not self._local_type_ok(t) for _c, t in body.dtypes):
             return False
+        if any(t == "timestamp" for _c, t in body.dtypes) and (
+            not self._int96_timestamps()
+        ):
+            return False
         if not local and any(t == "binary" for _c, t in body.dtypes):
             # the row gate doesn't bound BYTES: binary cells (media blobs)
             # can be MBs each, so a 256k-row rewrite could be tens of GB.
@@ -1722,18 +1743,14 @@ class Store:
             return False
         import uuid
 
-        import pyarrow as pa
         import pyarrow.parquet as pq
 
         if local:
             # the rows already sit in the driver-side plan: collect() reads
             # them with no job, where toArrow() would schedule one
-            from pyspark.sql.pandas.types import to_arrow_schema
-
             cols = body.columns
-            tbl = pa.Table.from_pylist(
-                [dict(zip(cols, r)) for r in body.collect()],
-                schema=to_arrow_schema(body.schema),
+            tbl = arrow_rows(
+                [dict(zip(cols, r)) for r in body.collect()], body.schema
             )
         else:
             # The hinted bound is a CALLER promise, so enforce it BEFORE
@@ -1760,6 +1777,12 @@ class Store:
             )
         if ROWID in tbl.column_names:
             tbl = tbl.sort_by(ROWID)
+        # without this key Spark reads the file's INT96 and date values
+        # under the session's read rebase modes; with it, as CORRECTED, like
+        # the files its own writer produces without LEGACY rebase
+        tbl = tbl.replace_schema_metadata(
+            {"org.apache.spark.version": self.spark.version}
+        )
         snap_dir = os.path.join(self._table_dir(name), snap)
         # Overwrite semantics, matching the distributed path's
         # mode("overwrite"): a prior attempt at this snapshot number that
@@ -1773,7 +1796,10 @@ class Store:
             chunk = tbl.slice(lo, step)
             fn = f"part-{i:05d}-local-{uuid.uuid4().hex[:12]}.parquet"
             pq.write_table(
-                chunk, os.path.join(snap_dir, fn), compression=pq_codec
+                chunk, os.path.join(snap_dir, fn), compression=pq_codec,
+                # Spark's timestamp encoding (checked above); no effect on
+                # other columns
+                use_deprecated_int96_timestamps=True,
             )
             # kill mid-stage, with data files partially written and NO
             # rename issued yet (round-11 verdict ask #4): the staged dir

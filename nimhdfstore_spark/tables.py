@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+from datetime import timezone
+
 from pyspark.sql import DataFrame, SparkSession
 
 from nimhdfstore_spark.rowid import ROWID, with_rowid
@@ -80,6 +82,83 @@ def table_nrows(sf_dir: str, table: str) -> int:
     return pq.ParquetFile(f"{sf_dir}/{table}.parquet").metadata.num_rows
 
 
+def _utc_timestamps(dtype):
+    """Value converter making the timestamps in ``dtype`` (top level or
+    inside arrays and structs) aware UTC datetimes, or None when it holds
+    none. Struct values come out as dicts, bound as ``StructType.toInternal``
+    binds them: a Mapping by name, a sequence by position."""
+    from collections.abc import Mapping
+
+    from pyspark.sql.types import ArrayType, StructType, TimestampType
+
+    if isinstance(dtype, TimestampType):
+        return lambda v: None if v is None else v.astimezone(timezone.utc)
+    if isinstance(dtype, ArrayType):
+        inner = _utc_timestamps(dtype.elementType)
+        if inner is not None:
+            return lambda v: None if v is None else [inner(x) for x in v]
+    if isinstance(dtype, StructType):
+        convs = [_utc_timestamps(f.dataType) for f in dtype.fields]
+        if any(c is not None for c in convs):
+            fields = [(f.name, c or (lambda x: x))
+                      for f, c in zip(dtype.fields, convs)]
+
+            def struct(v):
+                if v is None:
+                    return None
+                if isinstance(v, Mapping):
+                    v = [v.get(n) for n, _c in fields]
+                return {n: c(x) for (n, c), x in zip(fields, v)}
+
+            return struct
+    return None
+
+
+def _rebuilt_maps(dtype) -> bool:
+    """Whether ``dtype`` holds a map whose keys or values are timestamps or
+    nested types. Spark's arrow reader rebuilds such maps and, before
+    pyarrow 17, loses their nulls doing it (SPARK-48302): a null map would
+    come back as an empty one."""
+    from pyspark.sql.types import (
+        ArrayType, MapType, StructType, TimestampNTZType, TimestampType,
+    )
+
+    rebuilt = (ArrayType, MapType, StructType, TimestampNTZType, TimestampType)
+    if isinstance(dtype, MapType):
+        return isinstance(dtype.keyType, rebuilt) or isinstance(
+            dtype.valueType, rebuilt
+        )
+    if isinstance(dtype, ArrayType):
+        return _rebuilt_maps(dtype.elementType)
+    if isinstance(dtype, StructType):
+        return any(_rebuilt_maps(f.dataType) for f in dtype.fields)
+    return False
+
+
+def arrow_rows(dicts: list[dict], schema):
+    """pyarrow Table of ``schema`` (a StructType) from dict rows.
+
+    pyarrow reads a naive datetime as UTC, Spark in the Python process's
+    local zone: ``TimestampType.toInternal`` goes through ``time.mktime``,
+    and ``collect()`` returns ``fromtimestamp`` values, ``fold`` set. So
+    timestamps are first made aware with ``astimezone``, in that zone: the
+    exact inverse of ``collect()``, and the classic ``createDataFrame``
+    instant for input rows (on an ambiguous wall time ``mktime`` ignores
+    ``fold`` and this honours it). Converts the dicts in place. Maps are
+    left as they are: ``local_frame`` keeps maps of timestamps off this
+    path (``_rebuilt_maps``), and the store's writer takes no maps.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    for f in schema.fields:
+        convert = _utc_timestamps(f.dataType)
+        if convert is not None:
+            for d in dicts:
+                d[f.name] = convert(d[f.name])
+    return pa.Table.from_pylist(dicts, schema=to_arrow_schema(schema))
+
+
 def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
     """Driver rows as a DataFrame: the package's one driver-rows path.
 
@@ -94,9 +173,11 @@ def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
     Works regardless of the Arrow session conf; types follow
     ``to_arrow_schema`` exactly.
 
-    Schemas with a timestamp column fall back to the classic
-    ``createDataFrame`` conversion (arrow and pickle coerce naive datetimes
-    to different time zones), so those frames stay Python-RDD-backed.
+    Timestamps read as ``createDataFrame`` reads them (see
+    ``arrow_rows``), so timestamp schemas are LocalRelations too. Schemas
+    holding a map of timestamps or nested types take the classic
+    ``createDataFrame`` conversion instead: the arrow route would turn
+    their null maps into empty ones (``_rebuilt_maps``).
 
     Sequence rows bind positionally and must match the schema width;
     Mapping rows bind by name and must carry exactly the schema's field
@@ -105,8 +186,6 @@ def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
     """
     from collections.abc import Mapping
 
-    import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_schema
     from pyspark.sql.types import StructType, _parse_datatype_string
 
     if isinstance(schema, str):
@@ -132,10 +211,9 @@ def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
         return dict(zip(names, r))
 
     dicts = [_as_dict(r) for r in rows]
-    if any("timestamp" in f.dataType.simpleString() for f in schema.fields):
+    if any(_rebuilt_maps(f.dataType) for f in schema.fields):
         return spark.createDataFrame(dicts, schema)
-    tbl = pa.Table.from_pylist(dicts, schema=to_arrow_schema(schema))
-    return spark.createDataFrame(tbl)
+    return spark.createDataFrame(arrow_rows(dicts, schema))
 
 
 def rowid_over(table: str) -> str:

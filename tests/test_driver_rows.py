@@ -8,12 +8,15 @@ from __future__ import annotations
 import ast
 import datetime
 import os
+import time
 
 import pytest
+from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from nimhdfstore_spark.operators.dedup import connected_components
 from nimhdfstore_spark.plans.inspect import executed_plan
+from nimhdfstore_spark.rowid import ROWID
 from nimhdfstore_spark.store import Store
 from nimhdfstore_spark.tables import local_frame
 
@@ -22,6 +25,12 @@ PKG = os.path.join(
     "nimhdfstore_spark",
 )
 SCHEMA = "k bigint, v double"
+TS_SCHEMA = "k bigint, v timestamp"
+#: value of row ``i`` per payload schema
+VALUE = {
+    SCHEMA: float,
+    TS_SCHEMA: lambda i: datetime.datetime(2024, 3, 9) + datetime.timedelta(hours=i),
+}
 
 
 def test_create_dataframe_only_inside_local_frame():
@@ -46,10 +55,10 @@ def test_create_dataframe_only_inside_local_frame():
     assert not stray, f"createDataFrame( outside tables.local_frame: {stray}"
 
 
-def _table(spark, tmp_path, n=20):
+def _table(spark, tmp_path, n=20, schema=SCHEMA):
     store = Store(spark, str(tmp_path / "store"), rows_per_file=8)
-    rows = [(i, float(i)) for i in range(n)]
-    return store.put("t", local_frame(spark, rows, SCHEMA), order_by=["k"])
+    rows = [(i, VALUE[schema](i)) for i in range(n)]
+    return store.put("t", local_frame(spark, rows, schema), order_by=["k"])
 
 
 def _next_job_id(spark) -> int:
@@ -57,20 +66,32 @@ def _next_job_id(spark) -> int:
 
 
 def test_append_of_driver_rows_fires_no_jobs(spark, tmp_path):
-    t = _table(spark, tmp_path)
-    payload = local_frame(spark, [(100, 1.0), (101, 2.0)], SCHEMA)
-    before = _next_job_id(spark)
-    t.append(payload)
-    assert _next_job_id(spark) == before
-    assert t.nrows == 22
-    assert [r["k"] for r in t.slice(20, 21).collect()] == [100, 101]
+    for schema in (SCHEMA, TS_SCHEMA):
+        t = _table(spark, tmp_path / schema.split()[-1], schema=schema)
+        value = VALUE[schema]
+        payload = local_frame(spark, [(100, value(1)), (101, value(2))], schema)
+        before = _next_job_id(spark)
+        t.append(payload)
+        assert _next_job_id(spark) == before, schema
+        assert t.nrows == 22
+        assert [tuple(r)[1:] for r in t.slice(20, 21).collect()] == [
+            (100, value(1)), (101, value(2)),
+        ]
 
 
-@pytest.mark.parametrize("op", ["insert", "update"])
-def test_rewrite_body_scans_local_relation(spark, tmp_path, monkeypatch, op):
+@pytest.mark.parametrize(
+    "op, schema",
+    [
+        pytest.param("insert", SCHEMA, id="insert"),
+        pytest.param("update", SCHEMA, id="update"),
+        pytest.param("insert", TS_SCHEMA, id="insert-timestamp"),
+        pytest.param("update", TS_SCHEMA, id="update-timestamp"),
+    ],
+)
+def test_rewrite_body_scans_local_relation(spark, tmp_path, monkeypatch, op, schema):
     """Even a Python-RDD-backed payload is re-localized: the body the
     commit writes unions the touched files with a LocalTableScan."""
-    t = _table(spark, tmp_path)
+    t = _table(spark, tmp_path, schema=schema)
     seen = []
     real = type(t)._commit_pruned
 
@@ -79,12 +100,98 @@ def test_rewrite_body_scans_local_relation(spark, tmp_path, monkeypatch, op):
         return real(self, keep, rewrite, *args, **kwargs)
 
     monkeypatch.setattr(type(t), "_commit_pruned", spy)
-    payload = spark.createDataFrame([(500, 5.0)], SCHEMA)
+    payload = spark.createDataFrame([(500, VALUE[schema](5))], schema)
     getattr(t, op)(10, payload)
     (plan,) = seen
     assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
     assert "FileScan" in plan, plan  # the touched file really is unioned
     assert [r["k"] for r in t.row(10).collect()] == [500]
+
+
+@pytest.fixture
+def los_angeles_process_tokyo_session(spark):
+    """Python process zone America/Los_Angeles, session zone Asia/Tokyo;
+    both restored afterwards."""
+    old_tz = os.environ.get("TZ")
+    old_session = spark.conf.get("spark.sql.session.timeZone")
+    os.environ["TZ"] = "America/Los_Angeles"
+    time.tzset()
+    spark.conf.set("spark.sql.session.timeZone", "Asia/Tokyo")
+    yield
+    if old_tz is None:
+        del os.environ["TZ"]
+    else:
+        os.environ["TZ"] = old_tz
+    time.tzset()
+    spark.conf.set("spark.sql.session.timeZone", old_session)
+
+
+def test_local_frame_timestamps_across_zones(
+    spark, tmp_path, los_angeles_process_tokyo_session
+):
+    """Naive datetimes, also inside arrays, structs and maps, read in the
+    Python process's zone, not the session's and not UTC, exactly as the
+    classic ``createDataFrame`` conversion reads them; a timestamp table's
+    append and read-back keep the values."""
+    winter = datetime.datetime(2024, 1, 2, 3, 4, 5, 6)
+    # 01:30 happens twice in Los Angeles that night; fold=1 is the second,
+    # PST one. The classic conversion (time.mktime) ignores fold and takes
+    # the offset of its previous call, so a winter value precedes each one.
+    ambiguous = datetime.datetime(2024, 11, 3, 1, 30, fold=1)
+    plus5 = datetime.datetime(2024, 7, 1, 12, tzinfo=datetime.timezone(
+        datetime.timedelta(hours=5)))
+    rows = [
+        (0, winter, [winter, None]),
+        (1, plus5, None),
+        (2, ambiguous, [winter, ambiguous]),
+        (3, None, []),
+    ]
+    schema = "a bigint, ts timestamp, tss array<timestamp>"
+    got = local_frame(spark, rows, schema)
+    classic = spark.createDataFrame(rows, schema)
+    assert got.isLocal()
+    assert got.collect() == classic.collect()
+    assert [r["s"] for r in got.select(F.col("ts").cast("long").alias("s")).collect()] == [
+        1704193445, 1719817200, 1730626200, None,
+    ]
+
+    flat = "a bigint, ts timestamp"
+    store = Store(spark, str(tmp_path / "store"))
+    t = store.put("t", local_frame(spark, [(9, winter)], flat), order_by=["a"])
+    t.append(local_frame(spark, [r[:2] for r in rows], flat))
+    assert any("-local-" in e["name"] for e in t._ranges())
+    back = t.df().orderBy(ROWID).select("a", "ts").collect()
+    assert back == [(9, winter)] + [r[:2] for r in classic.collect()]
+
+    # timestamps inside structs (tuple, Row or mapping values) and maps; a
+    # null map stays null, with or without timestamps in it
+    summer = datetime.datetime(2024, 7, 2, 3, 4, 5, 6)
+    structs = "a bigint, s struct<t:timestamp,n:bigint>, l array<struct<t:timestamp>>"
+    rows = [
+        (0, (winter, 1), [(summer,), None]),
+        (1, {"t": summer, "n": 2}, None),
+        (2, Row(t=winter, n=3), []),
+        (3, None, [{"t": None}]),
+    ]
+    got = local_frame(spark, rows, structs)
+    assert got.isLocal()
+    assert got.collect() == spark.createDataFrame(rows, structs).collect()
+    assert [
+        r["s"] for r in got.select(F.col("s.t").cast("long").alias("s")).collect()
+    ] == [1704193445, 1719914645, 1704193445, None]
+
+    maps = (
+        "a bigint, m map<string,timestamp>, k map<timestamp,bigint>, "
+        "v map<string,array<bigint>>"
+    )
+    rows = [
+        (0, {"w": winter, "x": None}, {summer: 1}, {"a": [1, None]}),
+        (1, None, None, None),
+        (2, {}, {}, {}),
+    ]
+    got = local_frame(spark, rows, maps).collect()
+    assert got == spark.createDataFrame(rows, maps).collect()
+    assert got[1] == (1, None, None, None)
 
 
 def test_connected_components_on_timestamp_ids(spark):

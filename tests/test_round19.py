@@ -89,9 +89,9 @@ def test_local_max_rows_within_bound_writes_full_table(spark, tmp_path):
 # --------------------------------------------------------------------------
 
 
-def test_local_frame_timestamps_use_classic_conversion(spark):
-    """Timestamp schemas fall back to the classic conversion inside the
-    helper: same rows and types as ``spark.createDataFrame`` would give."""
+def test_local_frame_timestamps_match_classic_conversion(spark):
+    """Timestamp schemas stay LocalRelations with the same rows and types
+    as ``spark.createDataFrame`` would give."""
     import datetime
 
     from nimhdfstore_spark.tables import local_frame
@@ -99,6 +99,7 @@ def test_local_frame_timestamps_use_classic_conversion(spark):
     ts = datetime.datetime(2024, 1, 2, 3, 4, 5)
     rows = [(1, ts, [ts]), {"a": 2, "ts": None, "tss": []}]
     df = local_frame(spark, rows, "a bigint, ts timestamp, tss array<timestamp>")
+    assert df.isLocal()
     assert df.dtypes == [
         ("a", "bigint"), ("ts", "timestamp"), ("tss", "array<timestamp>"),
     ]

@@ -5,15 +5,18 @@ snapshot base-frame cache invalidation."""
 
 from __future__ import annotations
 
+import datetime
 import os
 import shutil
 
 import numpy as np
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
 from nimhdfstore_spark.rowid import ROWID
 from nimhdfstore_spark.store import Store, StoreError
+from nimhdfstore_spark.tables import local_frame
 
 SCRATCH = "/tmp/nimhdfstore_scratch/round7"
 
@@ -182,8 +185,8 @@ def test_local_write_layout_and_roundtrip(spark):
     base = spark.createDataFrame(
         [(i, i, f"s{i}") for i in range(4)], f"{ROWID} long, k long, s string")
     t = st.put("t", base, overwrite=True)
-    # append 8 driver rows (no _rowid): _new_rows attaches the driver-rows
-    # marker, so the rewrite goes through the pyarrow local write path
+    # append 8 driver rows (no _rowid): _new_rows re-localizes them as a
+    # local_frame, so the rewrite goes through the pyarrow local write path
     pay = spark.createDataFrame(
         [(100 + i, f"a{i}") for i in range(8)], "k long, s string")
     t.append(pay)
@@ -201,20 +204,88 @@ def test_local_write_layout_and_roundtrip(spark):
     assert [tuple(r) for r in t[3:5].collect()] == [want[3], want[4]]
 
 
-def test_local_write_skips_timestamp_schemas(spark):
-    """Timestamp payloads must take the Spark write path (INT96 vs int64
-    encodings must not mix inside one snapshot)."""
-    st = _store(spark, "localwrite_ts")
+def _physical_types(t, col):
+    """Parquet physical types of ``col`` across the snapshot's data files."""
+    types = set()
+    for e in t._ranges():
+        schema = pq.ParquetFile(os.path.join(t.snapshot_path, e["name"])).schema
+        types.add(schema.column(schema.names.index(col)).physical_type)
+    return types
+
+
+def test_local_write_timestamps_stay_int96(spark):
+    """Timestamp tables take the driver-direct writer, and every data file
+    of a snapshot keeps Spark's INT96 timestamp encoding: pyarrow-written
+    and Spark-written files mix inside one snapshot."""
+    st = _store(spark, "localwrite_ts", rows_per_file=2)
+    day = [datetime.datetime(2024, 1, d, 3, 4, 5, 6) for d in range(1, 9)]
     base = spark.createDataFrame(
-        [(0, "2024-01-02 03:04:05")], f"{ROWID} long, ts string"
-    ).select(ROWID, F.col("ts").cast("timestamp").alias("ts"))
+        [(i, day[i]) for i in range(4)], f"{ROWID} long, ts timestamp")
     t = st.put("ts", base, overwrite=True)
-    pay = spark.createDataFrame([("2024-02-03 04:05:06",)], "ts string").select(
-        F.col("ts").cast("timestamp").alias("ts"))
-    t.append(pay)
-    names = [e["name"] for e in t._meta["files"]]
-    assert all("-local-" not in n for n in names)
-    assert t.nrows == 2 and t.df().count() == 2
+    want = day[:4]
+    t.append(local_frame(spark, [(day[4],), (day[5],)], "ts timestamp"))
+    want += day[4:6]
+    # a Python-RDD payload too: the store re-localizes it
+    t.update(1, spark.createDataFrame([(day[6],)], "ts timestamp"))
+    want[1] = day[6]
+    t.insert(2, local_frame(spark, [(day[7],)], "ts timestamp"))
+    want.insert(2, day[7])
+    t.delete(0)
+    del want[0]
+    names = [e["name"] for e in t._ranges()]
+    assert any("-local-" in n for n in names), names
+    assert _physical_types(t, "ts") == {"INT96"}
+    assert [r["ts"] for r in t.df().orderBy(ROWID).collect()] == want
+
+
+@pytest.mark.parametrize(
+    "key, value",
+    [
+        ("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS"),
+        ("spark.sql.parquet.int96RebaseModeInWrite", "LEGACY"),
+        ("spark.sql.parquet.int96RebaseModeInWrite", "EXCEPTION"),
+    ],
+    ids=["micros", "legacy-rebase", "exception-rebase"],
+)
+def test_local_write_follows_session_timestamp_encoding(spark, key, value):
+    """A session timestamp encoding pyarrow does not write sends timestamp
+    tables to Spark's writer, so a snapshot's files stay uniform."""
+    old = spark.conf.get(key)
+    spark.conf.set(key, value)
+    try:
+        st = _store(spark, "localwrite_ts_conf")
+        day = [datetime.datetime(2024, 1, d) for d in range(1, 4)]
+        t = st.put("ts", local_frame(
+            spark, list(enumerate(day[:2])), f"{ROWID} long, ts timestamp"))
+        t.append(local_frame(spark, [(day[2],)], "ts timestamp"))
+        names = [e["name"] for e in t._ranges()]
+        assert all("-local-" not in n for n in names), names
+        assert len(_physical_types(t, "ts")) == 1
+        assert [r["ts"] for r in t.df().orderBy(ROWID).collect()] == day
+    finally:
+        spark.conf.set(key, old)
+
+
+@pytest.mark.parametrize("mode", ["LEGACY", "EXCEPTION"])
+def test_local_write_old_timestamps_read_like_spark_files(spark, mode):
+    """Pre-Gregorian timestamps read back unchanged from pyarrow-written and
+    Spark-written files alike under any INT96 read rebase mode: the local
+    files carry Spark's version key, so they read as CORRECTED too."""
+    st = _store(spark, "localwrite_ts_old")
+    old = [datetime.datetime(1000, 1, d, 12) for d in range(1, 5)]
+    t = st.put("ts", spark.createDataFrame(
+        list(enumerate(old[:2])), f"{ROWID} long, ts timestamp"))
+    t.append(local_frame(spark, [(v,) for v in old[2:]], "ts timestamp"))
+    names = [e["name"] for e in t._ranges()]
+    assert any("-local-" in n for n in names), names
+    assert any("-local-" not in n for n in names), names
+    key = "spark.sql.parquet.int96RebaseModeInRead"
+    before = spark.conf.get(key)
+    spark.conf.set(key, mode)
+    try:
+        assert [r["ts"] for r in t.df().orderBy(ROWID).collect()] == old
+    finally:
+        spark.conf.set(key, before)
 
 
 # --------------------------------------------------------------------------
