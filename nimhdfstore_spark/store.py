@@ -1628,14 +1628,17 @@ class Store:
         return scan_rowid_ranges(snap_dir, skip)
 
     # Spark dtypes whose pyarrow-written Parquet encoding is byte-compatible
-    # with Spark's own writer within one mixed snapshot. Timestamps qualify
-    # only while the session writes them as INT96 (``_int96_timestamps``):
-    # pyarrow then writes INT96 too, where its default is int64-micros.
-    # Decimals and deeper nested types stay excluded (physical-encoding
-    # variants).
+    # with Spark's own writer within one mixed snapshot. ``timestamp_ntz``
+    # always qualifies: pyarrow writes a naive ``timestamp[us]`` as INT64
+    # TIMESTAMP(MICROS, isAdjustedToUTC=false), Spark's own NTZ encoding.
+    # ``timestamp`` qualifies only while the session writes it as INT96
+    # (``_int96_timestamps``): pyarrow is then told to write INT96 too. A
+    # body holding both falls through, since pyarrow's INT96 switch covers
+    # every timestamp column of a file. Decimals and deeper nested types
+    # stay excluded (physical-encoding variants).
     _LOCAL_WRITE_TYPES = frozenset(
         ("bigint", "int", "smallint", "tinyint", "double", "float", "string",
-         "boolean", "binary", "date", "timestamp")
+         "boolean", "binary", "date", "timestamp", "timestamp_ntz")
     )
     # One-level arrays of fixed-width/string primitives are also compatible:
     # Spark's ``toArrow`` names the list element field "element", so the
@@ -1704,9 +1707,12 @@ class Store:
         replaces the range-shuffle + Hadoop-committer write job, the
         dominant fixed cost of small mutations), and
         only for types whose pyarrow encoding matches Spark's writer
-        (mixed snapshots must stay uniform): timestamps are written as
-        INT96, and only while the session's own writer uses INT96 without
-        Julian rebase. Each file's footer carries Spark's version key, so
+        (mixed snapshots must stay uniform): ``timestamp_ntz`` columns are
+        written as INT64 micros with isAdjustedToUTC=false, as Spark writes
+        them; ``timestamp`` columns as INT96, and only while the session's
+        own writer uses INT96 without Julian rebase. A body with columns of
+        both timestamp types falls through (pyarrow's INT96 switch is per
+        file). Each file's footer carries Spark's version key, so
         readers take its dates and timestamps as they take Spark-written
         ones, whatever the session's read rebase modes. Returns False to
         fall through to the distributed path otherwise."""
@@ -1730,13 +1736,15 @@ class Store:
         pq_codec = self._LOCAL_WRITE_CODECS.get(codec)
         if pq_codec is None:
             return False
-        if any(not self._local_type_ok(t) for _c, t in body.dtypes):
+        types = {t for _c, t in body.dtypes}
+        if any(not self._local_type_ok(t) for t in types):
             return False
-        if any(t == "timestamp" for _c, t in body.dtypes) and (
-            not self._int96_timestamps()
+        int96 = "timestamp" in types
+        if int96 and (
+            "timestamp_ntz" in types or not self._int96_timestamps()
         ):
             return False
-        if not local and any(t == "binary" for _c, t in body.dtypes):
+        if not local and "binary" in types:
             # the row gate doesn't bound BYTES: binary cells (media blobs)
             # can be MBs each, so a 256k-row rewrite could be tens of GB.
             # Blob tables keep the distributed writer.
@@ -1797,9 +1805,9 @@ class Store:
             fn = f"part-{i:05d}-local-{uuid.uuid4().hex[:12]}.parquet"
             pq.write_table(
                 chunk, os.path.join(snap_dir, fn), compression=pq_codec,
-                # Spark's timestamp encoding (checked above); no effect on
-                # other columns
-                use_deprecated_int96_timestamps=True,
+                # INT96 timestamps, as the session writes them (checked
+                # above); left off, timestamp_ntz keeps INT64 micros
+                use_deprecated_int96_timestamps=int96,
             )
             # kill mid-stage, with data files partially written and NO
             # rename issued yet (round-11 verdict ask #4): the staged dir
@@ -2006,6 +2014,18 @@ class Table:
         sj = self._meta.get("schema")
         return StructType.fromJson(json.loads(sj)) if sj else None
 
+    def _scan(self, *paths: str) -> DataFrame:
+        """The table's one Parquet reader. Files are read under the
+        persisted schema, so planning opens no footer: an inferring read
+        runs a footer-merge Spark job ("parquet at ...") on every call.
+        Only tables and time-travel handles without a persisted schema
+        infer it from the files."""
+        reader = self.store.spark.read
+        schema = self._stored_schema()
+        if schema is not None:
+            reader = reader.schema(schema)
+        return reader.parquet(*paths)
+
     def _empty_df(self) -> DataFrame:
         """Typed empty frame for a zero-file snapshot: a table deleted down
         to nothing stays readable (reference parity — ``toSeq`` on
@@ -2037,9 +2057,7 @@ class Table:
             return self._empty_df()
         cache = getattr(self.store, "_base_cache", None)
         if cache is None:  # handle constructed against a legacy/mock store
-            return self._dv_overlay(
-                self.store.spark.read.parquet(self.snapshot_path)
-            )
+            return self._dv_overlay(self._scan(self.snapshot_path))
         # Content-addressed key: (name, snapshot) alone rots across Store
         # HANDLES — a drop+recreate through handle A reuses snap-000000000
         # under the same path, and handle B's own cache (never evicted by
@@ -2059,7 +2077,7 @@ class Table:
         if base is None:
             if len(cache) > 512:
                 cache.clear()
-            base = self.store.spark.read.parquet(self.snapshot_path)
+            base = self._scan(self.snapshot_path)
             cache[key] = base
         return self._dv_overlay(base)
 
@@ -2244,7 +2262,7 @@ class Table:
             empty = self.df().where(F.lit(False))
             return empty, 0, total
         paths = [os.path.join(self.snapshot_path, n) for n in keep]
-        df = self.store.spark.read.parquet(*paths)
+        df = self._scan(*paths)
         df = self._dv_overlay(df.where(F.col(column).between(lo, hi)))
         return df, len(keep), total
 
@@ -2337,8 +2355,7 @@ class Table:
         ``paths`` — ONE distributed scan regardless of file count; only
         files × bits/8 bytes reach the driver. Shared by the full build
         and the append-only incremental extension."""
-        spark = self.store.spark
-        raw = spark.read.parquet(*paths)
+        raw = self._scan(*paths)
         pos = F.array(
             *[
                 F.pmod(F.xxhash64(F.col(column), F.lit(i)), F.lit(bits)).cast(
@@ -2382,8 +2399,10 @@ class Table:
         bits, kk = int(idx["bits"]), int(idx["k"])
         dtype = dict(self.df().dtypes)[column]
         lit = F.lit(value).cast(dtype)
+        # a one-row LocalRelation: the optimizer folds the projection into
+        # it, so collect() fires no job
         positions = (
-            spark.range(1)
+            local_frame(spark, [(0,)], "x int")
             .select(
                 *[
                     F.pmod(F.xxhash64(lit, F.lit(i)), F.lit(bits))
@@ -2403,7 +2422,7 @@ class Table:
         if not keep:
             return self.df().where(F.lit(False)), 0, total
         paths = [os.path.join(self.snapshot_path, n) for n in keep]
-        df = spark.read.parquet(*paths).where(F.col(column) == value)
+        df = self._scan(*paths).where(F.col(column) == value)
         return self._dv_overlay(df), len(keep), total
 
     @property
@@ -2809,7 +2828,7 @@ class Table:
 
     def _read_files(self, entries: list[dict]) -> DataFrame:
         paths = [os.path.join(self.snapshot_path, e["name"]) for e in entries]
-        return self.store.spark.read.parquet(*paths)
+        return self._scan(*paths)
 
     def _commit_pruned(
         self,

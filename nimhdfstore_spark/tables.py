@@ -82,11 +82,13 @@ def table_nrows(sf_dir: str, table: str) -> int:
     return pq.ParquetFile(f"{sf_dir}/{table}.parquet").metadata.num_rows
 
 
-def _utc_timestamps(dtype):
-    """Value converter making the timestamps in ``dtype`` (top level or
-    inside arrays and structs) aware UTC datetimes, or None when it holds
-    none. Struct values come out as dicts, bound as ``StructType.toInternal``
-    binds them: a Mapping by name, a sequence by position."""
+def _arrow_values(dtype):
+    """Value converter readying ``dtype``'s values for pyarrow, or None when
+    they pass as they are. Timestamps (top level or inside arrays and
+    structs) become aware UTC datetimes. Struct values become dicts, bound
+    as ``StructType.toInternal`` binds them: a Mapping by name, a sequence
+    by position; pyarrow takes either form but not a mix of the two in one
+    column, where ``createDataFrame`` takes both."""
     from collections.abc import Mapping
 
     from pyspark.sql.types import ArrayType, StructType, TimestampType
@@ -94,23 +96,23 @@ def _utc_timestamps(dtype):
     if isinstance(dtype, TimestampType):
         return lambda v: None if v is None else v.astimezone(timezone.utc)
     if isinstance(dtype, ArrayType):
-        inner = _utc_timestamps(dtype.elementType)
+        inner = _arrow_values(dtype.elementType)
         if inner is not None:
             return lambda v: None if v is None else [inner(x) for x in v]
     if isinstance(dtype, StructType):
-        convs = [_utc_timestamps(f.dataType) for f in dtype.fields]
-        if any(c is not None for c in convs):
-            fields = [(f.name, c or (lambda x: x))
-                      for f, c in zip(dtype.fields, convs)]
+        fields = [
+            (f.name, _arrow_values(f.dataType) or (lambda x: x))
+            for f in dtype.fields
+        ]
 
-            def struct(v):
-                if v is None:
-                    return None
-                if isinstance(v, Mapping):
-                    v = [v.get(n) for n, _c in fields]
-                return {n: c(x) for (n, c), x in zip(fields, v)}
+        def struct(v):
+            if v is None:
+                return None
+            if isinstance(v, Mapping):
+                v = [v.get(n) for n, _c in fields]
+            return {n: c(x) for (n, c), x in zip(fields, v)}
 
-            return struct
+        return struct
     return None
 
 
@@ -152,7 +154,7 @@ def arrow_rows(dicts: list[dict], schema):
     from pyspark.sql.pandas.types import to_arrow_schema
 
     for f in schema.fields:
-        convert = _utc_timestamps(f.dataType)
+        convert = _arrow_values(f.dataType)
         if convert is not None:
             for d in dicts:
                 d[f.name] = convert(d[f.name])
@@ -170,8 +172,10 @@ def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
     is True and ``collect()`` is job-free (``toArrow()`` still fires one
     job), so the Store's payload gate (``_collect_payload``) and
     driver-direct writer (``_write_local``) take their zero-job branches.
-    Works regardless of the Arrow session conf; types follow
-    ``to_arrow_schema`` exactly.
+    Works regardless of the Arrow session conf. The frame's types are
+    ``schema``'s exactly: it is passed along with the arrow Table, which
+    alone would read a naive arrow timestamp (``timestamp_ntz``'s arrow
+    type) as ``timestamp``.
 
     Timestamps read as ``createDataFrame`` reads them (see
     ``arrow_rows``), so timestamp schemas are LocalRelations too. Schemas
@@ -213,7 +217,7 @@ def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
     dicts = [_as_dict(r) for r in rows]
     if any(_rebuilt_maps(f.dataType) for f in schema.fields):
         return spark.createDataFrame(dicts, schema)
-    return spark.createDataFrame(arrow_rows(dicts, schema))
+    return spark.createDataFrame(arrow_rows(dicts, schema), schema)
 
 
 def rowid_over(table: str) -> str:

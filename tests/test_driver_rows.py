@@ -7,9 +7,11 @@ from __future__ import annotations
 
 import ast
 import datetime
+import json
 import os
 import time
 
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
@@ -26,11 +28,15 @@ PKG = os.path.join(
 )
 SCHEMA = "k bigint, v double"
 TS_SCHEMA = "k bigint, v timestamp"
+NTZ_SCHEMA = "k bigint, v timestamp_ntz"
 #: value of row ``i`` per payload schema
 VALUE = {
     SCHEMA: float,
     TS_SCHEMA: lambda i: datetime.datetime(2024, 3, 9) + datetime.timedelta(hours=i),
+    NTZ_SCHEMA: lambda i: datetime.datetime(2024, 3, 9) + datetime.timedelta(hours=i),
 }
+#: Parquet encoding of a timestamp_ntz column, as Spark's writer stores it
+NTZ_ENCODING = ("INT64", "Timestamp", False, "microseconds")
 
 
 def test_create_dataframe_only_inside_local_frame():
@@ -65,8 +71,27 @@ def _next_job_id(spark) -> int:
     return spark.sparkContext._jsc.sc().dagScheduler().nextJobId()
 
 
+def _encoding(path, column):
+    """(physical type, logical type, isAdjustedToUTC, time unit) of
+    ``column`` in one Parquet file."""
+    schema = pq.ParquetFile(path).schema
+    col = next(
+        schema.column(i) for i in range(len(schema))
+        if schema.column(i).name == column
+    )
+    logical = json.loads(col.logical_type.to_json())
+    return (
+        col.physical_type, logical["Type"], logical.get("isAdjustedToUTC"),
+        logical.get("timeUnit"),
+    )
+
+
+def _data_files(t):
+    return [os.path.join(t.snapshot_path, e["name"]) for e in t._ranges()]
+
+
 def test_append_of_driver_rows_fires_no_jobs(spark, tmp_path):
-    for schema in (SCHEMA, TS_SCHEMA):
+    for schema in (SCHEMA, TS_SCHEMA, NTZ_SCHEMA):
         t = _table(spark, tmp_path / schema.split()[-1], schema=schema)
         value = VALUE[schema]
         payload = local_frame(spark, [(100, value(1)), (101, value(2))], schema)
@@ -192,6 +217,96 @@ def test_local_frame_timestamps_across_zones(
     got = local_frame(spark, rows, maps).collect()
     assert got == spark.createDataFrame(rows, maps).collect()
     assert got[1] == (1, None, None, None)
+
+    # timestamp_ntz, top level or nested, keeps its type and its wall-clock
+    # values: no zone applies
+    ntz = (
+        "a bigint, ts timestamp_ntz, tss array<timestamp_ntz>, "
+        "s struct<t:timestamp_ntz>"
+    )
+    rows = [
+        (0, winter, [winter, None], (summer,)),
+        (1, ambiguous, None, {"t": winter}),
+        (2, None, [], None),
+    ]
+    got = local_frame(spark, rows, ntz)
+    classic = spark.createDataFrame(rows, ntz)
+    assert got.isLocal()
+    assert got.schema == classic.schema
+    assert got.schema.simpleString() == (
+        "struct<a:bigint,ts:timestamp_ntz,tss:array<timestamp_ntz>,"
+        "s:struct<t:timestamp_ntz>>"
+    )
+    assert got.collect() == classic.collect()
+    assert got.collect()[0] == (0, winter, [winter, None], Row(t=summer))
+
+
+def test_ntz_table_keeps_its_type_through_mutations(
+    spark, tmp_path, los_angeles_process_tokyo_session
+):
+    """A timestamp_ntz table stays timestamp_ntz through driver-direct
+    commits: Spark-written and ``-local-`` files alike store INT64 micros
+    not adjusted to UTC, and every read path returns the naive values
+    written, whatever the process and session zones."""
+    value = VALUE[NTZ_SCHEMA]
+    want = [(i, value(i)) for i in range(40)]
+    store = Store(spark, str(tmp_path / "store"), rows_per_file=8)
+    # a Python-RDD frame: Spark's writer writes the base files, and the
+    # mutations below leave some of them untouched
+    t = store.put("t", spark.createDataFrame(want, NTZ_SCHEMA), order_by=["k"])
+
+    def payload(*ks):
+        return local_frame(spark, [(k, value(k)) for k in ks], NTZ_SCHEMA)
+
+    t.append(payload(100, 101))
+    want += [(100, value(100)), (101, value(101))]
+    t.update(3, payload(103))
+    want[3] = (103, value(103))
+    t.insert(30, payload(130))
+    want[30:30] = [(130, value(130))]
+    t.delete(35)
+    del want[35]
+
+    files = _data_files(t)
+    local = [f for f in files if "-local-" in f]
+    assert local and len(local) < len(files), files
+    assert {_encoding(f, "v") for f in files} == {NTZ_ENCODING}
+
+    df = t.df()
+    assert dict(df.dtypes)["v"] == "timestamp_ntz"
+    assert [tuple(r) for r in df.orderBy(ROWID).select("k", "v").collect()] == want
+    for i in (3, 12, 30, len(want) - 1):
+        r = t.row(i)
+        assert dict(r.dtypes)["v"] == "timestamp_ntz"
+        assert [(x["k"], x["v"]) for x in r.collect()] == [want[i]]
+    # the local file alone, through the store and through schema inference
+    entry = next(e for e in t._ranges() if "-local-" in e["name"])
+    path = os.path.join(t.snapshot_path, entry["name"])
+    for alone in (t._read_files([entry]), spark.read.parquet(path)):
+        assert dict(alone.dtypes)["v"] == "timestamp_ntz"
+        got = [(x["k"], x["v"]) for x in alone.collect()]
+        assert got and set(got) <= set(want), got
+
+
+def test_mixed_timestamp_types_take_sparks_writer(spark, tmp_path):
+    """A body with both timestamp and timestamp_ntz columns has no single
+    pyarrow encoding (its INT96 switch is per file): it writes no
+    ``-local-`` file, and each column keeps one physical type."""
+    schema = "k bigint, a timestamp, b timestamp_ntz"
+    ts = datetime.datetime(2024, 3, 9, 1, 2, 3)
+    store = Store(spark, str(tmp_path / "store"), rows_per_file=8)
+    t = store.put(
+        "t", local_frame(spark, [(i, ts, ts) for i in range(20)], schema),
+        order_by=["k"],
+    )
+    t.append(local_frame(spark, [(20, ts, ts)], schema))
+    t.update(3, local_frame(spark, [(103, ts, ts)], schema))
+    files = _data_files(t)
+    assert not any("-local-" in f for f in files), files
+    assert {_encoding(f, "a")[0] for f in files} == {"INT96"}
+    assert {_encoding(f, "b") for f in files} == {NTZ_ENCODING}
+    assert t.df().select("a", "b").distinct().collect() == [(ts, ts)]
+    assert t.nrows == 21
 
 
 def test_connected_components_on_timestamp_ids(spark):

@@ -188,6 +188,7 @@ class TestSchemaInMeta:
         meta.pop("schema")
         json.dump(meta, open(mp, "w"))
         t2 = store.table("t")
+        assert t2._stored_schema() is None  # Table._scan infers from footers
         assert [f.name for f in t2.schema.fields] == ["k", "v"]
         assert t2.df().count() == 1
         # and one mutation backfills the persisted schema

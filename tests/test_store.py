@@ -5,6 +5,8 @@ the reference's 13-row `data: seq[Particle]` pattern (tests.nim:11-112)."""
 
 from __future__ import annotations
 
+import ast
+import os
 import random
 
 import pytest
@@ -14,7 +16,9 @@ from pyspark.sql.types import (
 )
 
 from nimhdfstore_spark.rowid import ROWID, with_rowid
+from nimhdfstore_spark import store as store_mod
 from nimhdfstore_spark.store import Store, StoreError
+from nimhdfstore_spark.tables import local_frame
 
 SCHEMA = StructType([
     StructField("lati", LongType()),
@@ -261,3 +265,69 @@ def test_randomized_mutation_sequence_vs_list_oracle(store, spark):
             next_key += 1
         assert t.nrows == len(oracle), f"step {step} ({op}): count"
     assert rows_of(t.df()) == oracle
+
+
+def _next_job_id(spark) -> int:
+    return spark.sparkContext._jsc.sc().dagScheduler().nextJobId()
+
+
+def test_reads_plan_without_jobs(spark, tmp_path):
+    """Reads plan under the persisted schema, so building a positional,
+    zone-map or bloom read fires no Spark job (an inferring Parquet read
+    runs a footer job per call), and a point read executes in one job.
+    Bloom positions hashed on the driver match the build's for each type."""
+    cols = ["k", "n", "v", "s"]
+    rows = [(i, i % 5, float(i), f"s{i % 7}") for i in range(100)]
+    store = Store(spark, str(tmp_path / "store"), rows_per_file=8)
+    t = store.put(
+        "t", local_frame(spark, rows, "k bigint, n int, v double, s string"),
+        order_by=["k"],
+    )
+    for c in cols:
+        t.build_bloom(c)
+    t = store.table("t")
+    assert len(t._ranges()) > 8
+    builds = {
+        "row": lambda: t.row(50),
+        "slice": lambda: t.slice(10, 40),
+        "scan_between": lambda: t.scan_between("v", 3.0, 20.0),
+        "lookup_eq": lambda: t.lookup_eq("s", "s3"),
+    }
+    for name, build in builds.items():
+        before = _next_job_id(spark)
+        build()
+        assert _next_job_id(spark) == before, name
+    before = _next_job_id(spark)
+    assert [r["k"] for r in t.row(50).collect()] == [50]
+    assert _next_job_id(spark) - before == 1
+
+    for column, value in (("k", 42), ("n", 3), ("v", 42.0), ("s", "s3")):
+        got, scanned, total = t.lookup_eq(column, value)
+        at = cols.index(column)
+        assert sorted(r["k"] for r in got.collect()) == [
+            r[0] for r in rows if r[at] == value
+        ], column
+        if column in ("k", "v"):
+            assert scanned < total, column
+
+
+def test_parquet_reads_only_inside_table_scan():
+    """``Table._scan`` is the store's one Parquet reader."""
+    path = store_mod.__file__
+    with open(path) as f:
+        src = f.read()
+    table = next(
+        n for n in ast.parse(src).body
+        if isinstance(n, ast.ClassDef) and n.name == "Table"
+    )
+    scan = next(
+        n for n in table.body
+        if isinstance(n, ast.FunctionDef) and n.name == "_scan"
+    )
+    stray = [
+        f"{os.path.basename(path)}:{no}"
+        for no, line in enumerate(src.splitlines(), 1)
+        if "read.parquet(" in line
+        and not scan.lineno <= no <= scan.end_lineno
+    ]
+    assert not stray, f"read.parquet( outside Table._scan: {stray}"
