@@ -991,46 +991,6 @@ def embedding_lsh_pairs(
     )
 
 
-def embedding_neardup_pairs(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    threshold: float = 0.95,
-    probe_filter: Column | None = None,
-) -> DataFrame:
-    """Pairs with cosine(vec_a, vec_b) >= τ. Brute-force pair join with the
-    dot product in codegen (zip_with/aggregate). ``probe_filter`` bounds the
-    left side; at scale, LSH-bucket or IVF-cluster first (similarity.py) and
-    reuse this as the verifier within buckets."""
-    from nimhdfstore_spark.functions.vector import dot, l2_norm
-
-    # precompute each vector's norm once (O(n)) instead of per pair (O(n²));
-    # dot/(na*nb) is bit-identical to dot/(sqrt(aa)*sqrt(bb)).
-    left = df.select(
-        F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"),
-        l2_norm(vec_col).alias("na"),
-    )
-    if probe_filter is not None:
-        left = left.where(probe_filter)
-    right = df.select(
-        F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb"),
-        l2_norm(vec_col).alias("nb"),
-    )
-    pairs = left.join(right, F.col("id_a") < F.col("id_b"))
-    sim = F.round(
-        F.when(
-            (F.col("na") > 0) & (F.col("nb") > 0),
-            dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb")),
-        ),
-        6,
-    )
-    return (
-        pairs.withColumn("cosine", sim)
-        .where(F.col("cosine") >= threshold)
-        .select("id_a", "id_b", "cosine")
-    )
-
-
 # --------------------------------------------------------------------------
 # near-dup clustering: connected components over a pair list
 # --------------------------------------------------------------------------

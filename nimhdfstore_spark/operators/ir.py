@@ -39,11 +39,6 @@ def tokenize(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") ->
     )
 
 
-def doc_lengths(toks: DataFrame) -> DataFrame:
-    """Token count per document (BM25's ``dl``)."""
-    return toks.groupBy("doc_id").agg(F.count(F.lit(1)).alias("dl"))
-
-
 def bm25(
     docs: DataFrame,
     query_terms: list[str],

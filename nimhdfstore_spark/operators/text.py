@@ -362,18 +362,6 @@ def chunk_tokens(
 # scales like a word-count, not like a per-doc Python loop.
 # --------------------------------------------------------------------------
 
-def word_ngram_array(toks: Column, n: int = 2) -> Column:
-    """Contiguous word n-grams of a token array, space-joined; empty when
-    fewer than ``n`` tokens."""
-    grams = F.transform(
-        F.sequence(F.lit(0), F.size(toks) - n),
-        lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n)),
-    )
-    return F.when(F.size(toks) >= n, grams).otherwise(
-        F.array().cast("array<string>")
-    )
-
-
 def mean_word_len(text: Column | str) -> Column:
     """Mean token length in characters (0.0 for empty docs); exact integer
     sum folded left-to-right, so the oracle reproduces it bit-for-bit."""
@@ -382,14 +370,6 @@ def mean_word_len(text: Column | str) -> Column:
         F.transform(tok, F.length), F.lit(0).cast("long"), lambda a, x: a + x
     )
     return F.round(total * 1.0 / F.greatest(F.size(tok), F.lit(1)), 6)
-
-
-def distinct_stopword_count(text: Column | str) -> Column:
-    """How many DISTINCT stopwords appear — Gopher's 'contains at least two
-    stop words' rule (a weak but cheap English-fluency signal)."""
-    return F.size(
-        F.array_distinct(F.filter(tokens(text), lambda x: x.isin(STOPWORDS)))
-    )
 
 
 #

@@ -23,33 +23,12 @@ from __future__ import annotations
 import os
 import shutil
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import functions as F
 
 from nimhdfstore_spark.queries import query, sweep_rotation
 from nimhdfstore_spark.queries.core import SCRATCH_ROOT
 from nimhdfstore_spark.rowid import ROWID
 from nimhdfstore_spark.tables import load, local_frame, rowid_over
-
-
-def _checksum(df: DataFrame):
-    row = df.select(
-        F.count(F.lit(1)).alias("n"),
-        F.expr("bit_xor(xxhash64(" + ", ".join(df.columns) + "))").alias("h"),
-    ).collect()[0]
-    return row["n"], row["h"]
-
-
-def _roundtrip(spark, sf_dir, table: str, fmt: str, key: str, **options):
-    src = load(spark, sf_dir, table)
-    path = os.path.join(
-        SCRATCH_ROOT, f"sink-{fmt}-{os.path.basename(sf_dir)}-{table}"
-    )
-    shutil.rmtree(path, ignore_errors=True)
-    src.write.format(fmt).options(**options).save(path)
-    back = spark.read.format(fmt).options(**options).schema(src.schema).load(path)
-    if _checksum(src) != _checksum(back):
-        raise AssertionError(f"{fmt} round-trip of {table} changed values")
-    return back.orderBy(key)
 
 
 # Which leg's rows go back to the driver's DuckDB hash-match, rotated per
@@ -620,14 +599,15 @@ def x208(spark, sf_dir):
 # persisted sweep counter):
 #
 #   leg 0 (read) — Spark 4 DSv2-python READ: the store read through
-#     spark.read.format("nimhdfstore"), positional predicates pushed into
-#     the source's planner — partitions whose catalog (lo, hi) span cannot
-#     intersect are never created (tests/test_pyds.py pins the pruning).
+#     spark.read.format("nimhdfstore"), which plans from Store's catalog
+#     and honours a pending deletion vector; positional predicates pushed
+#     into the source's planner — partitions whose catalog (lo, hi) span
+#     cannot intersect are never created (tests/test_pyds.py pins the
+#     pruning).
 #   leg 1 (write) — DSv2 two-phase WRITE: executors stage files and the
-#     driver's commit() assembles the snapshot + flips the catalog pointer
-#     (Store.put's write-then-swap as a DataSourceArrowWriter); read back
-#     through the Store library — the two implementations must agree on
-#     the on-disk contract exactly.
+#     driver's commit() publishes them through Store.put's publish half
+#     (the store's CAS pointer flip and snapshot retention); read back
+#     through the Store library.
 # --------------------------------------------------------------------------
 
 _Q38_SQL = f"""

@@ -368,9 +368,3 @@ def rowid_from_sorted_parquet(
     return joined.select(
         (F.col("__base") + F.col("__ri")).cast("long").alias(ROWID), *cols
     )
-
-
-def next_rowid_start(df: DataFrame) -> int:
-    """max(_rowid)+1 of an existing table (0 for empty) — append base."""
-    row = df.agg(F.max(ROWID).alias("m")).collect()[0]
-    return 0 if row["m"] is None else int(row["m"]) + 1

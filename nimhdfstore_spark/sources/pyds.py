@@ -2,33 +2,43 @@
 ``spark.read.format("nimhdfstore").option("store", root).option("table", t)``.
 
 This is the connector boundary SURVEY §4.2 sketched for format
-pluggability, done as a first-class source instead of a library call:
+pluggability, done as a first-class source instead of a library call. It is
+a thin adapter over :mod:`nimhdfstore_spark.store`, the only module that
+knows the catalog format:
 
-- **planning**: partitions come from the table's ``_meta.json`` file
-  catalog — one input partition per snapshot Parquet file, each carrying
-  its ``_rowid`` (lo, hi) span. No file listing, no footer reads at plan
-  time (the manifest IS the index).
+- **planning**: partitions come from ``Store``'s catalog, opened through a
+  session-free read-only ``Store`` handle (hardlinks resolved, inline or
+  sharded file catalog) — one input partition per snapshot Parquet file,
+  each carrying its ``_rowid`` (lo, hi) span. No file listing, no footer
+  reads at plan time (the manifest IS the index).
 - **pushdown**: ``pushFilters`` (Spark 4.1) captures ``_rowid`` bounds
   from the query's predicates and DROPS whole partitions whose span
   cannot intersect — positional reads prune at the planner, exactly like
   the reference's chunk-index behavior (nimtables.nim:149-171 via HDF5
-  chunk pruning). All filters are returned to Spark for re-evaluation, so
-  pruning can only skip files, never change results.
+  chunk pruning). A pending deletion vector widens the upper bound by the
+  deleted count, as ``Table._span_base`` does. All filters are returned to
+  Spark for re-evaluation, so pruning can only skip files, never change
+  results.
 - **execution**: each partition yields PyArrow RecordBatches straight from
-  its one file — columnar end-to-end, no Python row objects.
+  its one file, with the pending deletion vector applied by
+  ``Table._dv_overlay_arrow`` — the same rows and ``_rowid`` numbering as
+  ``Table.df()``, columnar end-to-end, no Python row objects.
 
-The write path is the same snapshot protocol as ``Store.put`` expressed as
-a DSv2 two-phase commit (``StoreWriter`` below): staging files per task,
-snapshot-dir assembly + catalog pointer flip on driver commit.
+The write path is ``Store.put`` expressed as a DSv2 two-phase commit
+(``StoreWriter`` below): tasks stage files in a ``Store._staged_snap``
+directory, and the driver's commit publishes it through the store's CAS
+pointer flip and snapshot retention.
 """
 
 from __future__ import annotations
 
-import json
 import os
+import shutil
+import weakref
 
 from pyspark.sql.datasource import (
     DataSource,
+    DataSourceArrowWriter,
     DataSourceReader,
     EqualTo,
     GreaterThan,
@@ -36,33 +46,24 @@ from pyspark.sql.datasource import (
     InputPartition,
     LessThan,
     LessThanOrEqual,
+    WriterCommitMessage,
 )
 
-ROWID = "_rowid"
-
-_ARROW_TO_DDL = {
-    "int8": "tinyint", "int16": "smallint", "int32": "int", "int64": "bigint",
-    "uint32": "bigint", "float": "float", "double": "double",
-    "bool": "boolean", "binary": "binary",
-    "string": "string", "large_string": "string",
-    "timestamp[us]": "timestamp", "timestamp[ns]": "timestamp",
-    "date32[day]": "date",
-}
+from nimhdfstore_spark.rowid import ROWID
+from nimhdfstore_spark.store import Store, Table
 
 
-def _arrow_ddl(field) -> str:
-    import pyarrow as pa
+def _target(options) -> tuple[str, str]:
+    root, table = options.get("store"), options.get("table")
+    if not root or not table:
+        raise ValueError("nimhdfstore needs .option('store', ...) "
+                         "and .option('table', ...)")
+    return root, table
 
-    t = field.type
-    if pa.types.is_list(t) or pa.types.is_large_list(t):
-        inner = _ARROW_TO_DDL.get(str(t.value_type))
-        if inner is None:
-            raise ValueError(f"unsupported list element type: {t.value_type}")
-        return f"{field.name} array<{inner}>"
-    ddl = _ARROW_TO_DDL.get(str(t))
-    if ddl is None:
-        raise ValueError(f"unsupported arrow type for {field.name}: {t}")
-    return f"{field.name} {ddl}"
+
+def _open(options) -> Table:
+    root, table = _target(options)
+    return Store(None, root, mode="r").table(table)
 
 
 class _FilePartition(InputPartition):
@@ -70,40 +71,14 @@ class _FilePartition(InputPartition):
         self.path, self.lo, self.hi = path, lo, hi
 
 
-def _catalog(options) -> tuple[str, list[dict]]:
-    root, table = options.get("store"), options.get("table")
-    if not root or not table:
-        raise ValueError("nimhdfstore source needs .option('store', ...) "
-                         "and .option('table', ...)")
-    meta_path = os.path.join(root, table, "_meta.json")
-    with open(meta_path) as f:
-        meta = json.load(f)
-    if "link_to" in meta:
-        return _catalog({**options, "table": meta["link_to"]})
-    snap_dir = os.path.join(root, table, meta["current"])
-    entries = meta.get("files")
-    if entries is None and "manifests" in meta:
-        # sharded catalog (store.py _pack_files): concatenate the shards
-        entries = []
-        for shard in meta["manifests"]:
-            with open(os.path.join(root, table, "_manifests", shard)) as f:
-                entries.extend(json.load(f))
-        entries.sort(key=lambda e: e["lo"])
-    elif entries is None:
-        # meta predates file catalogs: scan footers like Table._ranges
-        # does (an empty list here would silently return zero rows)
-        from nimhdfstore_spark.store import scan_rowid_ranges
-
-        entries = scan_rowid_ranges(snap_dir)
-    files = [
-        {**e, "path": os.path.join(snap_dir, e["name"])} for e in entries
-    ]
-    return snap_dir, files
-
-
 class StoreReader(DataSourceReader):
     def __init__(self, options, schema_names: list[str]):
-        self._snap, self._files = _catalog(options)
+        t = _open(options)
+        self._files = [
+            (os.path.join(t.snapshot_path, e["name"]), e["lo"], e["hi"])
+            for e in t._ranges()
+        ]
+        self._dv = t.deletion_vector
         self._names = schema_names
         self._lo, self._hi = None, None  # pushed _rowid bounds (inclusive)
 
@@ -134,17 +109,18 @@ class StoreReader(DataSourceReader):
             self._hi = hi if self._hi is None else min(self._hi, hi)
 
     def partitions(self):
-        out = []
-        for e in self._files:
-            if self._lo is not None and e["hi"] < self._lo:
-                continue
-            if self._hi is not None and e["lo"] > self._hi:
-                continue
-            out.append(_FilePartition(e["path"], e["lo"], e["hi"]))
-        # zero surviving files still needs one (empty) partition: Spark
-        # requires a non-empty partition list only implicitly — an empty
-        # list is accepted and yields an empty scan
-        return out
+        # the bounds are logical positions; a row's raw position is at
+        # least its logical one and at most the deleted count above it
+        hi = self._hi
+        if hi is not None:
+            hi += sum(b - a + 1 for a, b in self._dv)
+        # an empty list is accepted and yields an empty scan
+        return [
+            _FilePartition(path, lo, fhi)
+            for path, lo, fhi in self._files
+            if not (self._lo is not None and fhi < self._lo)
+            and not (hi is not None and lo > hi)
+        ]
 
     def read(self, partition: _FilePartition):
         import pyarrow.parquet as pq
@@ -152,12 +128,12 @@ class StoreReader(DataSourceReader):
         if partition is None:
             # an empty partitions() list still gets one read(None) call
             return
-        table = pq.read_table(partition.path, columns=self._names)
-        for batch in table.select(self._names).to_batches():
-            yield batch
+        raw = pq.read_table(partition.path, columns=self._names)
+        yield from (
+            Table._dv_overlay_arrow(raw, self._dv).select(self._names)
+            .to_batches()
+        )
 
-
-import weakref
 
 _REGISTERED = weakref.WeakSet()
 
@@ -189,169 +165,94 @@ class StoreDataSource(DataSource):
     def schema(self):
         # plan-time schema from the persisted catalog entry: no footer read
         # (and a zero-file table — delete-to-empty — stays readable)
-        root, table = self.options.get("store"), self.options.get("table")
-        if root and table:
-            try:
-                with open(os.path.join(root, table, "_meta.json")) as f:
-                    meta = json.load(f)
-                while "link_to" in meta:
-                    table = meta["link_to"]
-                    with open(os.path.join(root, table, "_meta.json")) as f:
-                        meta = json.load(f)
-                if meta.get("schema"):
-                    from pyspark.sql.types import StructType
-
-                    return StructType.fromJson(json.loads(meta["schema"]))
-            except (OSError, ValueError, KeyError):
-                pass  # fall through to the footer path below
+        t = _open(self.options)
+        stored = t._stored_schema()
+        if stored is not None:
+            return stored
+        # tables written before schema persistence: the first file's footer
         import pyarrow.parquet as pq
+        from pyspark.sql.pandas.types import from_arrow_schema
 
-        _snap, files = _catalog(self.options)
+        files = t._ranges()
         if not files:
             raise ValueError("empty table")
-        sch = pq.ParquetFile(files[0]["path"]).schema_arrow
-        return ", ".join(_arrow_ddl(sch.field(i)) for i in range(len(sch)))
+        return from_arrow_schema(
+            pq.read_schema(os.path.join(t.snapshot_path, files[0]["name"]))
+        )
 
     def reader(self, schema) -> StoreReader:
         return StoreReader(self.options, [f.name for f in schema.fields])
 
     def writer(self, schema, overwrite: bool) -> "StoreWriter":
-        return StoreWriter(self.options, overwrite)
+        return StoreWriter(self.options, overwrite, schema)
 
 
 # --------------------------------------------------------------------------
-# Write path: df.write.format("nimhdfstore") — the store's snapshot commit
-# protocol expressed as the DSv2 two-phase write: executors write staging
-# files and return commit messages; the driver's commit() turns staged
-# files into a snapshot directory + catalog pointer flip (same
-# write-then-swap order as Store.put), and abort() leaves the current
+# Write path: df.write.format("nimhdfstore") — Store.put as the DSv2
+# two-phase write. Construction plans the put (key check, next snapshot,
+# expected catalog version) and makes its staging directory; executors
+# write staged files and return commit messages; the driver's commit()
+# publishes through Store._publish_put (file catalog, schema sidecar, CAS
+# pointer flip, snapshot retention), so a commit that landed since
+# construction raises StoreConflictError. abort() leaves the current
 # snapshot untouched. Input must carry _rowid (positions are data — the
 # caller picks the canonical order, typically rowid.with_rowid upstream).
 # --------------------------------------------------------------------------
 
-from pyspark.sql.datasource import DataSourceArrowWriter, WriterCommitMessage
-
 
 class _StagedFile(WriterCommitMessage):
-    def __init__(self, name: str, rows: int):
-        self.name, self.rows = name, rows
+    def __init__(self, name: str):
+        self.name = name
 
 
 class StoreWriter(DataSourceArrowWriter):
-    def __init__(self, options, overwrite: bool):
-        self._root = options.get("store")
-        self._table = options.get("table")
-        if not self._root or not self._table:
-            raise ValueError("nimhdfstore sink needs .option('store', ...) "
-                             "and .option('table', ...)")
-        self._codec = options.get("codec", "snappy")
-        self._overwrite = overwrite
-        tdir = os.path.join(self._root, self._table)
-        meta = os.path.join(tdir, "_meta.json")
-        if os.path.exists(meta) and not overwrite:
-            raise ValueError(
-                f"table {self._table!r} exists (use mode('overwrite'); "
-                "positional append goes through the Store library)"
-            )
-        import uuid as _uuid
-
-        self._staging = os.path.join(tdir, f"_staging-{_uuid.uuid4().hex[:8]}")
-        os.makedirs(self._staging, exist_ok=True)
+    def __init__(self, options, overwrite: bool, schema):
+        self._root, self._table = _target(options)
+        if ROWID not in schema.names:
+            raise ValueError("input has no _rowid column; assign the "
+                             "canonical order first (rowid.with_rowid)")
+        store = Store(None, self._root)
+        self._meta, self._expected, self._replacing = store._begin_put(
+            self._table, overwrite, codec=options.get("codec", "snappy")
+        )
+        self._meta["schema"] = schema.json()
+        self._staged = store._staged_snap(self._meta["current"])
+        self._dir = os.path.join(store._table_dir(self._table), self._staged)
+        os.makedirs(self._dir)
 
     def write(self, batches):
-        import uuid as _uuid
+        import uuid
 
         import pyarrow as pa
         import pyarrow.parquet as pq
 
         batches = list(batches)
-        name = f"part-{_uuid.uuid4().hex}.parquet"
         if not batches:
-            return _StagedFile("", 0)
+            return _StagedFile("")
         table = pa.Table.from_batches(batches)
-        if ROWID not in table.column_names:
-            raise ValueError("input has no _rowid column; assign the "
-                             "canonical order first (rowid.with_rowid)")
+        name = f"part-{uuid.uuid4().hex}.parquet"
+        codec = self._meta["codec"]
         pq.write_table(
-            table, os.path.join(self._staging, name),
-            compression=self._codec if self._codec != "none" else "NONE",
+            table, os.path.join(self._dir, name),
+            compression=Store._LOCAL_WRITE_CODECS.get(codec, codec),
         )
-        return _StagedFile(name, table.num_rows)
+        return _StagedFile(name)
 
     def commit(self, messages):
-        import shutil as _shutil
-
-        import pyarrow.parquet as pq
-
-        tdir = os.path.join(self._root, self._table)
-        cur = 0
-        meta_path = os.path.join(tdir, "_meta.json")
-        if os.path.exists(meta_path):
-            with open(meta_path) as f:
-                cur = int(json.load(f)["current"].split("-")[1]) + 1
-        snap = f"snap-{cur:08d}"
-        snap_dir = os.path.join(tdir, snap)
-        os.makedirs(snap_dir, exist_ok=True)
-        files = []
-        for m in messages:
-            if not m or not m.name:
-                continue
-            src = os.path.join(self._staging, m.name)
-            os.rename(src, os.path.join(snap_dir, m.name))
-        for fn in sorted(os.listdir(snap_dir)):
-            if not fn.endswith(".parquet"):
-                continue
-            md = pq.ParquetFile(os.path.join(snap_dir, fn)).metadata
-            if md.num_rows == 0:
-                continue
-            idx = next(
-                i for i in range(md.num_columns)
-                if md.schema.column(i).name == ROWID
-            )
-            lo = hi = None
-            for rg in range(md.num_row_groups):
-                st = md.row_group(rg).column(idx).statistics
-                lo = st.min if lo is None else min(lo, st.min)
-                hi = st.max if hi is None else max(hi, st.max)
-            files.append({"name": fn, "lo": int(lo), "hi": int(hi),
-                          "rows": md.num_rows})
-        files.sort(key=lambda e: e["lo"])
-        meta = {
-            "current": snap,
-            "codec": self._codec,
-            "attrs": {},
-            "order_by": [],
-            "files": files,
-            "count": sum(e["rows"] for e in files),
-        }
-        # persist the schema like Store.put does (one footer, best-effort):
-        # Store.table()/schema on a pyds-written table then read the
-        # catalog entry instead of planning a scan, and a later
-        # delete-to-empty stays readable
-        if files:
-            try:
-                from pyspark.sql.pandas.types import from_arrow_schema
-
-                arrow = pq.ParquetFile(
-                    os.path.join(snap_dir, files[0]["name"])
-                ).schema_arrow
-                meta["schema"] = from_arrow_schema(arrow).json()
-            except Exception:
-                pass  # footer fallback still works
+        # only files reported by successful tasks belong to the snapshot: a
+        # failed or speculative attempt may have left its own file behind
+        names = {m.name for m in messages if m is not None and m.name}
+        for fn in os.listdir(self._dir):
+            if fn not in names:
+                os.remove(os.path.join(self._dir, fn))
         try:
-            from nimhdfstore_spark.store import _write_snap_schema
-
-            if meta.get("schema"):
-                _write_snap_schema(snap_dir, meta["schema"])
-        except Exception:
-            pass
-        tmp = meta_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(meta, f, indent=1, sort_keys=True)
-        os.replace(tmp, meta_path)  # pointer flip = the commit point
-        _shutil.rmtree(self._staging, ignore_errors=True)
+            Store(None, self._root)._publish_put(
+                self._table, self._meta, self._staged, self._expected,
+                self._replacing,
+            )
+        finally:
+            # published: renamed away already; failed: discard the staging
+            shutil.rmtree(self._dir, ignore_errors=True)
 
     def abort(self, messages):
-        import shutil as _shutil
-
-        _shutil.rmtree(self._staging, ignore_errors=True)
+        shutil.rmtree(self._dir, ignore_errors=True)

@@ -1102,10 +1102,9 @@ class Store:
         follows from an operator parameter — a 100 TB CTAS must never
         collect, so unbounded inputs must not carry the hint.
         """
-        self._require_writable()
-        _check_key(name)
-        if name in self and not overwrite:
-            raise StoreError(f"key exists: {name!r} (pass overwrite=True)")
+        meta, expected, replacing = self._begin_put(
+            name, overwrite, codec=codec, attrs=attrs, order_by=order_by
+        )
         if ROWID in df.columns:
             body = df
         elif order_by:
@@ -1115,6 +1114,41 @@ class Store:
                 "input has no _rowid and no order_by was given; a canonical "
                 "order is required for stable row positions"
             )
+        # persisted schema (incl. _rowid): schema inspection needs no footer
+        # read or scan plan, and a table deleted down to ZERO rows stays
+        # readable as a typed empty frame (round-9 verdict "what's wrong"
+        # #1 — the reference's table is readable at nrecords=0,
+        # nimtables.nim:140-147)
+        meta["schema"] = body.schema.json()
+        # stage under a unique name; the final snap dir appears only inside
+        # the CAS critical section (see _cas_flip: two racing writers both
+        # plan snap_no = cur+1)
+        staged = self._staged_snap(meta["current"])
+        self._write_files(
+            name, staged, body, meta["codec"], local_max_rows=local_max_rows
+        )
+        return self._publish_put(
+            name, meta, staged, expected, replacing, defer=_defer_meta
+        )
+
+    def _begin_put(
+        self,
+        name: str,
+        overwrite: bool,
+        codec: str | None = None,
+        attrs: dict[str, Any] | None = None,
+        order_by: Sequence[str] | None = None,
+    ) -> tuple[dict, int, bool]:
+        """The planning half of :meth:`put`, shared with the Python
+        DataSource writer: validate the key and return ``(meta, expected
+        version, replacing)`` for the next snapshot of ``name``. The caller
+        adds ``meta["schema"]``, writes the snapshot under
+        ``_staged_snap(meta["current"])`` and hands both to
+        :meth:`_publish_put`."""
+        self._require_writable()
+        _check_key(name)
+        if name in self and not overwrite:
+            raise StoreError(f"key exists: {name!r} (pass overwrite=True)")
         tdir = self._table_dir(name)
         # Write-then-swap: the new snapshot lands NEXT TO the old one, the
         # meta pointer flips only after a successful write, and only then is
@@ -1144,21 +1178,25 @@ class Store:
             "codec": _codec_name(codec) if codec else self.codec,
             "attrs": dict(attrs or {}),
             "order_by": list(order_by or []),
-            # persisted schema (incl. _rowid): schema inspection needs no
-            # footer read or scan plan, and a table deleted down to ZERO
-            # rows stays readable as a typed empty frame (round-9 verdict
-            # "what's wrong" #1 — the reference's table is readable at
-            # nrecords=0, nimtables.nim:140-147)
-            "schema": body.schema.json(),
         }
         self._invalidate(name)  # snap paths can repeat after drop/stray rmtree
-        # stage under a unique name; the final snap dir appears only inside
-        # the CAS critical section (see _cas_flip: two racing writers both
-        # plan snap_no = cur+1)
-        staged = self._staged_snap(meta["current"])
-        self._write_files(
-            name, staged, body, meta["codec"], local_max_rows=local_max_rows
-        )
+        return meta, expected, old_meta is not None
+
+    def _publish_put(
+        self,
+        name: str,
+        meta: dict,
+        staged: str,
+        expected: int,
+        replacing: bool,
+        defer: bool = False,
+    ) -> "Table":
+        """The publish half of :meth:`put`, shared with the Python
+        DataSource writer: catalog the ``staged`` snapshot's files, then
+        CAS-flip the catalog pointer onto it and prune superseded snapshots.
+        A conflict discards the staged directory and raises
+        ``StoreConflictError``."""
+        tdir = self._table_dir(name)
         # count + per-file rowid catalog come from the written footers —
         # no separate count job (which would recompute the whole sort).
         scanned = self._scan_ranges(os.path.join(tdir, staged))
@@ -1169,7 +1207,7 @@ class Store:
         # evolved) schema (round-10 code review, confirmed repro)
         _write_snap_schema(os.path.join(tdir, staged), meta["schema"])
         self._pack_files(name, meta, scanned)
-        if _defer_meta:
+        if defer:
             # transaction staging: snapshot written, catalog pointer NOT
             # flipped — the Transaction flips every staged table together
             t = Table(self, name, meta)
@@ -1185,7 +1223,7 @@ class Store:
         except StoreConflictError:
             shutil.rmtree(os.path.join(tdir, staged), ignore_errors=True)
             raise
-        if old_meta is not None:
+        if replacing:
             self._prune_snapshots(name)
         return Table(self, name, meta)
 
@@ -2101,6 +2139,32 @@ class Table:
             dead = rng if dead is None else (dead | rng)
             shift = shift + F.when(r > int(b), int(b) - int(a) + 1).otherwise(0)
         return base.where(~dead).withColumn(ROWID, (r - shift).cast("long"))
+
+    @staticmethod
+    def _dv_overlay_arrow(raw, dv: list[list[int]]):
+        """:meth:`_dv_overlay` for a ``pyarrow.Table`` of raw snapshot rows,
+        for readers outside Spark's planner (the Python DataSource's
+        executors): drop the rows at deleted raw positions and renumber the
+        survivors by the deleted count below them. ``dv`` is the catalog's
+        sorted, disjoint list of inclusive raw ranges."""
+        if not dv:
+            return raw
+        import numpy as np
+        import pyarrow as pa
+
+        starts = np.array([a for a, _ in dv], dtype=np.int64)
+        ends = np.array([b for _, b in dv], dtype=np.int64)
+        below = np.concatenate(([0], np.cumsum(ends - starts + 1)))
+        rid = raw.column(ROWID).to_numpy()
+        # first range ending at or after each row: it holds the row iff it
+        # also starts at or before it; every range before it lies below
+        i = np.searchsorted(ends, rid)
+        keep = (i == len(dv)) | (starts[np.minimum(i, len(dv) - 1)] > rid)
+        out = raw.filter(pa.array(keep))
+        col = out.schema.get_field_index(ROWID)
+        return out.set_column(
+            col, out.schema.field(col), pa.array(rid[keep] - below[i[keep]])
+        )
 
     # -- deletion vectors (merge-on-read deletes) ----------------------------
 

@@ -1,6 +1,8 @@
 """Python DataSource connector (sources/pyds.py): schema mapping, value
 round-trip vs the library read path, catalog-based partition pruning under
-filter pushdown, hardlink resolution, and array-column support."""
+filter pushdown, hardlink resolution, and array-column support; pending
+deletion vectors, catalog version/uid, retention and the CAS conflict come
+from ``Store`` itself."""
 
 from __future__ import annotations
 
@@ -9,7 +11,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.datasource import GreaterThanOrEqual, LessThanOrEqual
 
 from nimhdfstore_spark.rowid import ROWID
-from nimhdfstore_spark.sources.pyds import StoreDataSource, StoreReader
+from nimhdfstore_spark.sources.pyds import (
+    StoreDataSource, StoreReader, ensure_registered,
+)
 from nimhdfstore_spark.store import Store
 
 
@@ -139,3 +143,109 @@ class TestPythonDataSourceWriter:
         left = [d for d in os.listdir(os.path.join(root, "t"))
                 if d.startswith("_staging")]
         assert left == []
+
+
+class TestConnectorThroughStore:
+    """The connector reads and commits through ``Store``: pending deletion
+    vectors, catalog version and uid, snapshot retention and the CAS."""
+
+    def _kv(self, spark, n, scale=10):
+        return spark.createDataFrame(
+            [(i, i * scale) for i in range(n)], f"{ROWID} long, v long"
+        )
+
+    def test_pending_dv_reads_like_table_df(self, spark, tmp_path):
+        spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
+        ensure_registered(spark)
+        store = Store(spark, str(tmp_path / "dv"), rows_per_file=3)
+        t = store.put("t", self._kv(spark, 10))
+        assert [(e["lo"], e["hi"]) for e in t._ranges()] == [
+            (0, 2), (3, 5), (6, 8), (9, 9)
+        ]
+        t.delete_deferred(2, 4)
+        assert t.deletion_vector == [[2, 4]]
+
+        def rows(frame):
+            return sorted(map(tuple, frame.collect()))
+
+        back = _read(spark, store, "t")
+        assert rows(back) == rows(t.df())
+        assert [v for _, v in rows(back)] == [0, 10, 50, 60, 70, 80, 90]
+        # logical 1..3 are raw 1, 5 and 6: raw 6 lies in a file above the
+        # pushed bound, reached only by widening it by the deleted count
+        span = F.col(ROWID).between(1, 3)
+        assert rows(back.where(span)) == rows(t.df().where(span)) == [
+            (1, 10), (2, 50), (3, 60)
+        ]
+
+    def test_overwrite_commits_like_put(self, spark, tmp_path):
+        import os
+
+        ensure_registered(spark)
+        store = Store(spark, str(tmp_path / "ow"))
+        store.put("t", self._kv(spark, 5))
+        before = store._read_meta("t")
+        for n in (8, 3):
+            (
+                self._kv(spark, n, scale=7).write.format("nimhdfstore")
+                .option("store", store.root).option("table", "t")
+                .mode("overwrite").save()
+            )
+        meta = store._read_meta("t")
+        assert meta["version"] == before["version"] + 2
+        assert meta["uid"] != before["uid"]
+        tdir = os.path.join(store.root, "t")
+        snaps = [d for d in os.listdir(tdir) if d.startswith("snap-")]
+        assert snaps == [meta["current"]]
+        assert len(snaps) == store.keep_snapshots
+        assert not [d for d in os.listdir(tdir) if d.startswith(".tmp-")]
+        assert [r["v"] for r in store.table("t").df().orderBy(ROWID).collect()] \
+            == [0, 7, 14]
+
+    def test_commit_after_concurrent_put_conflicts(self, spark, tmp_path):
+        import os
+
+        import pyarrow as pa
+
+        from nimhdfstore_spark.store import StoreConflictError
+
+        store = Store(spark, str(tmp_path / "cc"))
+        body = self._kv(spark, 5)
+        store.put("t", body)
+        writer = StoreDataSource({"store": store.root, "table": "t"}).writer(
+            body.schema, True
+        )
+        msg = writer.write(iter([pa.RecordBatch.from_pydict(
+            {ROWID: pa.array([0, 1], pa.int64()),
+             "v": pa.array([7, 8], pa.int64())}
+        )]))
+        store.put("t", self._kv(spark, 4), overwrite=True)
+        with pytest.raises(StoreConflictError):
+            writer.commit([msg])
+        tdir = os.path.join(store.root, "t")
+        assert not [d for d in os.listdir(tdir) if d.startswith(".tmp-")]
+        assert store.table("t").nrows == 4
+
+    def test_commit_keeps_only_reported_files(self, spark, tmp_path):
+        """A file staged by a task attempt whose message never reached
+        commit() (failed or speculative) is not part of the snapshot."""
+        import pyarrow as pa
+
+        store = Store(spark, str(tmp_path / "rep"))
+        body = self._kv(spark, 1)
+        writer = StoreDataSource({"store": store.root, "table": "t"}).writer(
+            body.schema, False
+        )
+
+        def batch(ids):
+            return iter([pa.RecordBatch.from_pydict(
+                {ROWID: pa.array(ids, pa.int64()),
+                 "v": pa.array(ids, pa.int64())}
+            )])
+
+        kept = writer.write(batch([0, 1, 2]))
+        writer.write(batch([0, 1]))  # an attempt that was not reported
+        writer.commit([kept])
+        t = store.table("t")
+        assert t.nrows == 3
+        assert [r[ROWID] for r in t.df().orderBy(ROWID).collect()] == [0, 1, 2]

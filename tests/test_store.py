@@ -17,7 +17,7 @@ from pyspark.sql.types import (
 
 from nimhdfstore_spark.rowid import ROWID, with_rowid
 from nimhdfstore_spark import store as store_mod
-from nimhdfstore_spark.store import Store, StoreError
+from nimhdfstore_spark.store import Store, StoreError, Table
 from nimhdfstore_spark.tables import local_frame
 
 SCHEMA = StructType([
@@ -331,3 +331,67 @@ def test_parquet_reads_only_inside_table_scan():
         and not scan.lineno <= no <= scan.end_lineno
     ]
     assert not stray, f"read.parquet( outside Table._scan: {stray}"
+
+
+def test_catalog_format_known_only_to_store():
+    """``store.py`` is the only package module that knows the catalog
+    format: no other module names ``_meta.json`` or ``_manifests`` in its
+    code (docstrings may describe them)."""
+    pkg = os.path.dirname(store_mod.__file__)
+    stray = []
+    for dirpath, _dirs, files in os.walk(pkg):
+        for fn in sorted(files):
+            path = os.path.join(dirpath, fn)
+            if not fn.endswith(".py") or os.path.samefile(
+                path, store_mod.__file__
+            ):
+                continue
+            with open(path) as f:
+                tree = ast.parse(f.read())
+            docs = {
+                id(n.body[0].value)
+                for n in ast.walk(tree)
+                if isinstance(n, (ast.Module, ast.ClassDef, ast.FunctionDef,
+                                  ast.AsyncFunctionDef))
+                and n.body
+                and isinstance(n.body[0], ast.Expr)
+                and isinstance(n.body[0].value, ast.Constant)
+            }
+            stray += [
+                f"{os.path.relpath(path, pkg)}:{n.lineno}"
+                for n in ast.walk(tree)
+                if isinstance(n, ast.Constant)
+                and isinstance(n.value, str)
+                and id(n) not in docs
+                and ("_meta.json" in n.value or "_manifests" in n.value)
+            ]
+    assert not stray, f"catalog files named outside store.py: {stray}"
+
+
+def test_dv_overlay_arrow_matches_list_oracle():
+    """``Table._dv_overlay_arrow`` drops the deleted raw positions of any
+    one file's rows and renumbers the rest like ``_dv_overlay``."""
+    import pyarrow as pa
+
+    rng = random.Random(7)
+    for _ in range(50):
+        n = rng.randint(1, 40)
+        dv, pos = [], 0
+        while pos < n and rng.random() < 0.7:
+            a = rng.randint(pos, n - 1)
+            b = rng.randint(a, min(n - 1, a + 4))
+            dv.append([a, b])
+            pos = b + 2
+        dead = {i for a, b in dv for i in range(a, b + 1)}
+        lo = rng.randint(0, n - 1)
+        ids = list(range(lo, rng.randint(lo, n - 1) + 1))  # one file's rows
+        rng.shuffle(ids)
+        raw = pa.table({ROWID: pa.array(ids, pa.int64()),
+                        "v": pa.array([i * 3 for i in ids], pa.int64())})
+        got = Table._dv_overlay_arrow(raw, dv)
+        kept = [i for i in ids if i not in dead]
+        assert got.schema == raw.schema
+        assert got.column("v").to_pylist() == [i * 3 for i in kept]
+        assert got.column(ROWID).to_pylist() == [
+            i - sum(1 for d in dead if d < i) for i in kept
+        ]
