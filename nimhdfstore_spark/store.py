@@ -9,6 +9,14 @@ Layout (one store = one root directory; one table = one subdirectory):
                               # attributes, canonical order, link target
         snap-00000000/        # immutable Parquet snapshot, sorted by _rowid
         snap-00000001/        # produced by a mutation; pointer swap in meta
+        snap-00000002-<hex>/  # a committer may add a unique per-attempt
+                              # suffix; the number alone orders snapshots
+        .tmp-snap-…/          # a commit's staging dir, renamed on publish
+        _manifests/           # catalog shards of large tables
+
+``_SnapDirs`` is the one reader of these names: it sorts a table's
+snapshot dirs against the catalog's ``current`` into history, the current
+itself and debris, and every retention, time-travel and diff path asks it.
 
 Mutations (append / insert / update / delete, reference nimtables.nim:173-233)
 are deterministic rewrites: build the mutated DataFrame with *arithmetic*
@@ -162,8 +170,12 @@ def scan_rowid_ranges(
     snap_dir: str, skip: frozenset | set = frozenset()
 ) -> list[dict]:
     """Per-file ``_rowid`` (lo, hi, rows) from the Parquet footers under
-    ``snap_dir``, sorted by ``lo`` — the file-catalog scan shared by the
-    Store commit path and the Python DataSource's legacy-meta fallback."""
+    ``snap_dir``, sorted by ``lo``. Run once per snapshot commit and cached
+    in the catalog — mutations prune against this catalog, never against
+    footer reads (the analog of HDF5's chunk index; at 100 TB this is the
+    manifest). ``skip`` names files whose entries the caller already has
+    (reused hardlinked files at commit time): an append to a 100k-file
+    table must read only the NEW files' footers, not 100k of them."""
     import glob
 
     import pyarrow.parquet as pq
@@ -217,6 +229,94 @@ def _read_snap_schema(snap_dir: str) -> str | None:
             return f.read()
     except OSError:
         return None
+
+
+#: vacuum's age gate for debris a live commit may still own: its staging
+#: dir, its renamed-but-not-yet-published snapshot, its pre-flip shard
+_DEBRIS_AGE_S = 86400
+
+
+class _SnapDirs:
+    """A table directory's snapshot dirs, listed once and sorted by number
+    against the catalog's ``current`` into four kinds:
+
+    * the current — the catalog's own name, the one dir ``history`` holds
+      for its number;
+    * ``history`` — committed snapshots, ``{number: [dir, ...]}`` for numbers
+      at or below current's;
+    * ``losers`` — current's number under another name: a conflict loser's
+      unique-suffixed rename, removed by every retention pass;
+    * ``above`` — numbers above current: a crashed commit's never-published
+      rename, or a racer's still in flight (they look the same), so only
+      vacuum's age-gated sweep removes them.
+
+    ``staging`` holds the ``.tmp-snap-…`` commit staging dirs. A
+    ``current`` that names no snapshot (a link entry, a torn read) sorts
+    every dir into history."""
+
+    def __init__(self, tdir: str, current: str | None) -> None:
+        self.history: dict[int, list[str]] = {}
+        self.losers: list[str] = []
+        self.above: list[str] = []
+        self.staging: list[str] = []
+        cur_no = self.number(current) if current else None
+        for e in sorted(os.listdir(tdir)):
+            n = self.number(e)
+            if n is None and not e.startswith(".tmp-"):
+                continue
+            if not os.path.isdir(os.path.join(tdir, e)):
+                continue
+            if n is None:
+                self.staging.append(e)
+            elif cur_no is None or n < cur_no or e == current:
+                self.history.setdefault(n, []).append(e)
+            elif n == cur_no:
+                self.losers.append(e)
+            else:
+                self.above.append(e)
+
+    @staticmethod
+    def number(entry: str) -> int | None:
+        """The number of a ``snap-NNNNNNNN[-<hex>]`` name, else None."""
+        if not entry.startswith("snap-"):
+            return None
+        try:
+            return int(entry.split("-")[1])
+        except (IndexError, ValueError):
+            return None
+
+    @classmethod
+    def next_name(cls, current: str | None) -> str:
+        """The plain name of the snapshot after ``current`` (the first
+        when there is none); a committer may suffix it on publish."""
+        return _SNAP.format(0 if current is None else cls.number(current) + 1)
+
+    def resolve(self, name: str, snapshot: int) -> str:
+        """The dir of retained snapshot number ``snapshot`` of table
+        ``name``. Above-current debris never resolves: serving it would
+        present uncommitted data as a committed snapshot."""
+        dirs = self.history.get(snapshot, [])
+        if len(dirs) > 1:
+            raise StoreError(
+                f"snapshot {snapshot} of {name!r} is ambiguous ({dirs}): a"
+                " crashed commit's debris shares its number, and the catalog"
+                " keeps no record of which dir was committed"
+            )
+        if not dirs:
+            raise StoreError(
+                f"snapshot {snapshot} of {name!r} is not retained "
+                f"(available: {sorted(self.history)})"
+            )
+        return dirs[0]
+
+    def doomed(self, retain: int) -> list[str]:
+        """The dirs retention removes, oldest first: committed snapshots
+        outside the ``retain`` newest numbers, then loser debris. Counting
+        by number keeps a loser or above-current debris from taking a
+        retained snapshot's slot; the current, newest by number, always
+        stays."""
+        nums = sorted(self.history)
+        return [e for n in nums[:-retain] for e in self.history[n]] + self.losers
 
 
 class StoreError(Exception):
@@ -916,59 +1016,15 @@ class Store:
                 heal(self, name)
             meta = self._read_meta(name)
         if snapshot is not None:
-            # Numbers ABOVE the committed current can only be crash debris:
-            # a ConditionalPut committer that died between its rename and
-            # the conditional PUT leaves a complete-looking but never-
-            # committed snap-N-<hex> dir (ADVICE r9) — serving it would
-            # present uncommitted data as a committed snapshot. A malformed
-            # 'current' degrades to no guard, same as snapshots().
-            try:
-                cur_no = int(meta["current"].split("-")[1])
-            except (KeyError, IndexError, ValueError):
-                cur_no = None
-            if cur_no is not None and snapshot > cur_no:
-                raise StoreError(
-                    f"snapshot {snapshot} of {name!r} is not retained "
-                    f"(available: {self.snapshots(name)})"
-                )
-            snap = _SNAP.format(snapshot)
-            sdir = os.path.join(self._table_dir(name), snap)
-            if not os.path.isdir(sdir):
-                # ConditionalPutCommitter snapshots carry a unique per-
-                # attempt suffix (snap-NNNNNNNN-<hex>); resolve by number.
-                # The catalog's own current name wins outright — a racing
-                # conflict loser's same-numbered dir can transiently
-                # coexist and must never make the COMMITTED snapshot look
-                # ambiguous.
-                if meta["current"].startswith(snap + "-"):
-                    snap = meta["current"]
-                    sdir = os.path.join(self._table_dir(name), snap)
-                else:
-                    import glob as _glob
-
-                    hits = _glob.glob(sdir + "-*")
-                    if len(hits) == 1:
-                        snap = os.path.basename(hits[0])
-                        sdir = hits[0]
-                    elif len(hits) > 1:
-                        raise StoreError(
-                            f"snapshot {snapshot} of {name!r} is ambiguous "
-                            f"({sorted(os.path.basename(h) for h in hits)}):"
-                            " conflict debris shares its number — vacuum,"
-                            " then retry"
-                        )
-            if snap == meta["current"]:
-                pass  # current: plain handle below
-            elif not os.path.isdir(sdir):
-                raise StoreError(
-                    f"snapshot {snapshot} of {name!r} is not retained "
-                    f"(available: {self.snapshots(name)})"
-                )
-            else:
+            snap = _SnapDirs(self._table_dir(name), meta["current"]).resolve(
+                name, snapshot
+            )
+            if snap != meta["current"]:
+                sdir = os.path.join(self._table_dir(name), snap)
                 hist = dict(meta)
                 hist["current"] = snap
                 hist.pop("manifests", None)  # shards describe CURRENT only
-                hist["files"] = self._scan_ranges(sdir)
+                hist["files"] = scan_rowid_ranges(sdir)
                 hist["count"] = sum(e["rows"] for e in hist["files"])
                 # the META schema describes CURRENT and may have evolved
                 # since this snapshot: the snapshot's own sidecar is the
@@ -1003,16 +1059,10 @@ class Store:
         if not os.path.isfile(os.path.join(tdir, "_meta.json")):
             raise StoreError(f"no such table: {name!r}")
         try:
-            cur_no = int(self._read_meta(name)["current"].split("-")[1])
-        except (StoreError, KeyError, ValueError, IndexError):
-            cur_no = None  # link metas / torn reads: fall back to unfiltered
-        return sorted({
-            n
-            for e in os.listdir(tdir)
-            if e.startswith("snap-") and os.path.isdir(os.path.join(tdir, e))
-            for n in [int(e.split("-")[1])]
-            if cur_no is None or n <= cur_no
-        })
+            current = self._read_meta(name).get("current")
+        except StoreError:
+            current = None  # torn read: every snapshot dir counts
+        return sorted(_SnapDirs(tdir, current).history)
 
     def drop(self, name: str) -> None:
         """M6/M7 — dropping an unknown key is an explicit error (the
@@ -1162,16 +1212,11 @@ class Store:
                 old_meta = self._read_meta(name)
             except StoreError:
                 shutil.rmtree(tdir)  # stray non-table dir: nothing reads it
-        snap_no = 0
-        expected = 0
-        if old_meta is not None:
-            expected = int(old_meta.get("version", 0))
-            if "current" in old_meta:
-                snap_no = int(old_meta["current"].split("-")[1]) + 1
+        prior = old_meta or {}
         import uuid as _uuid
 
         meta = {
-            "current": _SNAP.format(snap_no),
+            "current": _SnapDirs.next_name(prior.get("current")),
             # per-creation identity: Table mutations CAS on it so a handle
             # from a dropped incarnation can never clobber a recreated table
             "uid": _uuid.uuid4().hex,
@@ -1180,7 +1225,7 @@ class Store:
             "order_by": list(order_by or []),
         }
         self._invalidate(name)  # snap paths can repeat after drop/stray rmtree
-        return meta, expected, old_meta is not None
+        return meta, int(prior.get("version", 0)), old_meta is not None
 
     def _publish_put(
         self,
@@ -1199,14 +1244,14 @@ class Store:
         tdir = self._table_dir(name)
         # count + per-file rowid catalog come from the written footers —
         # no separate count job (which would recompute the whole sort).
-        scanned = self._scan_ranges(os.path.join(tdir, staged))
+        scanned = scan_rowid_ranges(os.path.join(tdir, staged))
         meta["count"] = sum(e["rows"] for e in scanned)
         # snapshot-local schema sidecar: snapshots are immutable, so the
         # schema AT this snapshot rides inside its directory — time travel
         # to an EMPTY snapshot must not serve the table's CURRENT (possibly
         # evolved) schema (round-10 code review, confirmed repro)
         _write_snap_schema(os.path.join(tdir, staged), meta["schema"])
-        self._pack_files(name, meta, scanned)
+        self._pack(name, meta, "manifests", scanned)
         if defer:
             # transaction staging: snapshot written, catalog pointer NOT
             # flipped — the Transaction flips every staged table together
@@ -1243,56 +1288,15 @@ class Store:
         return Transaction(self)
 
     def _prune_snapshots(self, name: str) -> None:
-        """Drop snapshot dirs beyond the ``keep_snapshots`` newest. The
-        CURRENT snapshot (re-read from the catalog — a racer may have
-        committed since this handle flipped) is explicitly exempt: with
-        unique-suffixed snapshot names a conflict LOSER'S directory can
-        transiently exist for the same snapshot number and sort AFTER the
-        winner's, which once made name-order pruning delete the live
-        current snapshot out from under every reader (caught by the
-        threaded conditional-PUT contention test)."""
+        """Apply ``keep_snapshots`` retention (:meth:`_SnapDirs.doomed`)
+        after a commit. The current is re-read from the catalog: a racer
+        may have committed since this handle flipped."""
         tdir = self._table_dir(name)
         try:
             current = self._read_meta(name).get("current")
         except StoreError:
             current = None
-        snaps = [
-            e for e in os.listdir(tdir)
-            if e.startswith("snap-") and os.path.isdir(os.path.join(tdir, e))
-        ]
-
-        def num(e: str) -> int:
-            try:
-                return int(e.split("-")[1])
-            except (IndexError, ValueError):
-                return -1
-
-        # Retention is by snapshot NUMBER, newest keep_snapshots numbers —
-        # name-order retention miscounted when a conflict loser's same-
-        # numbered unique-suffixed dir transiently coexisted (it occupied a
-        # kept slot and pushed a REAL retained history snapshot out of the
-        # window). A non-current dir sharing the current's number is that
-        # loser's debris and is removed regardless.
-        cur_num = num(current) if current else None
-        # Numbers ABOVE current never occupy a retention slot (ADVICE r9:
-        # a crashed conditional-PUT attempt's debris dir has the largest
-        # number and would evict a REAL retained history snapshot) — but
-        # they are also never DELETED here: an in-flight racer's renamed-
-        # but-not-yet-PUT snapshot looks identical; vacuum reclaims true
-        # debris behind a 24 h age gate.
-        committed = {
-            num(e) for e in snaps
-            if cur_num is None or num(e) <= cur_num
-        }
-        keep_nums = set(sorted(committed)[-self.keep_snapshots:])
-        for e in snaps:
-            if e == current:
-                continue
-            n = num(e)
-            if cur_num is not None and n > cur_num:
-                continue  # possible in-flight commit — vacuum's job
-            if n in keep_nums and n != cur_num:
-                continue
+        for e in _SnapDirs(tdir, current).doomed(self.keep_snapshots):
             shutil.rmtree(os.path.join(tdir, e), ignore_errors=True)
 
     def vacuum(self, retain: int | None = None, dry_run: bool = False) -> dict:
@@ -1304,9 +1308,12 @@ class Store:
         driver-sized at any store size (the walk touches directory
         entries, not data).
 
-        Retention is normally automatic (every commit prunes); an explicit
-        vacuum is for after lowering the retention depth, or for auditing
-        reclaimable space before doing so. Readers of retained-but-vacuumed
+        Retention is normally automatic (every commit prunes by the same
+        rule); an explicit vacuum is for after lowering the retention
+        depth, or for auditing reclaimable space before doing so. It also
+        reclaims debris a live commit could still own — staging dirs,
+        above-current snapshot dirs, unreferenced manifest shards — once
+        older than ``_DEBRIS_AGE_S``. Readers of retained-but-vacuumed
         snapshots fail on next access, exactly like Delta/Iceberg VACUUM
         semantics — size ``retain`` to the longest-running reader."""
         retain = self.keep_snapshots if retain is None else retain
@@ -1314,85 +1321,37 @@ class Store:
             raise StoreError("retain must be >= 1")
         if not dry_run:
             self._require_writable()
+        import time as _time
+
+        def aged(p: str) -> bool:
+            return _time.time() - os.stat(p).st_mtime > _DEBRIS_AGE_S
+
         report: dict = {}
         for key in self.keys():
             meta = self._read_meta(key)
             if "link_to" in meta:
                 continue
             tdir = self._table_dir(key)
-            # reclaim crash-orphaned commit staging dirs (.tmp-snap-…): a
-            # crashed writer leaves its staged snapshot unreferenced. Age-
-            # gated at 24 h so vacuum can never yank a LIVE commit's staging
-            # dir out from under its in-flight Spark write.
-            import time as _time
-
-            for e in os.listdir(tdir):
-                p = os.path.join(tdir, e)
-                if (
-                    e.startswith(".tmp-snap-")
-                    and os.path.isdir(p)
-                    and _time.time() - os.stat(p).st_mtime > 86400
-                    and not dry_run
-                ):
-                    shutil.rmtree(p, ignore_errors=True)
-            # manifest shards unreferenced by the CURRENT meta (conflict
-            # losers, superseded folds) — same 24 h age gate so a racing
-            # commit's just-staged shard is never yanked pre-flip
+            snaps = _SnapDirs(tdir, meta["current"])
             mdir = self._manifest_dir(key)
-            if os.path.isdir(mdir) and not dry_run:
+            if not dry_run:
+                for e in snaps.staging + snaps.above:
+                    p = os.path.join(tdir, e)
+                    if aged(p):
+                        shutil.rmtree(p, ignore_errors=True)
+                # shards the current meta does not reference: conflict
+                # losers' and superseded folds'
                 live = set(meta.get("manifests") or [])
                 for idx in (meta.get("bloom") or {}).values():
                     live.update(idx.get("shards") or [])
-                for e in os.listdir(mdir):
+                for e in os.listdir(mdir) if os.path.isdir(mdir) else []:
                     p = os.path.join(mdir, e)
-                    if (
-                        e not in live
-                        and _time.time() - os.stat(p).st_mtime > 86400
-                    ):
+                    if e not in live and aged(p):
                         try:
                             os.unlink(p)
                         except OSError:
                             pass
-            current = meta["current"]
-            # snap dirs numbered ABOVE the committed current: a crashed
-            # conditional-PUT attempt's never-committed rename (pruning
-            # skips them — an in-flight racer looks identical; the same
-            # 24 h age gate as staging dirs makes them safe to reclaim)
-            try:
-                cur_no = int(current.split("-")[1])
-            except (IndexError, ValueError):
-                cur_no = None
-            if cur_no is not None and not dry_run:
-                for e in os.listdir(tdir):
-                    p = os.path.join(tdir, e)
-                    if not (e.startswith("snap-") and os.path.isdir(p)):
-                        continue
-                    try:
-                        n = int(e.split("-")[1])
-                    except (IndexError, ValueError):
-                        continue
-                    if n > cur_no and _time.time() - os.stat(p).st_mtime > 86400:
-                        shutil.rmtree(p, ignore_errors=True)
-            def _num(e: str) -> int:
-                try:
-                    return int(e.split("-")[1])
-                except (IndexError, ValueError):
-                    return -1
-
-            # retention counts COMMITTED snapshots only: above-current
-            # debris younger than the age gate would otherwise occupy a
-            # kept slot and evict a real retained history snapshot (the
-            # same hole _prune_snapshots closed; round-10 code review,
-            # confirmed repro). The debris itself is neither doomed nor
-            # kept — the age-gated sweep above owns it.
-            snaps = sorted(
-                e for e in os.listdir(tdir)
-                if e.startswith("snap-") and os.path.isdir(os.path.join(tdir, e))
-                and (cur_no is None or _num(e) <= cur_no)
-            )
-            doomed = [e for e in snaps[:-retain] if e != current] if len(
-                snaps
-            ) > retain else []
+            doomed = snaps.doomed(retain)
             nbytes = 0
             for e in doomed:
                 sdir = os.path.join(tdir, e)
@@ -1409,7 +1368,10 @@ class Store:
                     _crash_point("vacuum.mid_reclaim")
             report[key] = {
                 "removed": doomed,
-                "kept": [e for e in snaps if e not in doomed],
+                "kept": [
+                    e for n in sorted(snaps.history)
+                    for e in snaps.history[n] if e not in doomed
+                ],
                 "bytes": nbytes,
             }
         return report
@@ -1550,8 +1512,8 @@ class Store:
     @staticmethod
     def _staged_snap(snap: str) -> str:
         """Unique per-attempt staging dir basename for snapshot ``snap``.
-        The ``.tmp-`` prefix keeps it out of every ``startswith("snap-")``
-        listing (snapshots(), pruning, vacuum retention)."""
+        The ``.tmp-`` prefix keeps it out of every snapshot listing:
+        :class:`_SnapDirs` files it under ``staging``."""
         import uuid
 
         return f".tmp-{snap}-{uuid.uuid4().hex[:8]}"
@@ -1623,47 +1585,35 @@ class Store:
         out.sort(key=lambda e: e["lo"])
         return out
 
-    def _pack_files(
+    def _pack(
         self,
         name: str,
-        meta: dict,
-        files: list[dict],
-        carried_shards: list[str] | None = None,
-        new_entries: list[dict] | None = None,
+        target: dict,
+        shard_key: str,
+        full: list | dict,
+        carried: list[str] | None = None,
+        new: list | dict | None = None,
     ) -> None:
-        """Install ``files`` as the meta's catalog: inline below the
-        threshold, else sharded — reusing ``carried_shards`` (whose union
-        is ``files`` minus ``new_entries``) and writing one shard for the
-        delta, or folding everything into a single shard when no carry is
-        possible or the shard list has grown past ``_MANIFEST_FOLD_AT``."""
-        if len(files) <= self._MANIFEST_INLINE_MAX:
-            meta["files"] = files
-            meta.pop("manifests", None)
+        """Install ``full`` — a file catalog's entries or a bloom index's
+        per-file bitmaps — into ``target``: inline as ``files`` below
+        ``_MANIFEST_INLINE_MAX``, else as shard names under ``shard_key``.
+        The shards reuse ``carried`` (whose union is ``full`` minus ``new``)
+        plus one shard for ``new``, or fold everything into a single shard
+        when no carry is possible or the list reached ``_MANIFEST_FOLD_AT``
+        (at 100k files the bitmaps alone are MBs that would otherwise ride
+        in ``_meta.json`` under the commit lock)."""
+        if len(full) <= self._MANIFEST_INLINE_MAX:
+            target["files"] = full
+            target.pop(shard_key, None)
             return
-        if (
-            carried_shards
-            and new_entries is not None
-            and len(carried_shards) < self._MANIFEST_FOLD_AT
-        ):
-            shards = list(carried_shards)
-            if new_entries:
-                shards.append(self._write_manifest(name, new_entries))
+        if carried and new is not None and len(carried) < self._MANIFEST_FOLD_AT:
+            shards = list(carried)
+            if new:
+                shards.append(self._write_manifest(name, new))
         else:
-            shards = [self._write_manifest(name, files)]
-        meta["manifests"] = shards
-        meta.pop("files", None)
-
-    def _scan_ranges(
-        self, snap_dir: str, skip: frozenset | set = frozenset()
-    ) -> list[dict]:
-        """Per-file ``_rowid`` (lo, hi, rows) from Parquet footers, sorted by
-        ``lo``. Run once per snapshot commit and cached in the catalog —
-        mutations prune against this catalog, never against footer reads
-        (the analog of HDF5's chunk index; at 100 TB this is the manifest).
-        ``skip`` names files whose entries the caller already has (reused
-        hardlinked files at commit time): an append to a 100k-file table
-        must read only the NEW files' footers, not 100k of them."""
-        return scan_rowid_ranges(snap_dir, skip)
+            shards = [self._write_manifest(name, full)]
+        target[shard_key] = shards
+        target.pop("files", None)
 
     # Spark dtypes whose pyarrow-written Parquet encoding is byte-compatible
     # with Spark's own writer within one mixed snapshot. ``timestamp_ntz``
@@ -1929,16 +1879,16 @@ class Transaction:
         # the multi-table flip one conditional swap).
         for name, t in self._staged:
             try:
-                disk_v = int(self.store._read_meta(name).get("version", 0))
+                disk = self.store._read_meta(name)
             except StoreError:
-                disk_v = 0
-            if disk_v != t._expected_version:
+                disk = None
+            reason = _conflict_reason(
+                name, disk, t._expected_version, False, t._meta
+            )
+            if reason is not None:
                 self._discard_staged()
                 raise StoreConflictError(
-                    f"concurrent modification of {name!r} during the "
-                    f"transaction (catalog version {disk_v}, staged against "
-                    f"{t._expected_version}): transaction aborted, nothing "
-                    "published"
+                    f"{reason} (transaction aborted, nothing published)"
                 )
         # commit: CAS-flip every pointer, then prune superseded snapshots
         flipped = 0
@@ -2013,22 +1963,16 @@ class Table:
         final ``_cas_flip`` remains the authoritative check (this is an
         optimization plus a better error, not the correctness gate). The
         handle refreshes before raising so the caller can simply retry."""
-        uid = (self._meta or {}).get("uid")
         try:
             disk = self.store._read_meta(self.name)
-            disk_v = int(disk.get("version", 0))
         except StoreError:
-            disk, disk_v = {}, 0
-        if disk_v != self._version or (
-            uid and disk.get("uid") and disk["uid"] != uid
-        ):
-            planned = self._version
+            disk = None
+        reason = _conflict_reason(
+            self.name, disk, self._version, True, self._meta or {}
+        )
+        if reason is not None:
             self.refresh()
-            raise StoreConflictError(
-                f"concurrent modification of {self.name!r}: catalog version "
-                f"is {disk_v} (planned against {planned}) or the table was "
-                "recreated — handle refreshed, retry the operation"
-            )
+            raise StoreConflictError(f"{reason} (handle refreshed)")
 
     # -- schema / catalog ----------------------------------------------------
 
@@ -2367,7 +2311,7 @@ class Table:
             column, [self.snapshot_path], bits, k
         )
         idx = {"bits": bits, "k": k}
-        self._pack_bloom(idx, fmap)
+        self.store._pack(self.name, idx, "shards", fmap)
         self._meta.setdefault("bloom", {})[column] = idx
         self._commit_meta()
         return idx
@@ -2382,35 +2326,6 @@ class Table:
         for s in idx.get("shards", []):
             out.update(self.store._load_manifest(self.name, s))
         return out
-
-    def _pack_bloom(
-        self,
-        idx: dict,
-        full_map: dict[str, str],
-        carried_shards: list[str] | None = None,
-        new_map: dict[str, str] | None = None,
-    ) -> None:
-        """Install per-file bitmaps into ``idx``: inline below the manifest
-        threshold, else sharded under ``_manifests/`` like the file catalog
-        — at 100k files the bitmaps are MBs that would otherwise ride in
-        ``_meta.json`` under the commit lock on every meta-only commit."""
-        store = self.store
-        if len(full_map) <= store._MANIFEST_INLINE_MAX:
-            idx["files"] = full_map
-            idx.pop("shards", None)
-            return
-        if (
-            carried_shards
-            and new_map is not None
-            and len(carried_shards) < store._MANIFEST_FOLD_AT
-        ):
-            shards = list(carried_shards)
-            if new_map:
-                shards.append(store._write_manifest(self.name, new_map))
-        else:
-            shards = [store._write_manifest(self.name, full_map)]
-        idx["shards"] = shards
-        idx.pop("files", None)
 
     def _bloom_file_entries(
         self, column: str, paths: list[str], bits: int, k: int
@@ -2887,7 +2802,7 @@ class Table:
         materialized from manifest shards)."""
         files = self.store._files_of(self.name, self._meta)
         if files is None:  # meta written before file catalogs existed
-            files = self.store._scan_ranges(self.snapshot_path)
+            files = scan_rowid_ranges(self.snapshot_path)
         return files
 
     def _read_files(self, entries: list[dict]) -> DataFrame:
@@ -2912,8 +2827,7 @@ class Table:
         store._require_writable()
         self._require_mutable()
         self._check_fresh()
-        cur = int(self._meta["current"].split("-")[1])
-        snap = _SNAP.format(cur + 1)
+        snap = _SnapDirs.next_name(self._meta["current"])
         old_dir = self.snapshot_path
         tdir = store._table_dir(self.name)
         # stage under a unique name; the final snap dir appears only inside
@@ -2993,7 +2907,7 @@ class Table:
         # footer-scan ONLY the freshly written files (at 100k files the old
         # full rescan was ~6 s of pure footer reads per append)
         kept_name_set = {e["name"] for e in keep}
-        new_file_entries = store._scan_ranges(staged_dir, skip=kept_name_set)
+        new_file_entries = scan_rowid_ranges(staged_dir, skip=kept_name_set)
         files = sorted(
             [dict(e) for e in keep] + new_file_entries,
             key=lambda e: e["lo"],
@@ -3033,8 +2947,9 @@ class Table:
                     if new_names else {}
                 )
                 entry = {"bits": int(idx["bits"]), "k": int(idx["k"])}
-                self._pack_bloom(
-                    entry, {**fmap, **new_map}, idx.get("shards"), new_map
+                store._pack(
+                    self.name, entry, "shards", {**fmap, **new_map},
+                    idx.get("shards"), new_map,
                 )
                 carried_bloom[col] = entry
             if carried_bloom is not None:
@@ -3094,8 +3009,8 @@ class Table:
         self._meta.update(
             current=snap, count=sum(e["rows"] for e in files)
         )
-        store._pack_files(
-            self.name, self._meta, files, carried_shards, residual
+        store._pack(
+            self.name, self._meta, "manifests", files, carried_shards, residual
         )
         # a physical commit always starts from the logical state (mutators
         # _flush_dv first; compact reads through df()), so any overlay is
@@ -3449,12 +3364,12 @@ class Table:
         a rewritten-in-place file reports all its rows as updates even when
         some are byte-equal). Positions that disappeared (count shrank) are
         deletions by definition of positional storage and are not emitted
-        as rows."""
+        as rows. ``since`` resolves as ``Store.table(snapshot=)`` does."""
         tdir = self.store._table_dir(self.name)
-        old_dir = os.path.join(tdir, _SNAP.format(since))
-        if not os.path.isdir(old_dir):
-            raise StoreError(f"no such snapshot: {since} for {self.name!r}")
-        old_ranges = self.store._scan_ranges(old_dir)
+        old_dir = os.path.join(
+            tdir, _SnapDirs(tdir, self._meta["current"]).resolve(self.name, since)
+        )
+        old_ranges = scan_rowid_ranges(old_dir)
         old_names = {e["name"] for e in old_ranges}
         old_count = sum(e["rows"] for e in old_ranges)
         fresh = [e for e in self._ranges() if e["name"] not in old_names]

@@ -140,8 +140,10 @@ class TestPythonDataSourceWriter:
         spark.dataSource.register(StoreDataSource)
         root = str(tmp_path / "wstore4")
         self._write(spark, root)
+        assert Store(spark, root).snapshots("t")  # the write committed
+        # commits stage under Store._staged_snap's ".tmp-" prefix
         left = [d for d in os.listdir(os.path.join(root, "t"))
-                if d.startswith("_staging")]
+                if d.startswith(".tmp-")]
         assert left == []
 
 

@@ -314,6 +314,9 @@ def test_conditional_put_time_travel_unique_snapshots(spark, tmp_path):
     old = store.table("t", snapshot=first)
     assert [r[0] for r in rows_of(old.df())] == [1, 2, 3]
     assert [r[0] for r in rows_of(store.table("t").df())] == [1, 2, 3, 50]
+    # changes() resolves the suffixed dir by number, as time travel does
+    ch = t.changes(first).collect()
+    assert [(r[1], r["op"]) for r in ch] == [(50, "insert")]
 
 
 def test_conditional_put_drop_recreate(spark, tmp_path):
@@ -379,10 +382,11 @@ def test_vacuum_reclaims_orphan_manifest_shards(spark, tmp_path, monkeypatch):
     assert st.table("t").nrows == 100
 
 
-def test_prune_retention_survives_conflict_debris(spark, tmp_path):
+@pytest.mark.parametrize("retention", ["prune", "vacuum"])
+def test_prune_retention_survives_conflict_debris(spark, tmp_path, retention):
     """keep_snapshots=2: a conflict loser's same-numbered dir must neither
     evict a real retained history snapshot from the keep window nor
-    survive pruning itself."""
+    survive retention itself — per-commit pruning and vacuum alike."""
     import os
 
     from nimhdfstore_spark.store import Store, _SNAP
@@ -398,8 +402,11 @@ def test_prune_retention_survives_conflict_debris(spark, tmp_path):
         store._table_dir("t"), _SNAP.format(cur_no) + "-zzzzzzzz"
     )
     os.makedirs(debris)
-    store._prune_snapshots("t")
-    assert not os.path.isdir(debris), "conflict debris survived pruning"
+    if retention == "prune":
+        store._prune_snapshots("t")
+    else:
+        store.vacuum(retain=2)
+    assert not os.path.isdir(debris), "conflict debris survived retention"
     # the real history snapshot stayed within the keep window
     assert [r[0] for r in rows_of(store.table("t", snapshot=hist).df())] == [
         1, 2, 3,

@@ -333,6 +333,25 @@ def test_parquet_reads_only_inside_table_scan():
     assert not stray, f"read.parquet( outside Table._scan: {stray}"
 
 
+def test_snapshot_names_parsed_only_by_snapdirs():
+    """``_SnapDirs`` is the store's one parser of snapshot dir names: no
+    other code in ``store.py`` splits or prefix-tests ``snap-`` names."""
+    path = store_mod.__file__
+    with open(path) as f:
+        src = f.read()
+    helper = next(
+        n for n in ast.parse(src).body
+        if isinstance(n, ast.ClassDef) and n.name == "_SnapDirs"
+    )
+    stray = [
+        f"{os.path.basename(path)}:{no}"
+        for no, line in enumerate(src.splitlines(), 1)
+        if ('split("-")[1]' in line or 'startswith("snap-")' in line)
+        and not helper.lineno <= no <= helper.end_lineno
+    ]
+    assert not stray, f"snapshot name parsed outside _SnapDirs: {stray}"
+
+
 def test_catalog_format_known_only_to_store():
     """``store.py`` is the only package module that knows the catalog
     format: no other module names ``_meta.json`` or ``_manifests`` in its
