@@ -18,24 +18,27 @@ Layout (one store = one root directory; one table = one subdirectory):
 snapshot dirs against the catalog's ``current`` into history, the current
 itself and debris, and every retention, time-travel and diff path asks it.
 
-Mutations (append / insert / update / delete, reference nimtables.nim:173-233)
-are deterministic rewrites: build the mutated DataFrame with *arithmetic*
-``_rowid`` shifts (no global re-rank), write a new snapshot sorted by
-``_rowid``, then atomically swap the ``_meta.json`` pointer (poor-man's ACID;
-readers of the old snapshot are unaffected). Because files are written sorted
-by ``_rowid``, Parquet row-group min/max stats on ``_rowid`` let Catalyst
-prune untouched row groups for every positional predicate — the Spark analog
-of HDF5 touching only intersecting chunks.
+Mutations (reference nimtables.nim:173-233) are deterministic rewrites: each
+commit writes a new snapshot sorted by ``_rowid`` and atomically swaps the
+``_meta.json`` pointer (poor-man's ACID; readers of the old snapshot are
+unaffected). Sorted files give Parquet row-group min/max stats on ``_rowid``,
+so Catalyst prunes untouched row groups for every positional predicate — the
+Spark analog of HDF5 touching only intersecting chunks. Before writing, every
+entry that takes caller rows checks their column names and types against the
+table's (``Table._check_payload``): a widened column would commit a snapshot
+no reader can scan.
 
-Scale notes (100 TB): mutations are file-pruned (SURVEY §7.1 M8). Stored
-``_rowid`` is always global, so a mutation only has to rewrite the files whose
-``_rowid`` range it touches: append rewrites nothing, update rewrites just the
-file(s) containing the overwritten range, and insert/delete rewrite the suffix
-from the splice point (positions after it shift — that data movement is
-inherent to positional semantics). Untouched files are *hardlinked* into the
-new snapshot directory — the local-FS stand-in for an object-store manifest
-that would list reused files by reference; per-file ``_rowid`` ranges live in
-``_meta.json`` so pruning needs no footer reads on the hot path.
+Scale notes (100 TB): mutations are file-pruned (SURVEY §7.1 M8). Append,
+insert, update, delete and add_records_from are one splice,
+``Table._splice(a, b, new, n)``: positions ``a..b`` become ``n`` new rows and
+later rows shift by ``n - (b - a + 1)``, arithmetically (no global re-rank).
+Stored ``_rowid`` is global, so only files holding a position at or after
+``a`` (and, when nothing shifts, at or before ``b``) are rewritten: append
+rewrites nothing, update the file(s) holding the range, insert/delete the
+suffix. ``update_rows``/``merge`` rewrite only the files holding a replaced
+``_rowid``. Every other file is *hardlinked* into the new snapshot — the
+local-FS stand-in for a manifest listing reused files by reference; per-file
+``_rowid`` ranges live in ``_meta.json``, so pruning reads no footers.
 """
 
 from __future__ import annotations
@@ -2731,8 +2734,41 @@ class Table:
     def _resolve(self, i: int) -> int:
         return i + self.nrows if i < 0 else i
 
+    def _check_payload(self, df: DataFrame) -> None:
+        """The one payload type check, run by every entry that writes caller
+        rows (append, insert, update, update_rows, merge, add_records_from)
+        before anything is committed.
+
+        The payload schema must match the table's exactly (name AND type per
+        column, ``_rowid`` aside): a silent type widening (int32 table, int64
+        payload) would write mixed-type Parquet files into one snapshot and
+        fail only at read time, nondeterministically with file order — the
+        reference's compound-type write is equally strict (H5TBappend_records
+        takes the table's registered dtype, nimtables.nim:173-175).
+        """
+        # schema from the persisted catalog entry: zero footer reads and no
+        # scan plan on the append path at ANY file count. Pre-persistence
+        # tables fall back to one file's footer (self.df() would list and
+        # plan the whole snapshot directory — O(files) per append).
+        stored = self._stored_schema()
+        if stored is None:
+            entries = self._ranges()
+            stored = (
+                self._read_files(entries[:1]) if len(entries) > 8 else self.df()
+            ).schema
+        payload_types, table_types = (
+            {f.name: f.dataType.simpleString() for f in s if f.name != ROWID}
+            for s in (df.schema, stored)
+        )
+        if payload_types != table_types:
+            raise StoreError(
+                f"payload schema {payload_types} does not match table "
+                f"schema {table_types}"
+            )
+
     def _new_rows(self, df: DataFrame, start: int, n: int | None) -> tuple[DataFrame, int]:
-        """Position incoming rows at ``start..start+n-1``.
+        """Position incoming rows at ``start..start+n-1``, after
+        :meth:`_check_payload`.
 
         If the frame carries a ``_rowid`` it is re-based onto the splice
         point (caller-defined local order). Otherwise the rows are numbered
@@ -2740,36 +2776,8 @@ class Table:
         LocalRelation, which ``_write_local`` writes with zero jobs —
         mutation payloads are driver-built and small; bulk loads go
         through :meth:`Store.put`.
-
-        The payload schema must match the table's exactly (name AND type per
-        column): a silent type widening (int32 table, int64 payload) would
-        write mixed-type Parquet files into one snapshot and fail only at
-        read time, nondeterministically with file order — the reference's
-        compound-type write is equally strict (H5TBappend_records takes the
-        table's registered dtype, nimtables.nim:173-175).
         """
-        # schema from the persisted catalog entry: zero footer reads and no
-        # scan plan on the append path at ANY file count. Pre-persistence
-        # tables fall back to one file's footer (self.df() would list and
-        # plan the whole snapshot directory — O(files) per append).
-        stored = self._stored_schema()
-        if stored is not None:
-            table_types = {
-                f.name: f.dataType.simpleString()
-                for f in stored.fields if f.name != ROWID
-            }
-        else:
-            entries = self._ranges()
-            schema_src = (
-                self._read_files(entries[:1]) if len(entries) > 8 else self.df()
-            )
-            table_types = {k: v for k, v in schema_src.dtypes if k != ROWID}
-        payload_types = {k: v for k, v in df.dtypes if k != ROWID}
-        if payload_types != table_types:
-            raise StoreError(
-                f"payload schema {payload_types} does not match table "
-                f"schema {table_types}"
-            )
+        self._check_payload(df)
         if ROWID in df.columns:
             if n is None:
                 n = df.count()
@@ -3037,6 +3045,34 @@ class Table:
                 Table._ZONE_CACHE.clear()
             Table._ZONE_CACHE[(self.snapshot_path, col)] = zones
 
+    def _splice(self, a: int, b: int, new: DataFrame | None, n: int) -> None:
+        """The one positional mutation (M1-M5, nimtables.nim:173-233):
+        replace logical positions ``a..b`` with the ``n`` rows of ``new``
+        (``b = a - 1`` replaces nothing) and shift every later row by
+        ``n - (b - a + 1)``. Stored ``_rowid`` is global, so a file is
+        touched only if it holds a position at or after ``a`` and, when
+        nothing shifts, at or before ``b``; every other file is hardlinked.
+        The touched files are read once, the replaced positions filtered
+        out and the later ones renumbered arithmetically (no re-rank)."""
+        shift = n - (b - a + 1)
+        keep, touched = [], []
+        for e in self._ranges():
+            hit = e["hi"] >= a and (shift != 0 or e["lo"] <= b)
+            (touched if hit else keep).append(e)
+        body = new
+        if touched:
+            r = F.col(ROWID)
+            old = self._read_files(touched)
+            if b >= a:
+                old = old.where((r < a) | (r > b))
+            if shift:
+                old = old.withColumn(
+                    ROWID, F.when(r > b, r + shift).otherwise(r).cast("long")
+                )
+            body = old if new is None else old.unionByName(new)
+        rewrite_count = sum(e["rows"] for e in touched) - (b - a + 1) + n
+        self._commit_pruned(keep, body, rewrite_count)
+
     def append(self, df: DataFrame, n: int | None = None) -> None:
         """M1 — append at end (nimtables.nim:173-175). Existing files are all
         reused; only the new rows are written.
@@ -3060,7 +3096,7 @@ class Table:
                 self._flush_dv()
                 start = self.nrows
                 new, k = self._new_rows(df, start, n)
-                self._commit_pruned(self._ranges(), new, k)
+                self._splice(start, start - 1, new, k)
                 return
             except StoreConflictError as e:
                 last = e  # the conflict path already refreshed the handle
@@ -3098,23 +3134,7 @@ class Table:
         if not 0 <= i <= self.nrows:
             raise StoreError(f"insert position {i} out of range 0..{self.nrows}")
         new, n = self._new_rows(df, i, n)
-        ranges = self._ranges()
-        keep = [e for e in ranges if e["hi"] < i]
-        touched = [e for e in ranges if e["hi"] >= i]
-        r = F.col(ROWID)
-        if touched:
-            old = self._read_files(touched)
-            body = (
-                old.where(r < i)
-                .unionByName(new)
-                .unionByName(
-                    old.where(r >= i).withColumn(ROWID, (r + F.lit(n)).cast("long"))
-                )
-            )
-        else:
-            body = new
-        rewrite_count = sum(e["rows"] for e in touched) + n
-        self._commit_pruned(keep, body, rewrite_count)
+        self._splice(i, i - 1, new, n)
 
     def delete(self, a: int, b: int | None = None) -> None:
         """M4 — delete row or inclusive slice (nimtables.nim:202-227);
@@ -3125,23 +3145,15 @@ class Table:
         b = a if b is None else self._resolve(b)
         if not (0 <= a <= b < self.nrows):
             raise StoreError(f"delete range {a}..{b} out of range")
-        k = b - a + 1
-        ranges = self._ranges()
-        keep = [e for e in ranges if e["hi"] < a]
-        touched = [e for e in ranges if e["hi"] >= a]
-        old = self._read_files(touched)
-        r = F.col(ROWID)
-        body = old.where(r < a).unionByName(
-            old.where(r > b).withColumn(ROWID, (r - F.lit(k)).cast("long"))
-        )
-        rewrite_count = sum(e["rows"] for e in touched) - k
-        self._commit_pruned(keep, body, rewrite_count)
+        self._splice(a, b, None, 0)
 
     def add_records_from(self, src: "Table", start: int, n: int) -> None:
         """J2 ``H5TBadd_records_from`` (hl/H5TBpublic.nim:114-116): append
         rows ``start..start+n-1`` of ``src`` to this table. The slice read
         prunes to the files containing the range; the append writes only the
         new rows."""
+        if not (0 <= start and 0 <= n and start + n <= src.nrows):
+            raise StoreError(f"source rows {start}..{start + n - 1} out of range")
         self._flush_dv()
         # rebase the source positions onto the tail of this table
         new = (
@@ -3149,7 +3161,8 @@ class Table:
             .where(F.col(ROWID).between(start, start + n - 1))
             .withColumn(ROWID, (F.col(ROWID) - start + self.nrows).cast("long"))
         )
-        self._commit_pruned(self._ranges(), new, n)
+        self._check_payload(new)
+        self._splice(self.nrows, self.nrows - 1, new, n)
 
     # -- schema evolution (M15; hl/H5TBpublic.nim:120-125) -------------------
 
@@ -3231,19 +3244,18 @@ class Table:
 
     def update_rows(self, df: DataFrame) -> None:
         """Scatter update: replace the rows whose ``_rowid`` values appear in
-        ``df`` (final positions; payload schema = table schema). Positions
-        don't shift, so only the files containing a targeted ``_rowid``
-        rewrite — M13 coordinate-write (nimhdf5/datasets.nim:1117-1275) with
-        HDF5's touched-chunks-only behavior. Payloads are driver-sized (the
+        ``df`` (final positions; the other columns must match the table's
+        types, see :meth:`_check_payload`). Positions don't shift, so only
+        the files containing a targeted ``_rowid`` rewrite — M13
+        coordinate-write (nimhdf5/datasets.nim:1117-1275) with HDF5's
+        touched-chunks-only behavior. Payloads are driver-sized (the
         reference marshals them in memory too) and routed through the
         ``_collect_payload`` gate like every other mutation; the collected
         rows are re-localized so a nondeterministic payload plan cannot
-        diverge between the id probe and the written body. The touched-file
-        probe bisects the sorted ids against each file's [lo, hi] span —
-        O(files × log ids), not the linear O(files × ids) scan."""
+        diverge between the id probe and the written body. The touched files
+        come from :meth:`_replace_ids`' bisecting probe."""
+        self._check_payload(df)
         self._flush_dv()
-        import bisect
-
         rows = _collect_payload(df, "update")
         ids = [r[ROWID] for r in rows]
         if not ids:
@@ -3252,30 +3264,40 @@ class Table:
             raise StoreError("duplicate _rowid in update payload")
         if min(ids) < 0 or max(ids) >= self.nrows:
             raise StoreError(f"update _rowid out of range 0..{self.nrows - 1}")
-        ids_sorted = sorted(ids)
-        touched, keep = [], []
-        for e in self._ranges():
-            pos = bisect.bisect_left(ids_sorted, e["lo"])
-            if pos < len(ids_sorted) and ids_sorted[pos] <= e["hi"]:
-                touched.append(e)
-            else:
-                keep.append(e)
-        old = self._read_files(touched)
         pay_df = local_frame(self.store.spark, rows, df.schema)
-        body = self._drop_rowids(old, ids).unionByName(pay_df)
-        self._commit_pruned(keep, body, sum(e["rows"] for e in touched))
+        self._replace_ids(ids, pay_df, len(ids))
 
-    def _drop_rowids(self, df: DataFrame, ids: list) -> DataFrame:
-        """Filter out the rows whose ``_rowid`` is in ``ids`` via a broadcast
-        anti-join. An ``isin(ids)`` literal list costs Catalyst seconds of
+    def _replace_ids(self, ids: list, new: DataFrame, n: int) -> None:
+        """Commit the ``n`` rows of ``new`` in place of the rows whose
+        ``_rowid`` is in ``ids``; positions don't shift. The touched-file
+        probe bisects the sorted ids against each file's [lo, hi] span —
+        O(files × log ids), not the linear O(files × ids) scan — and every
+        file holding no id is hardlinked.
+
+        The ids are dropped from the touched files by a broadcast anti-join.
+        An ``isin(ids)`` literal list costs Catalyst seconds of
         scale-INDEPENDENT analyze/codegen time at payload sizes (measured
         6.7 s for 10k literals vs 0.5 s for the anti-join) and payloads can
         reach ``PAYLOAD_MAX_ROWS``; the anti-join plan is O(1) in expression
         size and broadcast-hash at any table scale."""
-        ids_df = local_frame(
-            self.store.spark, [(int(i),) for i in ids], f"{ROWID} long"
-        )
-        return df.join(F.broadcast(ids_df), on=ROWID, how="left_anti")
+        import bisect
+
+        ids_sorted = sorted(ids)
+        keep, touched = [], []
+        for e in self._ranges():
+            pos = bisect.bisect_left(ids_sorted, e["lo"])
+            hit = pos < len(ids_sorted) and ids_sorted[pos] <= e["hi"]
+            (touched if hit else keep).append(e)
+        body = new
+        if touched:
+            ids_df = local_frame(
+                self.store.spark, [(int(i),) for i in ids], f"{ROWID} long"
+            )
+            body = self._read_files(touched).join(
+                F.broadcast(ids_df), on=ROWID, how="left_anti"
+            ).unionByName(new)
+        rewrite_count = sum(e["rows"] for e in touched) - len(ids) + n
+        self._commit_pruned(keep, body, rewrite_count)
 
     def merge(self, df: DataFrame, key: str) -> dict:
         """MERGE / upsert by business key (extension surface: the reference's
@@ -3296,12 +3318,7 @@ class Table:
         if key not in self.df().columns or key == ROWID:
             raise StoreError(f"no such merge key: {key!r}")
         pay = df.drop(ROWID) if ROWID in df.columns else df
-        table_types = {k: v for k, v in self.df().dtypes if k != ROWID}
-        if dict(pay.dtypes) != table_types:
-            raise StoreError(
-                f"payload schema {dict(pay.dtypes)} does not match table "
-                f"schema {table_types}"
-            )
+        self._check_payload(pay)
         rows = _collect_payload(pay, "merge")
         keys = [r[key] for r in rows]
         if len(keys) != len(set(keys)):
@@ -3319,37 +3336,23 @@ class Table:
         )
         ids = [r[ROWID] for r in matched]
         matched_keys = {r[key] for r in matched}
-        upd = (
+        new = (
             cur.select(ROWID, key)
             .join(F.broadcast(pay_df), on=key, how="inner")
             .select(*cur.columns)
-        )
+        ) if ids else None
         ins_rows = sorted(
             (r for r in rows if r[key] not in matched_keys),
             key=lambda r: r[key],
         )
         n_ins = len(ins_rows)
-        ranges = self._ranges()
-        idset = set(ids)
-        touched = [
-            e for e in ranges
-            if any(e["lo"] <= i <= e["hi"] for i in idset)
-        ]
-        keep = [e for e in ranges if e not in touched]
-        body = None
-        if touched:
-            old = self._read_files(touched)
-            body = self._drop_rowids(old, ids).unionByName(upd)
         if n_ins:
             ins_df = local_frame(self.store.spark, ins_rows, pay.schema)
             tail, _ = self._new_rows(ins_df, self.nrows, n_ins)
-            body = tail if body is None else body.unionByName(
-                tail.select(*body.columns)
-            )
-        rewrite_count = sum(e["rows"] for e in touched) + n_ins
-        if rewrite_count == 0:  # empty payload — nothing to commit
+            new = tail if new is None else new.unionByName(tail)
+        if new is None:  # empty payload — nothing to commit
             return {"updated": 0, "inserted": 0}
-        self._commit_pruned(keep, body, rewrite_count)
+        self._replace_ids(ids, new, len(ids) + n_ins)
         return {"updated": len(ids), "inserted": n_ins}
 
     def changes(self, since: int) -> DataFrame:
@@ -3398,10 +3401,4 @@ class Table:
         new, n = self._new_rows(df, a, None)
         if n != b - a + 1:
             raise StoreError(f"update covers {b - a + 1} rows but got {n}")
-        ranges = self._ranges()
-        keep = [e for e in ranges if e["hi"] < a or e["lo"] > b]
-        touched = [e for e in ranges if e["hi"] >= a and e["lo"] <= b]
-        old = self._read_files(touched)
-        body = old.where(~F.col(ROWID).between(a, b)).unionByName(new)
-        rewrite_count = sum(e["rows"] for e in touched)
-        self._commit_pruned(keep, body, rewrite_count)
+        self._splice(a, b, new, n)

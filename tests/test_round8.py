@@ -106,6 +106,14 @@ def test_update_rows_bisect_probe_touches_right_files(spark):
     )
     n_files_before = len(t._ranges())
     assert n_files_before == 10
+
+    def inodes():
+        return {
+            e["name"]: os.stat(os.path.join(t.snapshot_path, e["name"])).st_ino
+            for e in t._ranges()
+        }
+
+    before = inodes()
     pay = spark.createDataFrame(
         [(5, 5, 999), (95, 95, 888)], f"{ROWID} long, k long, v long"
     )
@@ -113,6 +121,9 @@ def test_update_rows_bisect_probe_touches_right_files(spark):
     got = {r["k"]: r["v"] for r in t.df().collect()}
     assert got[5] == 999 and got[95] == 888 and got[50] == 100
     assert t.nrows == 100
+    after = inodes()
+    rewritten = [n for n, ino in before.items() if after.get(n) != ino]
+    assert len(rewritten) == 2, rewritten  # the files holding rows 5 and 95
 
 
 # --------------------------------------------------------------------------

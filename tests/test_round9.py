@@ -401,7 +401,9 @@ _OPS = st.lists(
 def test_store_mutation_sequences_match_list_model(spark, ops):
     path = "/tmp/nimhdfstore_scratch/round9_model"
     _shutil.rmtree(path, ignore_errors=True)
-    store = Store(spark, path)
+    # two rows per file: every op crosses file boundaries, so the splice's
+    # keep/rewrite split and its shifts are exercised, not just one file's
+    store = Store(spark, path, rows_per_file=2)
     nxt = 1000  # fresh-value counter (distinct from seeds)
     model = [i * 10 for i in range(8)]
     store.put(
@@ -450,6 +452,15 @@ def test_store_mutation_sequences_match_list_model(spark, ops):
             for r in t.df().orderBy("_rowid").select("v", "_rowid").collect()
         ]
         assert got == model, f"after {kind}: {got} != {model}"
+        # catalog spans: disjoint, from 0, gap-free over the raw rows, which
+        # are the logical rows plus any pending deferred deletes
+        spans = sorted((e["lo"], e["hi"], e["rows"]) for e in t._ranges())
+        pos = 0
+        for lo, hi, rows in spans:
+            assert lo == pos and hi - lo + 1 == rows, f"after {kind}: {spans}"
+            pos = hi + 1
+        pending = sum(b - a + 1 for a, b in t.deletion_vector)
+        assert pos == sum(r for *_, r in spans) == t.nrows + pending, spans
     # final rowids are the dense 0..n-1 rank (positions, not history)
     rid = [r["_rowid"] for r in t.df().orderBy("_rowid").collect()]
     assert rid == list(range(len(model)))

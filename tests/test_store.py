@@ -71,6 +71,30 @@ def test_schema_check_and_attrs(store, spark):
         t.del_attr("nope")
 
 
+@pytest.mark.parametrize("entry", ["update_rows", "add_records_from"])
+def test_widened_payload_raises_before_commit(spark, tmp_path, entry):
+    # a bigint payload into an int column would commit a snapshot of
+    # mixed-type files (kept int files beside a new bigint one) that every
+    # later read and compact() fails to scan
+    store = Store(spark, str(tmp_path / "store"), rows_per_file=2)
+    store.put("t", spark.createDataFrame([(i,) for i in range(5)], "k int"),
+              order_by=["k"])
+    t = store["t"]
+    current = t._meta["current"]
+    with pytest.raises(StoreError, match="does not match"):
+        if entry == "update_rows":
+            t.update_rows(
+                spark.createDataFrame([(1, 99)], f"{ROWID} long, k bigint")
+            )
+        else:
+            store.put("wide", spark.createDataFrame([(7,), (8,)], "k bigint"),
+                      order_by=["k"])
+            t.add_records_from(store["wide"], 0, 2)
+    assert t._meta["current"] == current
+    assert store["t"]._meta["current"] == current
+    assert sorted(r["k"] for r in store["t"].df().collect()) == list(range(5))
+
+
 def test_positional_reads(store, spark):
     store.put("p", particles(spark), order_by=["lati"])
     t = store["p"]
@@ -174,6 +198,33 @@ def test_mutations_reuse_untouched_files(spark, tmp_path):
     assert len(reused) >= 7, f"delete near tail should reuse the prefix: {len(reused)}"
     assert rows_of(t.row(55)) == [(901, 1, 100.0, 20.0)]
     assert t.nrows == 202
+
+    # insert: files wholly before the splice point are reused, the rest
+    # (every file holding a shifted position) rewritten
+    entries, before = t._ranges(), _inodes(t)
+    t.insert(45, particles(spark, n=2, start=902))
+    after = _inodes(t)
+    for e in entries:
+        assert (after.get(e["name"]) == before[e["name"]]) == (e["hi"] < 45), e
+    assert rows_of(t.slice(44, 47)) == [
+        (45, 1, 100.0, 20.0), (902, 1, 100.0, 20.0), (903, 1, 100.0, 20.0),
+        (46, 1, 100.0, 20.0)]
+
+    # merge: only the files holding a matched _rowid are rewritten; the
+    # unmatched payload row lands at the tail in a new file
+    ids = [r[ROWID] for r in t.df().where(F.col("lati").isin(10, 130)).collect()]
+    entries, before = t._ranges(), _inodes(t)
+    pay = spark.createDataFrame(
+        [(10, 2, 1.0, 2.0), (130, 2, 1.0, 2.0), (5000, 2, 1.0, 2.0)], SCHEMA
+    )
+    assert t.merge(pay, "lati") == {"updated": 2, "inserted": 1}
+    after = _inodes(t)
+    hit = [any(e["lo"] <= i <= e["hi"] for i in ids) for e in entries]
+    assert sum(hit) == 2
+    for e, h in zip(entries, hit):
+        assert (after.get(e["name"]) == before[e["name"]]) != h, e
+    assert rows_of(t.elements(ids + [-1])) == [
+        (10, 2, 1.0, 2.0), (130, 2, 1.0, 2.0), (5000, 2, 1.0, 2.0)]
 
 
 def test_nested_group_keys(store, spark):
@@ -350,6 +401,45 @@ def test_snapshot_names_parsed_only_by_snapdirs():
         and not helper.lineno <= no <= helper.end_lineno
     ]
     assert not stray, f"snapshot name parsed outside _SnapDirs: {stray}"
+
+
+def test_keep_lists_planned_only_by_splice_and_id_path():
+    """``Table._splice`` (positional mutations) and ``Table._replace_ids``
+    (``_rowid``-set mutations) are the store's only planners of a
+    keep/rewrite file split: only they, ``_flush_dv`` and the four full
+    rewrites commit through ``_commit_pruned``, and only the two planners
+    pass it a non-empty keep list."""
+    with open(store_mod.__file__) as f:
+        tree = ast.parse(f.read())
+    table = next(
+        n for n in tree.body if isinstance(n, ast.ClassDef) and n.name == "Table"
+    )
+    planners = {"_splice", "_replace_ids"}
+    full = {"_flush_dv", "compact", "add_field", "drop_field", "cluster_by"}
+
+    def commits(node):
+        return [
+            c for c in ast.walk(node)
+            if isinstance(c, ast.Call) and isinstance(c.func, ast.Attribute)
+            and c.func.attr == "_commit_pruned"
+        ]
+
+    seen, stray, callers = set(), [], set()
+    for m in table.body:
+        if not isinstance(m, ast.FunctionDef):
+            continue
+        for c in commits(m):
+            seen.add(id(c))
+            callers.add(m.name)
+            keep = c.args[0] if c.args else next(
+                k.value for k in c.keywords if k.arg == "keep"
+            )
+            empty = isinstance(keep, ast.List) and not keep.elts
+            if m.name not in planners and not (m.name in full and empty):
+                stray.append(f"Table.{m.name}:{c.lineno}")
+    stray += [f"store.py:{c.lineno}" for c in commits(tree) if id(c) not in seen]
+    assert not stray, f"keep/rewrite split planned outside the splice: {stray}"
+    assert callers == planners | full
 
 
 def test_catalog_format_known_only_to_store():
