@@ -8,9 +8,13 @@ predicate on the ``_rowid`` column; because store tables are written sorted by
 ``_rowid``, these predicates push down to Parquet row-group min/max pruning —
 the exact analog of HDF5 reading only the chunks intersecting a selection.
 
-All functions are pure: they build ``Column`` predicates / projections and
-never collect. Negative indices follow the reference's BackwardsIndex
-semantics (``^k`` = ``nrecords - k``) and need the caller to supply ``nrows``.
+All functions are pure and never collect. Each predicate takes the
+``_rowid`` values ``r`` it tests: by default the Spark column, giving a
+``Column``; or a numpy array of positions, giving a boolean mask (the store's
+driver reader, ``Table._read_local``). Positions are integers, so one
+definition is exact for both. Negative indices follow the reference's
+BackwardsIndex semantics (``^k`` = ``nrecords - k``) and need the caller to
+supply ``nrows``.
 """
 
 from __future__ import annotations
@@ -28,15 +32,20 @@ def _resolve(i: int, nrows: int) -> int:
     return i + nrows if i < 0 else i
 
 
-def point(i: int, nrows: int) -> Column:
+def _rowids(r):
+    """The ``_rowid`` values a predicate tests: the Spark column by default."""
+    return F.col(ROWID) if r is None else r
+
+
+def point(i: int, nrows: int, r=None):
     """Single row at position ``i`` (P1/P2, nimtables.nim:149-157)."""
-    return F.col(ROWID) == F.lit(_resolve(i, nrows))
+    return _rowids(r) == _resolve(i, nrows)
 
 
-def slice_range(a: int, b: int, nrows: int) -> Column:
+def slice_range(a: int, b: int, nrows: int, r=None):
     """Inclusive slice ``a..b`` (P3, nimtables.nim:159-171)."""
-    lo, hi = _resolve(a, nrows), _resolve(b, nrows)
-    return F.col(ROWID).between(F.lit(lo), F.lit(hi))
+    r = _rowids(r)
+    return (r >= _resolve(a, nrows)) & (r <= _resolve(b, nrows))
 
 
 def hyperslab(
@@ -44,7 +53,8 @@ def hyperslab(
     count: int,
     stride: int = 1,
     block: int = 1,
-) -> Column:
+    r=None,
+):
     """Strided rectangular selection on the row axis (P4).
 
     Mirrors HDF5's (offset, count, stride, block) 1-D hyperslab
@@ -53,16 +63,20 @@ def hyperslab(
     """
     if block > stride:
         raise ValueError("hyperslab block must be <= stride")
-    r = F.col(ROWID)
+    r = _rowids(r)
     upper = offset + (count - 1) * stride + block
-    cond = (r >= F.lit(offset)) & (r < F.lit(upper))
-    return cond & (((r - F.lit(offset)) % F.lit(stride)) < F.lit(block))
+    return (r >= offset) & (r < upper) & (((r - offset) % stride) < block)
 
 
-def element_set(coords: Sequence[int], nrows: int) -> Column:
+def element_set(coords: Sequence[int], nrows: int, r=None):
     """Explicit coordinate-set selection (P5, nimhdf5/datasets.nim:806-860)."""
     resolved = [_resolve(int(c), nrows) for c in coords]
-    return F.col(ROWID).isin(resolved)
+    r = _rowids(r)
+    if isinstance(r, Column):
+        return r.isin(resolved)
+    import numpy as np
+
+    return np.isin(r, resolved)
 
 
 def read_as(df: DataFrame, casts: dict[str, str], keep_rowid: bool = True) -> DataFrame:

@@ -23,7 +23,9 @@ commit writes a new snapshot sorted by ``_rowid`` and atomically swaps the
 ``_meta.json`` pointer (poor-man's ACID; readers of the old snapshot are
 unaffected). Sorted files give Parquet row-group min/max stats on ``_rowid``,
 so Catalyst prunes untouched row groups for every positional predicate — the
-Spark analog of HDF5 touching only intersecting chunks. Before writing, every
+Spark analog of HDF5 touching only intersecting chunks. Reads whose files hold
+few rows skip Spark: ``Table._read_local`` reads them with pyarrow into a
+LocalRelation, the mirror of the driver-direct writer. Before writing, every
 entry that takes caller rows checks their column names and types against the
 table's (``Table._check_payload``): a widened column would commit a snapshot
 no reader can scan.
@@ -2011,6 +2013,90 @@ class Table:
             reader = reader.schema(schema)
         return reader.parquet(*paths)
 
+    #: footer keys of files Spark wrote under LEGACY rebase modes: Spark
+    #: rebases their dates and timestamps from the hybrid Julian calendar on
+    #: read, pyarrow would not
+    _LEGACY_REBASE_KEYS = (
+        b"org.apache.spark.legacyDateTime", b"org.apache.spark.legacyINT96",
+    )
+
+    def _read_local(
+        self, entries: list[dict], span: tuple[int, int] | None = None,
+        rows=None, columns: Sequence[str] | None = None,
+    ) -> DataFrame | None:
+        """The table's driver reader, for reads whose files are small:
+        pyarrow reads the catalog ``entries`` (their ``_rowid`` values
+        within the raw ``span``, when given), the pending deletion vector
+        applies in arrow, the rows passing ``rows`` (a predicate of the
+        logical ``_rowid`` array) are kept and sorted by ``_rowid``, and
+        the frame is a ``local_frame`` LocalRelation: building and
+        collecting it fire no Spark job, where a Spark scan of a handful of
+        rows costs a job (three with ``orderBy``).
+
+        Returns None, for the Spark path, unless the files hold at most
+        ``Store.LOCAL_REWRITE_MAX_ROWS`` rows by the catalog's count (known
+        before any I/O), the table has a persisted schema whose types all
+        pass ``Store._local_type_ok``, ``columns`` name distinct stored
+        fields, and every file footer carries Spark's version key and no
+        legacy-rebase key (``_LEGACY_REBASE_KEYS``). Two such types stay
+        with Spark: ``binary``, because the row gate does not bound blob
+        bytes, and ``timestamp``, stored as INT96: pyarrow reads an INT96
+        value its own writer stored (the driver-direct writer's files)
+        through nanoseconds even when asked for microseconds, so a time
+        before 1677 comes back wrapped by 2^64 ns. ``timestamp_ntz`` and
+        ``date`` are plain INT64 micros and INT32 days and read exactly.
+        The frame's schema is the stored one made nullable, as Spark's
+        file scan gives it."""
+        schema = self._stored_schema()
+        if schema is None or (
+            sum(e["rows"] for e in entries) > self.store.LOCAL_REWRITE_MAX_ROWS
+        ):
+            return None
+        names = [ROWID, *columns] if columns else schema.names
+        types = {f.dataType.simpleString() for f in schema.fields}
+        if (
+            types & {"binary", "timestamp"}
+            or not all(Store._local_type_ok(t) for t in types)
+            or len(set(names)) < len(names)
+            or not set(names) <= set(schema.names)
+        ):
+            return None
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+        from pyspark.sql.pandas.types import to_arrow_schema
+        from pyspark.sql.types import ArrayType, StructField
+
+        def nullable(t):
+            return ArrayType(t.elementType) if isinstance(t, ArrayType) else t
+
+        out = StructType([
+            StructField(n, nullable(schema[n].dataType), True, schema[n].metadata)
+            for n in names
+        ])
+        arrow = to_arrow_schema(out)
+        filters = None if span is None else [
+            (ROWID, ">=", span[0]), (ROWID, "<=", span[1])
+        ]
+        parts = []
+        for e in entries:
+            part = pq.read_table(
+                os.path.join(self.snapshot_path, e["name"]), columns=names,
+                filters=filters, partitioning=None,
+            )
+            footer = part.schema.metadata or {}
+            if b"org.apache.spark.version" not in footer or any(
+                k in footer for k in self._LEGACY_REBASE_KEYS
+            ):
+                return None
+            parts.append(part.select(names).cast(arrow))
+        tbl = self._dv_overlay_arrow(
+            pa.concat_tables(parts) if parts else arrow.empty_table(),
+            self._meta.get("dv") or [],
+        )
+        if rows is not None:
+            tbl = tbl.filter(pa.array(rows(tbl.column(ROWID).to_numpy())))
+        return local_frame(self.store.spark, tbl.sort_by(ROWID), out)
+
     def _empty_df(self) -> DataFrame:
         """Typed empty frame for a zero-file snapshot: a table deleted down
         to nothing stays readable (reference parity — ``toSeq`` on
@@ -2090,8 +2176,9 @@ class Table:
     @staticmethod
     def _dv_overlay_arrow(raw, dv: list[list[int]]):
         """:meth:`_dv_overlay` for a ``pyarrow.Table`` of raw snapshot rows,
-        for readers outside Spark's planner (the Python DataSource's
-        executors): drop the rows at deleted raw positions and renumber the
+        for readers outside Spark's planner (the driver reader
+        :meth:`_read_local` and the Python DataSource's executors): drop
+        the rows at deleted raw positions and renumber the
         survivors by the deleted count below them. ``dv`` is the catalog's
         sorted, disjoint list of inclusive raw ranges."""
         if not dv:
@@ -2196,7 +2283,7 @@ class Table:
         a one-task-per-file cluster job collects one stats row per file —
         the rowid._keys_sorted_distributed shape, so at 100 TB the driver
         touches no footers at all."""
-        if column not in self.df().columns:
+        if column not in self._full_schema().names:
             raise StoreError(f"no such column: {column!r}")
         key = (self.snapshot_path, column)
         cached = Table._ZONE_CACHE.get(key)
@@ -2261,7 +2348,13 @@ class Table:
         pruning — stronger than row-group pruning because skipped files cost
         zero tasks and zero footer reads executor-side). Returns
         ``(frame, files_scanned, files_total)``; the residual predicate
-        still applies row-exactly to the survivors."""
+        still applies row-exactly to the survivors.
+
+        Surviving files that hold at most ``Store.LOCAL_REWRITE_MAX_ROWS``
+        rows are read on the driver (:meth:`_read_local`); the range
+        predicate is then Spark's own ``where`` over the LocalRelation,
+        which the optimizer folds, so the read fires no job and compares
+        values as the Spark scan does."""
         zones = self.zone_map(column)
         keep = [
             z["name"] for z in zones
@@ -2269,6 +2362,9 @@ class Table:
             or not (z["hi"] < lo or z["lo"] > hi)
         ]
         total = len(zones)
+        local = self._read_local(self._entries_named(keep))
+        if local is not None:
+            return local.where(F.col(column).between(lo, hi)), len(keep), total
         if not keep:
             empty = self.df().where(F.lit(False))
             return empty, 0, total
@@ -2304,7 +2400,7 @@ class Table:
         ask #8); rewriting commits still invalidate it."""
         self.store._require_writable()
         self._require_mutable()
-        if column not in self.df().columns or column == ROWID:
+        if column not in self._full_schema().names or column == ROWID:
             raise StoreError(f"cannot bloom-index column {column!r}")
         if bits % 8 or bits <= 0:
             raise StoreError("bits must be a positive multiple of 8")
@@ -2370,7 +2466,13 @@ class Table:
         (bloom positives are only probabilistic). The value is hashed by
         the same ``xxhash64`` expression the build ran, cast to the
         column's type first — a literal of a narrower type would hash
-        differently."""
+        differently.
+
+        Surviving files that hold at most ``Store.LOCAL_REWRITE_MAX_ROWS``
+        rows are read on the driver (:meth:`_read_local`); the equality is
+        then Spark's own ``where`` over the LocalRelation, which the
+        optimizer folds, so the read fires no job and compares values as
+        the Spark scan does."""
         idx = (self._meta.get("bloom") or {}).get(column)
         if idx is None:
             raise StoreError(f"no bloom index on column {column!r}")
@@ -2379,8 +2481,7 @@ class Table:
         fmap = self._bloom_files(idx)
         spark = self.store.spark
         bits, kk = int(idx["bits"]), int(idx["k"])
-        dtype = dict(self.df().dtypes)[column]
-        lit = F.lit(value).cast(dtype)
+        lit = F.lit(value).cast(self._full_schema()[column].dataType)
         # a one-row LocalRelation: the optimizer folds the projection into
         # it, so collect() fires no job
         positions = (
@@ -2401,6 +2502,9 @@ class Table:
             bm = bytes.fromhex(hexmap)
             if all(bm[p // 8] & (1 << (p % 8)) for p in positions):
                 keep.append(name)
+        local = self._read_local(self._entries_named(keep))
+        if local is not None:
+            return local.where(F.col(column) == value), len(keep), total
         if not keep:
             return self.df().where(F.lit(False)), 0, total
         paths = [os.path.join(self.snapshot_path, n) for n in keep]
@@ -2413,9 +2517,16 @@ class Table:
         catalog entry when present — schema inspection of a 100k-file table
         must not plan a full scan (round-9 verdict "what's wrong" #3); the
         df() fallback covers pre-persistence tables only."""
+        return StructType(
+            [f for f in self._full_schema().fields if f.name != ROWID]
+        )
+
+    def _full_schema(self) -> StructType:
+        """The stored schema, ``_rowid`` included, for name and type checks:
+        the persisted one plans no scan; ``df()``'s serves tables written
+        before schema persistence."""
         stored = self._stored_schema()
-        fields = stored.fields if stored is not None else self.df().schema.fields
-        return StructType([f for f in fields if f.name != ROWID])
+        return stored if stored is not None else self.df().schema
 
     def check_compatibility(self, expected: StructType) -> None:
         """``checkCompatiblity`` analog (nimtables.nim:133-138): field count,
@@ -2479,7 +2590,7 @@ class Table:
         part of the data model), ``masks`` maps columns to ``"sha256"``
         (format-preserving-ish, joinable) or ``"null"`` (redact)."""
         self._require_mutable()
-        cols = set(self.df().columns)
+        cols = set(self._full_schema().names)
         for c in list(columns or []) + list((masks or {}).keys()):
             if c not in cols:
                 raise StoreError(f"policy references unknown column {c!r}")
@@ -2489,9 +2600,14 @@ class Table:
         if row_filter is not None:
             # fail fast: force parse + analysis (F.expr alone defers the
             # parse until the plan is analyzed), catching syntax errors and
-            # unknown columns at policy-set time, not first read
+            # unknown columns at policy-set time, not first read; an empty
+            # frame of the stored schema analyzes it without a scan plan
+            typed = (
+                self.df() if self._stored_schema() is None
+                else self._empty_df()
+            )
             try:
-                self.df().where(F.expr(row_filter)).schema
+                typed.where(F.expr(row_filter)).schema
             except Exception as e:
                 raise StoreError(f"bad row_filter {row_filter!r}: {e}") from None
         pol: dict[str, Any] = {}
@@ -2574,7 +2690,8 @@ class Table:
         if check is not None:
             spec: dict = {"type": "check", "expr": check}
         elif unique is not None:
-            missing = [c for c in unique if c not in self.df().columns]
+            have = self._full_schema().names
+            missing = [c for c in unique if c not in have]
             if missing:
                 raise StoreError(f"unique constraint on unknown column(s): {missing}")
             spec = {"type": "unique", "cols": list(unique)}
@@ -2636,39 +2753,61 @@ class Table:
 
     # -- positional reads (P1-P9) -------------------------------------------
 
-    def _span_base(self, lo: int, hi: int) -> DataFrame:
-        """Raw rows for a LOGICAL position span [lo, hi]: catalog-pruned —
-        only files whose ``_rowid`` range can intersect are opened, so a
-        point read on a 100k-file table costs one task, not 100k footer
-        opens (the manifest-scale read path; round-8 verdict ask #3's
-        planning measurement showed the whole-directory read at 0.6 ms/file
-        = 60 s per slice at 100k files). A pending deletion vector widens
-        the raw span by the total deleted count (raw position >= logical
-        position, conservative); the caller's logical predicate applies
-        after the overlay renumbers. Small catalogs keep the whole-dir
-        ``df()`` read — its analyzed plan is cached per snapshot."""
+    def _span_base(
+        self, lo: int, hi: int, rows, columns: Sequence[str] | None = None,
+        order: bool = True,
+    ) -> DataFrame:
+        """Rows at LOGICAL positions in [lo, hi] that pass ``rows``, a
+        predicate of the ``_rowid`` values (an ``operators.positional``
+        one), projected to ``_rowid`` and ``columns`` when given.
+
+        The read is catalog-pruned: only files whose ``_rowid`` range can
+        intersect are opened, so a point read on a 100k-file table costs
+        one file, not 100k footer opens (round-8 verdict ask #3's planning
+        measurement showed the whole-directory read at 0.6 ms/file = 60 s
+        per slice at 100k files). A pending deletion vector widens the raw
+        span by the total deleted count (raw position >= logical position,
+        conservative); the predicate applies after the overlay renumbers.
+
+        Gate: when the opened files hold at most
+        ``Store.LOCAL_REWRITE_MAX_ROWS`` rows by the catalog's count,
+        :meth:`_read_local` reads them on the driver and the frame is a
+        sorted LocalRelation that fires no Spark job. Otherwise (or for
+        types it does not take) the read plans a Spark scan and, with
+        ``order``, ends in ``orderBy(_rowid)``; small catalogs (<= 8
+        files) keep the whole-dir ``df()`` read, whose analyzed plan is
+        cached per snapshot."""
         entries = self._ranges()
-        if len(entries) <= 8:
-            return self.df()
         raw_hi = hi + sum(e["rows"] for e in entries) - self.nrows
         keep = [e for e in entries if not (e["hi"] < lo or e["lo"] > raw_hi)]
-        if not keep:
-            return self.df().where(F.lit(False))
-        if len(keep) == len(entries):
-            return self.df()
-        return self._dv_overlay(self._read_files(keep))
+        local = self._read_local(keep, (lo, raw_hi), rows, columns)
+        if local is not None:
+            return local
+        if len(entries) <= 8 or len(keep) == len(entries):
+            df = self.df()
+        elif not keep:
+            df = self.df().where(F.lit(False))
+        else:
+            df = self._dv_overlay(self._read_files(keep))
+        df = df.where(rows(F.col(ROWID)))
+        if columns:
+            df = df.select(ROWID, *columns)
+        return df.orderBy(ROWID) if order else df
 
     def row(self, i: int) -> DataFrame:
         ri = self._resolve(i)
-        return self._span_base(ri, ri).where(positional.point(i, self.nrows))
+        n = self.nrows
+        return self._span_base(
+            ri, ri, lambda r: positional.point(i, n, r), order=False
+        )
 
     def slice(self, a: int, b: int) -> DataFrame:
         """Inclusive slice with negative-index support (table[a..b] /
         table[^k] semantics, nimtables.nim:154-171)."""
-        return (
-            self._span_base(self._resolve(a), self._resolve(b))
-            .where(positional.slice_range(a, b, self.nrows))
-            .orderBy(ROWID)
+        n = self.nrows
+        return self._span_base(
+            self._resolve(a), self._resolve(b),
+            lambda r: positional.slice_range(a, b, n, r),
         )
 
     def __getitem__(self, key):
@@ -2692,7 +2831,7 @@ class Table:
             start = max(0, min(start, n))
             stop = max(0, min(stop, n))
             if stop <= start:
-                return self.df().where(F.lit(False)).orderBy(ROWID)
+                return self.elements([])
             if key.step not in (None, 1):
                 cnt = math.ceil((stop - start) / key.step)
                 return self.hyperslab(start, cnt, stride=key.step)
@@ -2705,22 +2844,20 @@ class Table:
         columns: Sequence[str] | None = None,
     ) -> DataFrame:
         span_hi = offset + max(count - 1, 0) * stride + block - 1
-        df = self._span_base(offset, span_hi).where(
-            positional.hyperslab(offset, count, stride, block)
+        return self._span_base(
+            offset, span_hi,
+            lambda r: positional.hyperslab(offset, count, stride, block, r),
+            columns,
         )
-        if columns:
-            df = df.select(ROWID, *columns)
-        return df.orderBy(ROWID)
 
     def elements(self, coords: Sequence[int]) -> DataFrame:
         rs = [self._resolve(c) for c in coords]
-        base = (
-            self._span_base(min(rs), max(rs)) if rs
-            else self.df().where(F.lit(False))
+        n = self.nrows
+        # no coordinates: the empty span [0, -1]
+        return self._span_base(
+            min(rs, default=0), max(rs, default=-1),
+            lambda r: positional.element_set(coords, n, r),
         )
-        return base.where(
-            positional.element_set(coords, self.nrows)
-        ).orderBy(ROWID)
 
     def read_as(self, casts: dict[str, str]) -> DataFrame:
         return positional.read_as(self.df().orderBy(ROWID), casts)
@@ -2737,7 +2874,8 @@ class Table:
     def _check_payload(self, df: DataFrame) -> None:
         """The one payload type check, run by every entry that writes caller
         rows (append, insert, update, update_rows, merge, add_records_from)
-        before anything is committed.
+        before anything is committed, the flush of a pending deletion
+        vector included: a rejected payload leaves the table as it was.
 
         The payload schema must match the table's exactly (name AND type per
         column, ``_rowid`` aside): a silent type widening (int32 table, int64
@@ -2767,8 +2905,8 @@ class Table:
             )
 
     def _new_rows(self, df: DataFrame, start: int, n: int | None) -> tuple[DataFrame, int]:
-        """Position incoming rows at ``start..start+n-1``, after
-        :meth:`_check_payload`.
+        """Position incoming rows at ``start..start+n-1``; the caller has
+        run :meth:`_check_payload`.
 
         If the frame carries a ``_rowid`` it is re-based onto the splice
         point (caller-defined local order). Otherwise the rows are numbered
@@ -2777,7 +2915,6 @@ class Table:
         mutation payloads are driver-built and small; bulk loads go
         through :meth:`Store.put`.
         """
-        self._check_payload(df)
         if ROWID in df.columns:
             if n is None:
                 n = df.count()
@@ -2812,6 +2949,11 @@ class Table:
         if files is None:  # meta written before file catalogs existed
             files = scan_rowid_ranges(self.snapshot_path)
         return files
+
+    def _entries_named(self, names: list[str]) -> list[dict]:
+        """The catalog entries of the files ``names``."""
+        wanted = set(names)
+        return [e for e in self._ranges() if e["name"] in wanted]
 
     def _read_files(self, entries: list[dict]) -> DataFrame:
         paths = [os.path.join(self.snapshot_path, e["name"]) for e in entries]
@@ -3093,6 +3235,7 @@ class Table:
                 # fail fast BEFORE planning: _new_rows analyzes self.df(),
                 # which reads the (possibly pruned) planned-from snapshot
                 self._check_fresh()
+                self._check_payload(df)
                 self._flush_dv()
                 start = self.nrows
                 new, k = self._new_rows(df, start, n)
@@ -3129,6 +3272,7 @@ class Table:
         splice point on are rewritten. Unlike the reference, the count is
         updated (its in-memory ``nrecords`` forgets to bump — SURVEY §2.9
         quirk) and position 0 is insertable (no ``assert n>0``)."""
+        self._check_payload(df)
         self._flush_dv()
         i = self._resolve(i)
         if not 0 <= i <= self.nrows:
@@ -3154,14 +3298,15 @@ class Table:
         new rows."""
         if not (0 <= start and 0 <= n and start + n <= src.nrows):
             raise StoreError(f"source rows {start}..{start + n - 1} out of range")
-        self._flush_dv()
-        # rebase the source positions onto the tail of this table
+        # rebase the source positions onto the tail of this table (a flush
+        # keeps nrows: it changes raw positions, not logical ones)
         new = (
             src.df()
             .where(F.col(ROWID).between(start, start + n - 1))
             .withColumn(ROWID, (F.col(ROWID) - start + self.nrows).cast("long"))
         )
         self._check_payload(new)
+        self._flush_dv()
         self._splice(self.nrows, self.nrows - 1, new, n)
 
     # -- schema evolution (M15; hl/H5TBpublic.nim:120-125) -------------------
@@ -3171,7 +3316,7 @@ class Table:
         change touches every file by definition — full rewrite is inherent,
         not an implementation shortcut."""
         self._flush_dv()
-        if name in self.df().columns:
+        if name in self._full_schema().names:
             raise StoreError(f"field exists: {name!r}")
         body = self.df().withColumn(name, F.lit(default).cast(dtype))
         self._commit_pruned([], body, self.nrows)
@@ -3179,7 +3324,7 @@ class Table:
     def drop_field(self, name: str) -> None:
         """M15 ``H5TBdelete_field``: remove a column (never ``_rowid``)."""
         self._flush_dv()
-        if name == ROWID or name not in self.df().columns:
+        if name == ROWID or name not in self._full_schema().names:
             raise StoreError(f"cannot drop field {name!r}")
         self._commit_pruned([], self.df().drop(name), self.nrows)
 
@@ -3202,7 +3347,7 @@ class Table:
         are analyzed (vs. one job per column). Values widen to double."""
         if not columns:
             raise StoreError("analyze needs at least one column")
-        have = set(self.df().columns)
+        have = set(self._full_schema().names)
         missing = [c for c in columns if c not in have]
         if missing:
             raise StoreError(f"no such column(s): {missing}")
@@ -3314,11 +3459,11 @@ class Table:
         everything else hardlinks into the new snapshot, exactly the
         update_rows pruning. One snapshot commit covers both legs, so readers
         never observe the update without the insert."""
-        self._flush_dv()
-        if key not in self.df().columns or key == ROWID:
+        if key not in self._full_schema().names or key == ROWID:
             raise StoreError(f"no such merge key: {key!r}")
         pay = df.drop(ROWID) if ROWID in df.columns else df
         self._check_payload(pay)
+        self._flush_dv()
         rows = _collect_payload(pay, "merge")
         keys = [r[key] for r in rows]
         if len(keys) != len(set(keys)):
@@ -3393,6 +3538,7 @@ class Table:
         ``a..b`` rewrite — a point update on a 100 TB table moves one file.
         The replacement must cover the region exactly (the reference leaves
         shape vs data.len unchecked — quirk not kept)."""
+        self._check_payload(df)
         self._flush_dv()
         a = self._resolve(i)
         b = a if b is None else self._resolve(b)

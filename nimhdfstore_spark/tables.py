@@ -186,10 +186,16 @@ def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
     Sequence rows bind positionally and must match the schema width;
     Mapping rows bind by name and must carry exactly the schema's field
     names (a short row would silently read null, an extra key would be
-    silently dropped).
+    silently dropped). ``rows`` may also be a ``pyarrow.Table`` with the
+    schema's field names, e.g. rows a reader already holds in arrow. It is
+    cast to ``to_arrow_schema(schema)``, so a naive arrow timestamp for a
+    ``timestamp`` field reads as UTC; it always takes the arrow route, so
+    it must hold no map of timestamps or nested types.
     """
     from collections.abc import Mapping
 
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
     from pyspark.sql.types import StructType, _parse_datatype_string
 
     if isinstance(schema, str):
@@ -197,6 +203,8 @@ def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
         if not isinstance(parsed, StructType):  # pragma: no cover
             raise ValueError(f"expected a struct schema, got {parsed}")
         schema = parsed
+    if isinstance(rows, pa.Table):
+        return spark.createDataFrame(rows.cast(to_arrow_schema(schema)), schema)
     names = schema.names
 
     def _as_dict(r):

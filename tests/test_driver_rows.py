@@ -275,10 +275,16 @@ def test_ntz_table_keeps_its_type_through_mutations(
     df = t.df()
     assert dict(df.dtypes)["v"] == "timestamp_ntz"
     assert [tuple(r) for r in df.orderBy(ROWID).select("k", "v").collect()] == want
-    for i in (3, 12, 30, len(want) - 1):
-        r = t.row(i)
-        assert dict(r.dtypes)["v"] == "timestamp_ntz"
-        assert [(x["k"], x["v"]) for x in r.collect()] == [want[i]]
+    for gate in (Store.LOCAL_REWRITE_MAX_ROWS, 0):
+        with pytest.MonkeyPatch.context() as m:
+            m.setattr(Store, "LOCAL_REWRITE_MAX_ROWS", gate)
+            for i in (3, 12, 30, len(want) - 1):
+                r = t.row(i)
+                assert dict(r.dtypes)["v"] == "timestamp_ntz"
+                assert [(x["k"], x["v"]) for x in r.collect()] == [want[i]]
+            s = t.slice(10, 35)
+            assert dict(s.dtypes)["v"] == "timestamp_ntz"
+            assert [(x["k"], x["v"]) for x in s.collect()] == want[10:36]
     # the local file alone, through the store and through schema inference
     entry = next(e for e in t._ranges() if "-local-" in e["name"])
     path = os.path.join(t.snapshot_path, entry["name"])

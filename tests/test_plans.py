@@ -1,7 +1,11 @@
 """Physical-plan quality gates — the 100 TB design assertions (SURVEY §4):
 positional predicates must reach the Parquet scan of store tables (row-group
 pruning), projections must prune columns, and small sides must broadcast.
-A plan regression here is a scale bug even when results stay correct."""
+A plan regression here is a scale bug even when results stay correct.
+
+Store reads whose files fit the driver read them in pyarrow instead
+(``Table._read_local``), so the store tests set that gate to 0: the plans
+checked are those of reads above it."""
 
 from __future__ import annotations
 
@@ -26,7 +30,13 @@ def li_store(spark, sf_dir, tmp_path_factory):
 from nimhdfstore_spark.plans import executed_plan as _plan  # noqa: E402
 
 
-def test_rowid_predicate_pushdown(li_store):
+@pytest.fixture()
+def spark_reads(monkeypatch):
+    """Store reads take the Spark path, as reads above the driver gate do."""
+    monkeypatch.setattr(Store, "LOCAL_REWRITE_MAX_ROWS", 0)
+
+
+def test_rowid_predicate_pushdown(li_store, spark_reads):
     t = li_store["lineitem"]
     plan = _plan(t.slice(100, 199))
     assert "PushedFilters" in plan and "_rowid" in plan.split("PushedFilters")[1], (
@@ -34,7 +44,7 @@ def test_rowid_predicate_pushdown(li_store):
     )
 
 
-def test_column_pruning(li_store):
+def test_column_pruning(li_store, spark_reads):
     t = li_store["lineitem"]
     df = t.hyperslab(0, 10, stride=5, columns=["l_quantity"])
     plan = _plan(df)
@@ -45,7 +55,7 @@ def test_column_pruning(li_store):
     )
 
 
-def test_point_read_prunes_row_groups(li_store):
+def test_point_read_prunes_row_groups(li_store, spark_reads):
     # point read must be a scan-with-filter, not a global sort/window
     t = li_store["lineitem"]
     plan = _plan(t.row(4711))

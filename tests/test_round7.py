@@ -284,6 +284,13 @@ def test_local_write_old_timestamps_read_like_spark_files(spark, mode):
     spark.conf.set(key, mode)
     try:
         assert [r["ts"] for r in t.df().orderBy(ROWID).collect()] == old
+        # positional reads, on the driver and through Spark alike
+        for gate in (Store.LOCAL_REWRITE_MAX_ROWS, 0):
+            with pytest.MonkeyPatch.context() as m:
+                m.setattr(Store, "LOCAL_REWRITE_MAX_ROWS", gate)
+                assert [r["ts"] for r in t.slice(0, -1).collect()] == old
+                for i, v in enumerate(old):
+                    assert [r["ts"] for r in t.row(i).collect()] == [v]
     finally:
         spark.conf.set(key, before)
 

@@ -452,6 +452,20 @@ def test_store_mutation_sequences_match_list_model(spark, ops):
             for r in t.df().orderBy("_rowid").select("v", "_rowid").collect()
         ]
         assert got == model, f"after {kind}: {got} != {model}"
+        # positional reads agree with the model on the driver path and,
+        # with the gate at 0, on the Spark path
+        picks = sorted({0, len(model) // 2, len(model) - 1}) if model else []
+        for gate in (Store.LOCAL_REWRITE_MAX_ROWS, 0):
+            with pytest.MonkeyPatch.context() as m:
+                m.setattr(Store, "LOCAL_REWRITE_MAX_ROWS", gate)
+                reads = {
+                    "slice": (t.slice(0, -1), model),
+                    "row": (t.row(-1), model[-1:]),
+                    "elements": (t.elements(picks), [model[i] for i in picks]),
+                }
+                for name, (df, want) in reads.items():
+                    got = [r["v"] for r in df.collect()]
+                    assert got == want, f"after {kind}, {name}, gate {gate}"
         # catalog spans: disjoint, from 0, gap-free over the raw rows, which
         # are the logical rows plus any pending deferred deletes
         spans = sorted((e["lo"], e["hi"], e["rows"]) for e in t._ranges())

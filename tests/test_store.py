@@ -15,6 +15,7 @@ from pyspark.sql.types import (
     DoubleType, LongType, StructField, StructType,
 )
 
+from nimhdfstore_spark.plans import executed_plan
 from nimhdfstore_spark.rowid import ROWID, with_rowid
 from nimhdfstore_spark import store as store_mod
 from nimhdfstore_spark.store import Store, StoreError, Table
@@ -325,8 +326,9 @@ def _next_job_id(spark) -> int:
 def test_reads_plan_without_jobs(spark, tmp_path):
     """Reads plan under the persisted schema, so building a positional,
     zone-map or bloom read fires no Spark job (an inferring Parquet read
-    runs a footer job per call), and a point read executes in one job.
-    Bloom positions hashed on the driver match the build's for each type."""
+    runs a footer job per call). A point read whose file fits the driver
+    is a LocalRelation and executes in no job either. Bloom positions
+    hashed on the driver match the build's for each type."""
     cols = ["k", "n", "v", "s"]
     rows = [(i, i % 5, float(i), f"s{i % 7}") for i in range(100)]
     store = Store(spark, str(tmp_path / "store"), rows_per_file=8)
@@ -348,9 +350,11 @@ def test_reads_plan_without_jobs(spark, tmp_path):
         before = _next_job_id(spark)
         build()
         assert _next_job_id(spark) == before, name
+    point = t.row(50)
+    assert "LocalTableScan" in executed_plan(point)
     before = _next_job_id(spark)
-    assert [r["k"] for r in t.row(50).collect()] == [50]
-    assert _next_job_id(spark) - before == 1
+    assert [r["k"] for r in point.collect()] == [50]
+    assert _next_job_id(spark) == before
 
     for column, value in (("k", 42), ("n", 3), ("v", 42.0), ("s", "s3")):
         got, scanned, total = t.lookup_eq(column, value)
@@ -382,6 +386,32 @@ def test_parquet_reads_only_inside_table_scan():
         and not scan.lineno <= no <= scan.end_lineno
     ]
     assert not stray, f"read.parquet( outside Table._scan: {stray}"
+
+
+def test_pyarrow_table_reads_only_inside_read_local():
+    """``Table._read_local`` is the store's one pyarrow reader of data
+    files: no other code in ``store.py`` calls ``pq.read_table(``."""
+    path = store_mod.__file__
+    with open(path) as f:
+        src = f.read()
+    table = next(
+        n for n in ast.parse(src).body
+        if isinstance(n, ast.ClassDef) and n.name == "Table"
+    )
+    reader = next(
+        n for n in table.body
+        if isinstance(n, ast.FunctionDef) and n.name == "_read_local"
+    )
+    hits = [
+        no for no, line in enumerate(src.splitlines(), 1)
+        if "pq.read_table(" in line
+    ]
+    assert hits, "no pq.read_table( in store.py"
+    stray = [
+        f"{os.path.basename(path)}:{no}" for no in hits
+        if not reader.lineno <= no <= reader.end_lineno
+    ]
+    assert not stray, f"pq.read_table( outside Table._read_local: {stray}"
 
 
 def test_snapshot_names_parsed_only_by_snapdirs():
