@@ -11,6 +11,7 @@ import json
 import os
 import time
 
+import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import Row
@@ -114,22 +115,35 @@ def test_append_of_driver_rows_fires_no_jobs(spark, tmp_path):
     ],
 )
 def test_rewrite_body_scans_local_relation(spark, tmp_path, monkeypatch, op, schema):
-    """Even a Python-RDD-backed payload is re-localized: the body the
-    commit writes unions the touched files with a LocalTableScan."""
+    """Even a Python-RDD-backed payload is re-localized. Under the driver
+    gate the body the commit writes is a pyarrow table the driver built
+    from the touched file and the payload; a timestamp table keeps the
+    Spark body, which unions the touched file with a LocalTableScan."""
     t = _table(spark, tmp_path, schema=schema)
+    touched = sum(e["rows"] for e in t._ranges() if e["hi"] >= 10)
+    if op == "update":  # nothing shifts: only the file holding row 10
+        touched = next(e["rows"] for e in t._ranges() if e["lo"] <= 10 <= e["hi"])
     seen = []
     real = type(t)._commit_pruned
 
     def spy(self, keep, rewrite, *args, **kwargs):
-        seen.append(executed_plan(rewrite))
+        seen.append(
+            rewrite if isinstance(rewrite, pa.Table) else executed_plan(rewrite)
+        )
         return real(self, keep, rewrite, *args, **kwargs)
 
     monkeypatch.setattr(type(t), "_commit_pruned", spy)
     payload = spark.createDataFrame([(500, VALUE[schema](5))], schema)
     getattr(t, op)(10, payload)
-    (plan,) = seen
-    assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
-    assert "FileScan" in plan, plan  # the touched file really is unioned
+    (body,) = seen
+    if schema == TS_SCHEMA:
+        assert "LocalTableScan" in body and "ExistingRDD" not in body, body
+        assert "FileScan" in body, body  # the touched file really is unioned
+    else:
+        assert isinstance(body, pa.Table), body
+        # the touched file's rows, less the replaced one, plus the payload
+        assert body.num_rows == touched + (op == "insert"), body
+        assert 500 in body.column("k").to_pylist()
     assert [r["k"] for r in t.row(10).collect()] == [500]
 
 

@@ -198,7 +198,8 @@ def test_bloom_prunes_uncorrelated_layout(spark, tmp_path):
 def test_bloom_index_extends_on_append_stale_on_rewrite(spark, tmp_path):
     """Round-9: an append-only commit EXTENDS the bloom index by scanning
     only the new files (rebuilding over all files per append would be a
-    full-scan tax at 100 TB); a rewriting commit still invalidates it."""
+    full-scan tax at 100 TB); a rewriting commit carries the entries of the
+    files it keeps and extends the index over the ones it writes."""
     st = Store(spark, str(tmp_path / "bl2"), rows_per_file=100)
     df = spark.range(300).select(
         F.col("id").cast("long").alias(ROWID), F.col("id").alias("k")
@@ -224,13 +225,14 @@ def test_bloom_index_extends_on_append_stale_on_rewrite(spark, tmp_path):
     assert [r["k"] for r in out.collect()] == [3] and scanned < total
     out2, s2, _ = t.lookup_eq("k", 302)
     assert [r["k"] for r in out2.collect()] == [302] and s2 < total
-    # a rewriting commit (file contents change) still drops the index
+    # a rewriting commit carries the index too: it survives and matches a
+    # fresh build over the new snapshot
     t.delete(0)
-    try:
-        t.lookup_eq("k", 3)
-        raise AssertionError("stale bloom index survived a rewrite")
-    except StoreError:
-        pass
+    carried = t._bloom_files(t._meta["bloom"]["k"])
+    out3, _, _ = t.lookup_eq("k", 3)
+    assert [(r[ROWID], r["k"]) for r in out3.collect()] == [(2, 3)]
+    t.build_bloom("k")
+    assert t._bloom_files(t._meta["bloom"]["k"]) == carried
 
 
 def test_bloom_respects_deletion_vector(spark, tmp_path):
