@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 from nimhdfstore_spark.queries import query, sweep_rotation
 from nimhdfstore_spark.queries.core import SCRATCH_ROOT
 from nimhdfstore_spark.rowid import ROWID
-from nimhdfstore_spark.tables import load, local_frame, rowid_over
+from nimhdfstore_spark.tables import load, local_frame, read_parquet, rowid_over
 
 
 # Which leg's rows go back to the driver's DuckDB hash-match, rotated per
@@ -437,7 +437,7 @@ def q33(spark, sf_dir):
         )
         shutil.rmtree(path, ignore_errors=True)
         src.write.partitionBy("event_type").parquet(path)
-        back = spark.read.parquet(path)
+        back = read_parquet(spark, path)
         out = back.where(F.col("event_type") == "click").select(
             "event_id", "ts", "user_id", "event_type", "value"
         )

@@ -255,8 +255,8 @@ def sorted_parquet_bases(
     confirm within-row-group order. With ``spark`` given, (b) runs as a
     distributed per-file job (``_keys_sorted_distributed``); without it
     (pure-library callers, tests) the driver loops the same per-file check.
-    Callers memoize the verdict (tables._SORTED_CACHE) — data directories
-    here are immutable snapshots, so it runs once per (path, keys).
+    Callers memoize the verdict (tables._SORTED_CACHE) per (path, keys)
+    and the files' signature, so it re-runs only when the files change.
     """
     import glob as _glob
 
@@ -348,23 +348,26 @@ def rowid_from_sorted_parquet(
     rank = per-file base offset (driver prefix-sum over footer row counts) +
     the scan-provided ``_metadata.row_index``. The pattern a 1000-executor
     cluster wants: rowid becomes a pure projection on the scan."""
-    df = spark.read.parquet(path)
+    from nimhdfstore_spark.tables import local_frame, read_parquet
+
+    df = read_parquet(spark, path)
     cols = df.columns
     if len(bases) == 1:
         out = df.select(
             F.col("_metadata.row_index").cast("long").alias(ROWID), *cols
         )
         return out
-    from nimhdfstore_spark.tables import local_frame
-
+    # joined by file name: ``bases`` lists one directory's files, and
+    # ``_metadata.file_path`` is a URI whose spelling (``file:/…``) no
+    # local path reproduces
     base_df = local_frame(
         spark,
-        [(f"file://{f}" if not f.startswith("file:") else f, b) for f, b, _ in bases],
-        "__fp string, __base long",
+        [(os.path.basename(f), b) for f, b, _ in bases],
+        "__fn string, __base long",
     )
-    m = df.select(F.col("_metadata.file_path").alias("__fp"),
+    m = df.select(F.col("_metadata.file_name").alias("__fn"),
                   F.col("_metadata.row_index").alias("__ri"), *cols)
-    joined = m.join(F.broadcast(base_df), "__fp")
+    joined = m.join(F.broadcast(base_df), "__fn")
     return joined.select(
         (F.col("__base") + F.col("__ri")).cast("long").alias(ROWID), *cols
     )

@@ -4,11 +4,13 @@ The reference reads packed compound-type records with ``H5TBread_records``
 (nimtables.nim:140-171), and HDF5 itself only decompresses the chunks a
 selection touches. The Spark-side mirror: the *driver* opens the file once
 for catalog metadata (shape, dtype, chunk size — the ``H5TBget_table_info``
-analog, nimtables.nim:111-131), plans **chunk-aligned record ranges** as
-input partitions, and executors each open the file independently and read
-only their range — one Spark partition per chunk-aligned range, so no chunk
-is decompressed by two tasks. The write leg is a single-writer job (HDF5
-has no parallel write without MPI).
+analog, nimtables.nim:111-131) and plans **chunk-aligned record ranges**, so
+no chunk is decompressed by two reads. A table of at most
+``Store.LOCAL_REWRITE_MAX_ROWS`` records is read on the driver, range by
+range, into a LocalRelation: no Spark job and no Python worker. A larger
+one becomes one Spark partition per range, and executors each open the file
+independently and read only their range. The write leg is a single-writer
+job (HDF5 has no parallel write without MPI).
 
 File I/O goes through ``h5lite``, the package's pure-Python implementation
 of the format subset the reference's tables use (contiguous + chunked/gzip
@@ -135,6 +137,58 @@ def table_info(path: str, dataset: str) -> dict:
     }
 
 
+def _decoder(schema: StructType):
+    """Record array → pandas frame of ``schema``'s columns: the one decoder
+    of both read paths. HDF5 strings surface as bytes (fixed ``S*`` and
+    vlen alike); Arrow needs str."""
+    names = schema.names
+    str_cols = {f.name for f in schema.fields if isinstance(f.dataType, StringType)}
+
+    def to_frame(rec):
+        import pandas as pd
+
+        cols = {}
+        for n in names:
+            v = rec[n]
+            if n in str_cols and v.dtype.kind in ("S", "O"):
+                v = [x.decode("utf-8") if isinstance(x, bytes) else x for x in v]
+            cols[n] = v
+        return pd.DataFrame(cols)
+
+    return to_frame
+
+
+def _read_local(spark: SparkSession, path: str, dataset: str, parts, schema):
+    """The planned ``parts`` read on the driver as one ``pyarrow.Table`` of
+    ``to_arrow_schema(schema)``. Each range is decoded by :func:`_decoder`
+    and converted column by column as ``mapInPandas`` converts its output
+    (``ArrowStreamPandasSerializer._create_array`` with ``arrow_cast``),
+    under the session's ``convertToArrowArraySafely``: with it off, a
+    uint64 above 2^63 wraps as it does on executors; with it on, both paths
+    raise."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.serializers import ArrowStreamPandasSerializer
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    conf = spark.conf
+    safe = conf.get("spark.sql.execution.pandas.convertToArrowArraySafely") == "true"
+    ser = ArrowStreamPandasSerializer(conf.get("spark.sql.session.timeZone"), safe, False)
+    arrow = to_arrow_schema(schema)
+    to_frame = _decoder(schema)
+    tables = []
+    for start, stop in parts:
+        pdf = to_frame(h5lite.read_range(path, dataset, start, stop))
+        tables.append(pa.Table.from_arrays(
+            [
+                ser._create_array(pdf[f.name], t.type, spark_type=f.dataType,
+                                  arrow_cast=True)
+                for f, t in zip(schema.fields, arrow)
+            ],
+            schema=arrow,
+        ))
+    return pa.concat_tables(tables) if tables else arrow.empty_table()
+
+
 def read_hdf5_table(
     spark: SparkSession,
     path: str,
@@ -143,41 +197,34 @@ def read_hdf5_table(
     target_records: int = 4_000_000,
     _info: dict | None = None,
 ) -> DataFrame:
-    """Parallel scan of an HDF5 compound table: one task per chunk-aligned
-    record range; each executor reads only its hyperslab (mirrors
-    ``H5TBread_records`` + chunk intersection). Column projection keeps
-    only the requested fields of each read range, the analog of
-    ``H5TBread_fields_name`` (P8, hl/H5TBpublic.nim:73-76)."""
+    """Scan of an HDF5 compound table over chunk-aligned record ranges
+    (mirrors ``H5TBread_records`` + chunk intersection). A table of at most
+    ``Store.LOCAL_REWRITE_MAX_ROWS`` records (strings and vlen arrays
+    included) is read on the driver, range by range, and returned as a
+    LocalRelation: building and collecting it fire no job. A larger one
+    reads in parallel, one task per range, each executor reading only its
+    hyperslab; both paths decode through one decoder and convert to arrow
+    alike. Column projection keeps only the requested fields of each read
+    range, the analog of ``H5TBread_fields_name`` (P8,
+    hl/H5TBpublic.nim:73-76)."""
+    from nimhdfstore_spark.store import Store
+
     info = _info if _info is not None else table_info(path, dataset)
     schema = info["schema"]
     if columns:
         keep = [f for f in schema.fields if f.name in set(columns)]
         schema = StructType(keep)
-    names = [f.name for f in schema.fields]
     parts = plan_partitions(info["nrecords"], info["chunk_size"], target_records)
+    if info["nrecords"] <= Store.LOCAL_REWRITE_MAX_ROWS:
+        return local_frame(
+            spark, _read_local(spark, path, dataset, parts, schema), schema
+        )
+    to_frame = _decoder(schema)
     spec = local_frame(spark, parts, "start long, stop long").repartition(
         max(1, len(parts))
     )
 
-    str_cols = {f.name for f in schema.fields if isinstance(f.dataType, StringType)}
-
     def read_range(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        def to_frame(rec) -> pd.DataFrame:
-            cols = {}
-            for n in names:
-                v = rec[n]
-                if n in str_cols and v.dtype.kind in ("S", "O"):
-                    # HDF5 strings surface as bytes (fixed S* and
-                    # vlen alike); Arrow needs str
-                    v = [
-                        x.decode("utf-8") if isinstance(x, bytes) else x
-                        for x in v
-                    ]
-                cols[n] = v
-            return pd.DataFrame(cols)
-
         for pdf in batches:
             for start, stop in zip(pdf["start"], pdf["stop"]):
                 yield to_frame(
@@ -328,11 +375,13 @@ def hdf5_to_store(
     order_by: Sequence[str] | None = None,
     **put_kwargs,
 ):
-    """Migrate one HDF5 compound table into the Parquet store: parallel
-    chunk-aligned read (``read_hdf5_table``) → ``Store.put``. ``order_by``
-    defaults to the first column, mirroring how the reference's tables are
-    keyed by their leading field in practice; pass the real unique key for
-    stable positions. Returns the new :class:`Table`."""
+    """Migrate one HDF5 compound table into the Parquet store: chunk-aligned
+    read (``read_hdf5_table``: on the driver up to
+    ``Store.LOCAL_REWRITE_MAX_ROWS`` records, in parallel above) →
+    ``Store.put``. ``order_by`` defaults to the first column, mirroring how
+    the reference's tables are keyed by their leading field in practice;
+    pass the real unique key for stable positions. Returns the new
+    :class:`Table`."""
     info = table_info(path, dataset)
     df = read_hdf5_table(store.spark, path, dataset, _info=info)
     keys = list(order_by) if order_by else [df.columns[0]]

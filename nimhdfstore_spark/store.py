@@ -6,7 +6,8 @@ Layout (one store = one root directory; one table = one subdirectory):
     root/
       <table>/
         _meta.json            # catalog entry: current snapshot, count, codec,
-                              # attributes, canonical order, link target
+                              # attributes, canonical order, link target,
+                              # the retained dirs earlier commits published
         snap-00000000/        # immutable Parquet snapshot, sorted by _rowid
         snap-00000001/        # produced by a mutation; pointer swap in meta
         snap-00000002-<hex>/  # a committer may add a unique per-attempt
@@ -17,6 +18,9 @@ Layout (one store = one root directory; one table = one subdirectory):
 ``_SnapDirs`` is the one reader of these names: it sorts a table's
 snapshot dirs against the catalog's ``current`` into history, the current
 itself and debris, and every retention, time-travel and diff path asks it.
+Time travel and diffs resolve a number through the catalog's ``history``
+list of published names first, so debris sharing a committed number is
+never mistaken for it.
 
 Mutations (reference nimtables.nim:173-233) are deterministic rewrites: each
 commit writes a new snapshot sorted by ``_rowid`` and atomically swaps the
@@ -306,9 +310,14 @@ class _SnapDirs:
 
     ``staging`` holds the ``.tmp-snap-…`` commit staging dirs. A
     ``current`` that names no snapshot (a link entry, a torn read) sorts
-    every dir into history."""
+    every dir into history. ``committed`` is the catalog's record of the
+    dirs earlier commits published (``_meta["history"]``, see
+    :meth:`recorded`); :meth:`resolve` prefers them."""
 
-    def __init__(self, tdir: str, current: str | None) -> None:
+    def __init__(
+        self, tdir: str, current: str | None, committed: Sequence[str] = ()
+    ) -> None:
+        self.committed = {*committed, current}
         self.history: dict[int, list[str]] = {}
         self.losers: list[str] = []
         self.above: list[str] = []
@@ -345,16 +354,31 @@ class _SnapDirs:
         when there is none); a committer may suffix it on publish."""
         return _SNAP.format(0 if current is None else cls.number(current) + 1)
 
+    @staticmethod
+    def recorded(prior: dict, retain: int) -> dict:
+        """The ``history`` entry of the catalog entry that follows
+        ``prior``: the dir names earlier commits published, ``prior``'s
+        current last, bounded to the ``retain - 1`` newest (the new current
+        takes the last slot of the retention window). Empty when there is
+        nothing to record."""
+        if retain < 2 or not prior.get("current"):
+            return {}
+        names = [*prior.get("history", ()), prior["current"]]
+        return {"history": names[len(names) - retain + 1:]}
+
     def resolve(self, name: str, snapshot: int) -> str:
         """The dir of retained snapshot number ``snapshot`` of table
-        ``name``. Above-current debris never resolves: serving it would
-        present uncommitted data as a committed snapshot."""
+        ``name``: the committed one when the catalog recorded it, else the
+        one dir with that number. Above-current debris never resolves:
+        serving it would present uncommitted data as a committed
+        snapshot."""
         dirs = self.history.get(snapshot, [])
+        dirs = [e for e in dirs if e in self.committed] or dirs
         if len(dirs) > 1:
             raise StoreError(
                 f"snapshot {snapshot} of {name!r} is ambiguous ({dirs}): a"
                 " crashed commit's debris shares its number, and the catalog"
-                " keeps no record of which dir was committed"
+                " has no record of which dir was committed"
             )
         if not dirs:
             raise StoreError(
@@ -1078,9 +1102,9 @@ class Store:
                 heal(self, name)
             meta = self._read_meta(name)
         if snapshot is not None:
-            snap = _SnapDirs(self._table_dir(name), meta["current"]).resolve(
-                name, snapshot
-            )
+            snap = _SnapDirs(
+                self._table_dir(name), meta["current"], meta.get("history", ())
+            ).resolve(name, snapshot)
             if snap != meta["current"]:
                 sdir = os.path.join(self._table_dir(name), snap)
                 hist = dict(meta)
@@ -1286,6 +1310,7 @@ class Store:
             "attrs": dict(attrs or {}),
             "order_by": list(order_by or []),
         }
+        meta.update(_SnapDirs.recorded(prior, self.keep_snapshots))
         self._invalidate(name)  # snap paths can repeat after drop/stray rmtree
         return meta, int(prior.get("version", 0)), old_meta is not None
 
@@ -3285,8 +3310,10 @@ class Table:
                 covered |= names
         residual = [e for e in files if e["name"] not in covered]
         _write_snap_schema(staged_dir, self._meta["schema"])
+        history = _SnapDirs.recorded(self._meta, store.keep_snapshots)
+        self._meta.pop("history", None)
         self._meta.update(
-            current=snap, count=sum(e["rows"] for e in files)
+            history, current=snap, count=sum(e["rows"] for e in files)
         )
         store._pack(
             self.name, self._meta, "manifests", files, carried_shards, residual
@@ -3692,9 +3719,10 @@ class Table:
         deletions by definition of positional storage and are not emitted
         as rows. ``since`` resolves as ``Store.table(snapshot=)`` does."""
         tdir = self.store._table_dir(self.name)
-        old_dir = os.path.join(
-            tdir, _SnapDirs(tdir, self._meta["current"]).resolve(self.name, since)
+        snaps = _SnapDirs(
+            tdir, self._meta["current"], self._meta.get("history", ())
         )
+        old_dir = os.path.join(tdir, snaps.resolve(self.name, since))
         old_ranges = scan_rowid_ranges(old_dir)
         old_names = {e["name"] for e in old_ranges}
         old_count = sum(e["rows"] for e in old_ranges)

@@ -17,6 +17,8 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from nimhdfstore_spark.tables import read_parquet
+
 
 def pii_scrub_stream(
     spark: SparkSession,
@@ -33,8 +35,8 @@ def pii_scrub_stream(
     for no reason)."""
     from nimhdfstore_spark.operators.text import pii_counts
 
-    schema = spark.read.parquet(
-        os.path.join(docs_dir, "documents.parquet")
+    schema = read_parquet(
+        spark, os.path.join(docs_dir, "documents.parquet")
     ).schema
     stream = (
         spark.readStream.schema(schema)
@@ -91,7 +93,7 @@ def temperature_sample_stream(
         sample_hash, temperature_thresholds,
     )
 
-    static_docs = spark.read.parquet(os.path.join(docs_dir, "documents.parquet"))
+    static_docs = read_parquet(spark, os.path.join(docs_dir, "documents.parquet"))
     th = temperature_thresholds(static_docs, "lang", budget_den)
 
     schema = static_docs.schema

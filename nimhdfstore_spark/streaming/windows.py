@@ -18,6 +18,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from nimhdfstore_spark.tables import read_parquet
+
 #: state-store partitions for a bounded availableNow drain. Stateful
 #: shuffles create ONE state directory per shuffle partition and commit
 #: each per micro-batch — a stream-stream join keeps FOUR stores per
@@ -92,7 +94,7 @@ def tumbling_counts_stream(
     """
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    schema = spark.read.parquet(os.path.join(events_dir, "events.parquet")).schema
+    schema = read_parquet(spark, os.path.join(events_dir, "events.parquet")).schema
     stream = (
         spark.readStream.schema(schema)
         .option("pathGlobFilter", "events.parquet")
@@ -152,7 +154,7 @@ def user_totals_stateful_stream(spark: SparkSession, events_dir: str) -> DataFra
 
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    schema = spark.read.parquet(os.path.join(events_dir, "events.parquet")).schema
+    schema = read_parquet(spark, os.path.join(events_dir, "events.parquet")).schema
     stream = (
         spark.readStream.schema(schema)
         .option("pathGlobFilter", "events.parquet")
@@ -239,7 +241,7 @@ def dedup_events_stream(spark: SparkSession, events_dir: str) -> DataFrame:
     """
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    schema = spark.read.parquet(os.path.join(events_dir, "events.parquet")).schema
+    schema = read_parquet(spark, os.path.join(events_dir, "events.parquet")).schema
     stream = (
         spark.readStream.schema(schema)
         .option("pathGlobFilter", "events.parquet")
@@ -285,7 +287,7 @@ def session_window_stream(
     """
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    schema = spark.read.parquet(os.path.join(events_dir, "events.parquet")).schema
+    schema = read_parquet(spark, os.path.join(events_dir, "events.parquet")).schema
     stream = (
         spark.readStream.schema(schema)
         .option("pathGlobFilter", "events.parquet")
@@ -331,7 +333,7 @@ def purchase_attribution_stream(spark: SparkSession, events_dir: str) -> DataFra
     """
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    schema = spark.read.parquet(os.path.join(events_dir, "events.parquet")).schema
+    schema = read_parquet(spark, os.path.join(events_dir, "events.parquet")).schema
 
     def side(kind: str, alias: str) -> DataFrame:
         s = (
@@ -391,7 +393,7 @@ def stream_into_store(
 
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    schema = spark.read.parquet(os.path.join(events_dir, "events.parquet")).schema
+    schema = read_parquet(spark, os.path.join(events_dir, "events.parquet")).schema
     stream = (
         spark.readStream.schema(schema)
         .option("pathGlobFilter", "events.parquet")
@@ -435,7 +437,7 @@ def sliding_counts_stream(
     every window containing it."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    schema = spark.read.parquet(os.path.join(events_dir, "events.parquet")).schema
+    schema = read_parquet(spark, os.path.join(events_dir, "events.parquet")).schema
     stream = (
         spark.readStream.schema(schema)
         .option("pathGlobFilter", "events.parquet")
@@ -484,7 +486,7 @@ def countmin_user_stream(spark: SparkSession, events_dir: str) -> DataFrame:
 
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    schema = spark.read.parquet(os.path.join(events_dir, "events.parquet")).schema
+    schema = read_parquet(spark, os.path.join(events_dir, "events.parquet")).schema
     stream = (
         spark.readStream.schema(schema)
         .option("pathGlobFilter", "events.parquet")
@@ -535,7 +537,7 @@ def stream_merge_into_store(
 
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    src = spark.read.parquet(os.path.join(events_dir, "events.parquet"))
+    src = read_parquet(spark, os.path.join(events_dir, "events.parquet"))
     staged = os.path.join(store.root, "_staged_events")
     _shutil.rmtree(staged, ignore_errors=True)
     os.makedirs(staged)
@@ -613,7 +615,7 @@ def purchase_attribution_outer_stream(
     closed-sessions-only oracle)."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    schema = spark.read.parquet(os.path.join(events_dir, "events.parquet")).schema
+    schema = read_parquet(spark, os.path.join(events_dir, "events.parquet")).schema
 
     def side(kind: str, alias: str) -> DataFrame:
         s = (
@@ -672,7 +674,7 @@ def timeout_sessions_stream(
 
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    schema = spark.read.parquet(os.path.join(events_dir, "events.parquet")).schema
+    schema = read_parquet(spark, os.path.join(events_dir, "events.parquet")).schema
     stream = (
         spark.readStream.schema(schema)
         .option("pathGlobFilter", "events.parquet")
@@ -792,7 +794,7 @@ def restart_recovery_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = os.path.join(base, "out")
     shutil.rmtree(base, ignore_errors=True)
 
-    ev = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
+    ev = read_parquet(spark, os.path.join(sf_dir, "events.parquet"))
     ev.where(F.col("event_id") % 2 == 0).write.parquet(stage)
 
     schema = ev.schema
@@ -820,7 +822,7 @@ def restart_recovery_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     run_once()                 # drains the even half, checkpoints, stops
     ev.where(F.col("event_id") % 2 == 1).write.mode("append").parquet(stage)
     run_once()                 # restart: recovers state, drains only the new file
-    return spark.read.parquet(out).orderBy("event_type")
+    return read_parquet(spark, out).orderBy("event_type")
 
 
 def stream_deletes_into_store(
@@ -842,7 +844,7 @@ def stream_deletes_into_store(
     import shutil as _shutil
     import uuid as _uuid
 
-    base = store.spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+    base = read_parquet(store.spark, os.path.join(sf_dir, "documents.parquet"))
     if name in store:
         store.drop(name)
     store.put(name, base, order_by=["doc_id"])
@@ -939,8 +941,8 @@ def stream_incremental_dedup(
     from nimhdfstore_spark.operators.dedup import minhash_buckets
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    docs = spark.read.parquet(
-        os.path.join(sf_dir, "documents.parquet")
+    docs = read_parquet(
+        spark, os.path.join(sf_dir, "documents.parquet")
     ).where(F.col("doc_id") < doc_limit)
     mod = 10 * n_batches
     corpus = docs.where(F.col("doc_id") % 10 != 0)

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import os
 from datetime import timezone
 
 from pyspark.sql import DataFrame, SparkSession
@@ -26,7 +27,70 @@ CANONICAL: dict[str, list[str]] = {
 def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     if table == "events":
         return load_events(spark, sf_dir)
-    return spark.read.parquet(f"{sf_dir}/{table}.parquet")
+    return read_parquet(spark, f"{sf_dir}/{table}.parquet")
+
+
+def _file_signature(path: str) -> tuple | None:
+    """``(relative name, size, mtime_ns)`` of each file at ``path`` (a file,
+    or a directory walked recursively), or None when ``path`` does not
+    exist. A rewrite at the same path changes it."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        return None
+    if not os.path.isdir(path):
+        return (("", st.st_size, st.st_mtime_ns),)
+    out = []
+    for d, _dirs, files in os.walk(path):
+        for n in files:
+            f = os.path.join(d, n)
+            st = os.stat(f)
+            out.append((os.path.relpath(f, path), st.st_size, st.st_mtime_ns))
+    return tuple(sorted(out))
+
+
+def _memo(cache: dict, key, path: str, compute):
+    """``compute()`` memoized under ``key`` while ``path``'s
+    :func:`_file_signature` stays the same: one entry per key, replaced
+    when the files change. The signature is taken first, so files
+    rewritten while ``compute`` runs read as changed on the next call."""
+    sig = _file_signature(path)
+    hit = cache.get(key)
+    if sig is not None and hit is not None and hit[0] == sig:
+        return hit[1]
+    value = compute()
+    if sig is not None:
+        cache[key] = (sig, value)
+    return value
+
+
+#: session confs that change what Spark infers from Parquet footers
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+)
+
+#: Spark's inferred schema per (path, inference confs), with the path's
+#: file signature (see ``_memo``)
+_SCHEMA_MEMO: dict[tuple, tuple] = {}
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)``, the package's one input reader, with
+    the footer-inference job paid once per set of files: Spark's own
+    inferred schema is memoized, and reads plan under it with
+    ``spark.read.schema(s).parquet(path)``, which fires no job (inference
+    costs one job and ~80-100 ms of driver CPU). The memo is keyed by the
+    path and the session confs that change inference, and checked against
+    the files' ``_file_signature``."""
+    key = (path, *(spark.conf.get(c) for c in _INFERENCE_CONFS))
+    schema = _memo(
+        _SCHEMA_MEMO, key, path, lambda: spark.read.parquet(path).schema
+    )
+    return spark.read.schema(schema).parquet(path)
 
 
 def normalize_events_ts(df: DataFrame):
@@ -43,12 +107,13 @@ def normalize_events_ts(df: DataFrame):
 def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    return normalize_events_ts(spark.read.parquet(f"{sf_dir}/events.parquet"))
+    return normalize_events_ts(read_parquet(spark, f"{sf_dir}/events.parquet"))
 
 
-#: memo of sorted_parquet_bases verdicts per (path, keys) — the footer/key
-#: verification is deterministic for immutable test data, no need to re-run
-_SORTED_CACHE: dict[tuple[str, tuple[str, ...]], object] = {}
+#: sorted_parquet_bases verdicts per (path, keys), with the path's file
+#: signature (see ``_memo``): the footer/key verification re-runs only when
+#: the files change
+_SORTED_CACHE: dict[tuple[str, tuple[str, ...]], tuple] = {}
 
 
 def load_pos(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
@@ -65,10 +130,10 @@ def load_pos(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     keys = CANONICAL[table]
     if table != "events":
         path = f"{sf_dir}/{table}.parquet"
-        ck = (path, tuple(keys))
-        if ck not in _SORTED_CACHE:
-            _SORTED_CACHE[ck] = sorted_parquet_bases(path, keys, spark=spark)
-        bases = _SORTED_CACHE[ck]
+        bases = _memo(
+            _SORTED_CACHE, (path, tuple(keys)), path,
+            lambda: sorted_parquet_bases(path, keys, spark=spark),
+        )
         if bases:
             return rowid_from_sorted_parquet(spark, path, keys, bases)
     return with_rowid(load(spark, sf_dir, table), keys)

@@ -278,3 +278,144 @@ def test_h5lite_btree_depth_property(rows, chunk, tmp_path_factory):
     back = h5lite.read(p, "d")
     assert (back["k"] == rec["k"]).all()
     assert (back["s"] == rec["s"]).all()
+
+
+# -- driver read parity ---------------------------------------------------------
+#
+# Tables of at most Store.LOCAL_REWRITE_MAX_ROWS records are read on the
+# driver into a LocalRelation; larger ones through mapInPandas. Setting the
+# gate to -1 forces the mapInPandas path even for an empty table.
+
+_VLEN_STR = np.dtype("O", metadata={"vlen": str})
+_VLEN_F8 = np.dtype("O", metadata={"vlen": np.dtype("<f8")})
+
+
+def _jobs(spark) -> int:
+    return spark.sparkContext._jsc.sc().dagScheduler().nextJobId()
+
+
+def _parity_file(path: str, n: int) -> None:
+    from nimhdfstore_spark.sources import h5lite
+
+    rec = np.zeros(n, dtype=[
+        ("k", "<i8"), ("u8", "u1"), ("u16", "<u2"), ("u32", "<u4"),
+        ("tag", "S5"), ("name", _VLEN_STR), ("vals", _VLEN_F8), ("x", "<f8"),
+    ])
+    i = np.arange(n)
+    rec["k"] = i
+    rec["u8"] = 255 - i % 256
+    rec["u16"] = 65535 - i
+    rec["u32"] = 2**32 - 1 - i
+    rec["tag"] = [f"t{j % 13}".encode() for j in i]
+    rec["name"] = ["" if j % 5 == 0 else "n" * (j % 9) for j in i]
+    rec["vals"] = [np.arange(j % 4, dtype="<f8") + j for j in i]  # j%4==0: empty
+    rec["x"] = np.where(i % 7 == 3, np.nan, i / 4)
+    h5lite.write(path, {"t": rec}, chunk_rows=64)
+
+
+def _both_paths(spark, monkeypatch, path, **kwargs):
+    """(driver rows, mapInPandas rows in ``k`` order, driver frame, Spark
+    frame). The driver rows come in record order, unsorted."""
+    from nimhdfstore_spark.store import Store
+
+    local = h5src.read_hdf5_table(spark, path, "t", target_records=100, **kwargs)
+    with monkeypatch.context() as m:
+        m.setattr(Store, "LOCAL_REWRITE_MAX_ROWS", -1)
+        remote = h5src.read_hdf5_table(spark, path, "t", target_records=100, **kwargs)
+        remote_rows = sorted(remote.collect(), key=lambda r: r.k)
+    return local.collect(), remote_rows, local, remote
+
+
+@pytest.mark.parametrize("columns", [None, ["vals", "k", "u16", "name"]])
+def test_driver_read_matches_map_in_pandas(spark, tmp_path, monkeypatch, columns):
+    """Unsigned widening, fixed and vlen strings, empty vlen arrays, NaN
+    (null on both paths: the arrow conversion masks ``isnull``) and a
+    projection read the same rows under the same schema."""
+    from nimhdfstore_spark.plans import executed_plan
+
+    path = str(tmp_path / "parity.h5")
+    _parity_file(path, 300)
+    j0 = _jobs(spark)
+    local_rows, remote_rows, local, remote = _both_paths(
+        spark, monkeypatch, path, columns=columns
+    )
+    assert local.schema == remote.schema
+    assert local_rows == remote_rows and len(local_rows) == 300
+    assert "LocalTableScan" in executed_plan(local)
+    assert "MapInPandas" in executed_plan(remote)
+    if columns is None:
+        row = local_rows[1]
+        assert (row.u8, row.u16, row.u32) == (254, 65534, 2**32 - 2)
+        assert (row.tag, row.name, row.vals) == ("t1", "n", [1.0])
+        assert local_rows[0].vals == [] and local_rows[3].x is None
+    else:
+        assert local.columns == ["k", "u16", "name", "vals"]
+    # only the mapInPandas side fired jobs
+    j1 = _jobs(spark)
+    h5src.read_hdf5_table(spark, path, "t", columns=columns).collect()
+    assert _jobs(spark) == j1 > j0
+
+
+@pytest.mark.parametrize("safe", ["false", "true"])
+def test_driver_read_uint64_follows_safe_conversion_conf(
+    spark, tmp_path, monkeypatch, safe
+):
+    """uint64 maps to bigint. Above 2^63 both paths honour
+    ``convertToArrowArraySafely``: off, the value wraps alike; on, both
+    raise."""
+    from nimhdfstore_spark.sources import h5lite
+
+    path = str(tmp_path / "u64.h5")
+    rec = np.zeros(4, dtype=[("k", "<i8"), ("u", "<u8")])
+    rec["k"] = np.arange(4)
+    rec["u"] = [0, 2**63 - 1, 2**63 + 5, 2**64 - 1]
+    h5lite.write(path, {"t": rec})
+    key = "spark.sql.execution.pandas.convertToArrowArraySafely"
+    prior = spark.conf.get(key)
+    spark.conf.set(key, safe)
+    try:
+        if safe == "true":
+            with pytest.raises(Exception):
+                h5src.read_hdf5_table(spark, path, "t").collect()
+            with monkeypatch.context() as m:
+                from nimhdfstore_spark.store import Store
+
+                m.setattr(Store, "LOCAL_REWRITE_MAX_ROWS", -1)
+                with pytest.raises(Exception):
+                    h5src.read_hdf5_table(spark, path, "t").collect()
+        else:
+            local_rows, remote_rows, _l, _r = _both_paths(spark, monkeypatch, path)
+            assert local_rows == remote_rows
+            assert [r.u for r in local_rows] == [0, 2**63 - 1, 5 - 2**63, -1]
+    finally:
+        spark.conf.set(key, prior)
+
+
+def test_driver_read_empty_table(spark, tmp_path, monkeypatch):
+    path = str(tmp_path / "empty.h5")
+    _parity_file(path, 0)
+    j0 = _jobs(spark)
+    local = h5src.read_hdf5_table(spark, path, "t")
+    assert local.collect() == [] and _jobs(spark) == j0
+    local_rows, remote_rows, local, remote = _both_paths(spark, monkeypatch, path)
+    assert local_rows == remote_rows == []
+    assert local.schema == remote.schema
+
+
+def test_driver_read_gate_is_record_count(spark, tmp_path, monkeypatch):
+    """At the gate the read is a LocalRelation whose build and collect fire
+    no job; one record over it keeps the mapInPandas plan."""
+    from nimhdfstore_spark.plans import executed_plan
+    from nimhdfstore_spark.store import Store
+
+    path = str(tmp_path / "gate.h5")
+    _parity_file(path, 130)
+    monkeypatch.setattr(Store, "LOCAL_REWRITE_MAX_ROWS", 130)
+    j0 = _jobs(spark)
+    at = h5src.read_hdf5_table(spark, path, "t", target_records=64)
+    assert len(at.collect()) == 130 and _jobs(spark) == j0
+    assert "LocalTableScan" in executed_plan(at)
+    monkeypatch.setattr(Store, "LOCAL_REWRITE_MAX_ROWS", 129)
+    over = h5src.read_hdf5_table(spark, path, "t", target_records=64)
+    assert sorted(over.collect(), key=lambda r: r.k) == at.collect()
+    assert "MapInPandas" in executed_plan(over)

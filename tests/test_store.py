@@ -281,7 +281,7 @@ def test_multifile_sorted_parquet_rowid(spark, tmp_path):
     assert sum(r for _, _, r in bases) == 1000
     got = rowid_from_sorted_parquet(spark, d, ["k"], bases)
     bad = got.where(F.col(ROWID) != F.col("k")).count()  # k IS the rank
-    assert bad == 0
+    assert bad == 0 and got.count() == 1000
     # unsorted data must be rejected
     df.repartition(4).write.parquet(str(tmp_path / "unsorted"))
     assert sorted_parquet_bases(str(tmp_path / "unsorted"), ["k"]) is None
@@ -431,6 +431,51 @@ def test_snapshot_names_parsed_only_by_snapdirs():
         and not helper.lineno <= no <= helper.end_lineno
     ]
     assert not stray, f"snapshot name parsed outside _SnapDirs: {stray}"
+
+
+def test_committed_history_resolves_a_shared_snapshot_number(spark, tmp_path):
+    """Debris sharing a committed number (``snap-00000001-aa`` beside
+    ``snap-00000001``, current ``snap-00000002-bb``, as a crashed
+    conditional-PUT racer leaves it) no longer makes time travel or
+    ``changes`` ambiguous: each commit records the names it superseded in
+    ``_meta["history"]``, bounded by the retention window, and resolution
+    asks that list first. A catalog without the list still refuses to
+    guess."""
+    import shutil
+
+    store = Store(spark, str(tmp_path / "s"), keep_snapshots=3)
+    schema = "k bigint, v string"
+    t = store.put("t", local_frame(spark, [(i, "a") for i in range(4)], schema),
+                  order_by=["k"])
+    t.append(local_frame(spark, [(4, "b")], schema))
+    t.append(local_frame(spark, [(5, "c")], schema))
+    tdir = store._table_dir("t")
+    meta = store._read_meta("t")
+    assert meta["history"] == ["snap-00000000", "snap-00000001"]
+    # debris with snapshot 0's rows under number 1; current renamed as a
+    # conditional-PUT committer names it
+    shutil.copytree(os.path.join(tdir, "snap-00000000"),
+                    os.path.join(tdir, "snap-00000001-aa"))
+    os.rename(os.path.join(tdir, "snap-00000002"),
+              os.path.join(tdir, "snap-00000002-bb"))
+    meta["current"] = "snap-00000002-bb"
+    store._write_meta("t", meta)
+    assert store.snapshots("t") == [0, 1, 2]
+    old = store.table("t", snapshot=1).df()
+    assert sorted(r.k for r in old.collect()) == [0, 1, 2, 3, 4]
+    assert [r.k for r in store.table("t").changes(1).collect()] == [5]
+    # the list is bounded: the next commit drops snapshot 0's name
+    t = store.table("t")
+    t.append(local_frame(spark, [(6, "d")], schema))
+    assert store._read_meta("t")["history"] == [
+        "snap-00000001", "snap-00000002-bb"
+    ]
+    # a catalog written before the list: the pair stays ambiguous
+    meta = store._read_meta("t")
+    del meta["history"]
+    store._write_meta("t", meta)
+    with pytest.raises(StoreError, match="ambiguous"):
+        store.table("t", snapshot=1)
 
 
 def test_keep_lists_planned_only_by_splice_and_id_path():
