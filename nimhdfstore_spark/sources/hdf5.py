@@ -5,12 +5,12 @@ The reference reads packed compound-type records with ``H5TBread_records``
 selection touches. The Spark-side mirror: the *driver* opens the file once
 for catalog metadata (shape, dtype, chunk size — the ``H5TBget_table_info``
 analog, nimtables.nim:111-131) and plans **chunk-aligned record ranges**, so
-no chunk is decompressed by two reads. A table of at most
-``Store.LOCAL_REWRITE_MAX_ROWS`` records is read on the driver, range by
-range, into a LocalRelation: no Spark job and no Python worker. A larger
-one becomes one Spark partition per range, and executors each open the file
-independently and read only their range. The write leg is a single-writer
-job (HDF5 has no parallel write without MPI).
+no chunk is decompressed by two reads. A driver-sized table (see
+:data:`LOCAL_READ_MAX_RECORDS`) is read on the driver, range by range, into
+a LocalRelation: no Spark job and no Python worker. A larger one becomes one
+Spark partition per range, and executors each open the file independently
+and read only their range. The write leg is a single-writer job (HDF5 has
+no parallel write without MPI).
 
 File I/O goes through ``h5lite``, the package's pure-Python implementation
 of the format subset the reference's tables use (contiguous + chunked/gzip
@@ -40,6 +40,22 @@ from pyspark.sql.types import (
 
 from nimhdfstore_spark.sources import h5lite
 from nimhdfstore_spark.tables import local_frame
+
+#: Largest table, in records, that :func:`read_hdf5_table` reads on the
+#: driver. The driver decodes serially where the mapInPandas path decodes
+#: one range per core but pays job and Python-worker start-up, so the
+#: break-even is the size at which one serial decode costs what that
+#: start-up does. Measured at ``local[4]`` on q14's interchange shape
+#: (two bigint, two double, one fixed string), with the driver's wall time
+#: against mapInPandas at 8 ranges: 0.38 s vs 0.89 s at 60k records, 0.92 s
+#: vs 0.99 s at 131k, 0.97 s vs 0.73 s at 197k. The driver used less CPU at
+#: every size up to 262k.
+LOCAL_READ_MAX_RECORDS = 131_072
+#: The same cut-over for a compound with a vlen member, whose cells h5lite
+#: decodes one record at a time from the global heap. Measured on q14's
+#: vlen shape (bigint + ``array<double>``, chunk 5000): 0.50 s vs 0.56 s at
+#: 30k records, 0.69 s vs 0.68 s at 40k, 1.14 s vs 0.97 s at 60k.
+LOCAL_READ_MAX_VLEN_RECORDS = 32_768
 
 # -- type mapping (SURVEY §1.2; typeinspect.nim:28-41, datatypes.nim:247-364)
 
@@ -125,14 +141,17 @@ def _attr_value(v):
 def table_info(path: str, dataset: str) -> dict:
     """Driver-side catalog lookup: (nrecords, chunk_size, schema)."""
     info = h5lite.catalog(path)[dataset]
+    dtype = info["dtype"]
     return {
         "nrecords": int(info["nrows"]),
         # chunked files align partitions to their real chunk size;
         # contiguous ones plan at the reference's default table chunk
         # (openHDFStore chunkSize=5000, nimtables.nim:60)
         "chunk_size": int(info.get("chunk_rows", 5000)),
-        "schema": compound_to_schema(info["dtype"]),
-        "columns": list(info["dtype"].names),
+        "schema": compound_to_schema(dtype),
+        "columns": list(dtype.names),
+        # every range read decodes all members, projected or not
+        "vlen": any("vlen" in (dtype[n].metadata or {}) for n in dtype.names),
         "attrs": dict(info.get("attrs", {})),
     }
 
@@ -198,24 +217,24 @@ def read_hdf5_table(
     _info: dict | None = None,
 ) -> DataFrame:
     """Scan of an HDF5 compound table over chunk-aligned record ranges
-    (mirrors ``H5TBread_records`` + chunk intersection). A table of at most
-    ``Store.LOCAL_REWRITE_MAX_ROWS`` records (strings and vlen arrays
-    included) is read on the driver, range by range, and returned as a
-    LocalRelation: building and collecting it fire no job. A larger one
-    reads in parallel, one task per range, each executor reading only its
-    hyperslab; both paths decode through one decoder and convert to arrow
-    alike. Column projection keeps only the requested fields of each read
-    range, the analog of ``H5TBread_fields_name`` (P8,
-    hl/H5TBpublic.nim:73-76)."""
-    from nimhdfstore_spark.store import Store
-
+    (mirrors ``H5TBread_records`` + chunk intersection). A driver-sized
+    table (:data:`LOCAL_READ_MAX_RECORDS`, or the lower
+    :data:`LOCAL_READ_MAX_VLEN_RECORDS` with a vlen member) is read on the
+    driver, range by range, and returned as a LocalRelation: building and
+    collecting it fire no job, and ``target_records`` only sets the read
+    ranges. A larger one reads in parallel, one task per range, each
+    executor reading only its hyperslab; both paths decode through one
+    decoder and convert to arrow alike. Column projection keeps only the
+    requested fields of each read range, the analog of
+    ``H5TBread_fields_name`` (P8, hl/H5TBpublic.nim:73-76)."""
     info = _info if _info is not None else table_info(path, dataset)
     schema = info["schema"]
     if columns:
         keep = [f for f in schema.fields if f.name in set(columns)]
         schema = StructType(keep)
     parts = plan_partitions(info["nrecords"], info["chunk_size"], target_records)
-    if info["nrecords"] <= Store.LOCAL_REWRITE_MAX_ROWS:
+    gate = LOCAL_READ_MAX_VLEN_RECORDS if info["vlen"] else LOCAL_READ_MAX_RECORDS
+    if info["nrecords"] <= gate:
         return local_frame(
             spark, _read_local(spark, path, dataset, parts, schema), schema
         )
@@ -376,8 +395,8 @@ def hdf5_to_store(
     **put_kwargs,
 ):
     """Migrate one HDF5 compound table into the Parquet store: chunk-aligned
-    read (``read_hdf5_table``: on the driver up to
-    ``Store.LOCAL_REWRITE_MAX_ROWS`` records, in parallel above) →
+    read (``read_hdf5_table``: on the driver for a driver-sized table, in
+    parallel above) →
     ``Store.put``. ``order_by`` defaults to the first column, mirroring how
     the reference's tables are keyed by their leading field in practice;
     pass the real unique key for stable positions. Returns the new

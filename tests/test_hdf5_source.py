@@ -282,9 +282,10 @@ def test_h5lite_btree_depth_property(rows, chunk, tmp_path_factory):
 
 # -- driver read parity ---------------------------------------------------------
 #
-# Tables of at most Store.LOCAL_REWRITE_MAX_ROWS records are read on the
-# driver into a LocalRelation; larger ones through mapInPandas. Setting the
-# gate to -1 forces the mapInPandas path even for an empty table.
+# Driver-sized tables (h5src.LOCAL_READ_MAX_RECORDS, or
+# LOCAL_READ_MAX_VLEN_RECORDS with a vlen member) are read on the driver into
+# a LocalRelation; larger ones through mapInPandas. Setting both gates to -1
+# forces the mapInPandas path even for an empty table.
 
 _VLEN_STR = np.dtype("O", metadata={"vlen": str})
 _VLEN_F8 = np.dtype("O", metadata={"vlen": np.dtype("<f8")})
@@ -294,33 +295,37 @@ def _jobs(spark) -> int:
     return spark.sparkContext._jsc.sc().dagScheduler().nextJobId()
 
 
-def _parity_file(path: str, n: int) -> None:
+def _parity_file(path: str, n: int, vlen: bool = True) -> None:
     from nimhdfstore_spark.sources import h5lite
 
-    rec = np.zeros(n, dtype=[
-        ("k", "<i8"), ("u8", "u1"), ("u16", "<u2"), ("u32", "<u4"),
-        ("tag", "S5"), ("name", _VLEN_STR), ("vals", _VLEN_F8), ("x", "<f8"),
-    ])
+    fields = [("k", "<i8"), ("u8", "u1"), ("u16", "<u2"), ("u32", "<u4"), ("tag", "S5")]
+    if vlen:
+        fields += [("name", _VLEN_STR), ("vals", _VLEN_F8), ("x", "<f8")]
+    rec = np.zeros(n, dtype=fields)
     i = np.arange(n)
     rec["k"] = i
     rec["u8"] = 255 - i % 256
     rec["u16"] = 65535 - i
     rec["u32"] = 2**32 - 1 - i
     rec["tag"] = [f"t{j % 13}".encode() for j in i]
-    rec["name"] = ["" if j % 5 == 0 else "n" * (j % 9) for j in i]
-    rec["vals"] = [np.arange(j % 4, dtype="<f8") + j for j in i]  # j%4==0: empty
-    rec["x"] = np.where(i % 7 == 3, np.nan, i / 4)
+    if vlen:
+        rec["name"] = ["" if j % 5 == 0 else "n" * (j % 9) for j in i]
+        rec["vals"] = [np.arange(j % 4, dtype="<f8") + j for j in i]  # j%4==0: empty
+        rec["x"] = np.where(i % 7 == 3, np.nan, i / 4)
     h5lite.write(path, {"t": rec}, chunk_rows=64)
+
+
+def _set_gates(m, fixed: int, vlen: int) -> None:
+    m.setattr(h5src, "LOCAL_READ_MAX_RECORDS", fixed)
+    m.setattr(h5src, "LOCAL_READ_MAX_VLEN_RECORDS", vlen)
 
 
 def _both_paths(spark, monkeypatch, path, **kwargs):
     """(driver rows, mapInPandas rows in ``k`` order, driver frame, Spark
     frame). The driver rows come in record order, unsorted."""
-    from nimhdfstore_spark.store import Store
-
     local = h5src.read_hdf5_table(spark, path, "t", target_records=100, **kwargs)
     with monkeypatch.context() as m:
-        m.setattr(Store, "LOCAL_REWRITE_MAX_ROWS", -1)
+        _set_gates(m, -1, -1)
         remote = h5src.read_hdf5_table(spark, path, "t", target_records=100, **kwargs)
         remote_rows = sorted(remote.collect(), key=lambda r: r.k)
     return local.collect(), remote_rows, local, remote
@@ -378,9 +383,7 @@ def test_driver_read_uint64_follows_safe_conversion_conf(
             with pytest.raises(Exception):
                 h5src.read_hdf5_table(spark, path, "t").collect()
             with monkeypatch.context() as m:
-                from nimhdfstore_spark.store import Store
-
-                m.setattr(Store, "LOCAL_REWRITE_MAX_ROWS", -1)
+                _set_gates(m, -1, -1)
                 with pytest.raises(Exception):
                     h5src.read_hdf5_table(spark, path, "t").collect()
         else:
@@ -404,18 +407,20 @@ def test_driver_read_empty_table(spark, tmp_path, monkeypatch):
 
 def test_driver_read_gate_is_record_count(spark, tmp_path, monkeypatch):
     """At the gate the read is a LocalRelation whose build and collect fire
-    no job; one record over it keeps the mapInPandas plan."""
+    no job; one record over it keeps the mapInPandas plan. A table with a
+    vlen member answers to the vlen gate, a fixed-width one to the other."""
     from nimhdfstore_spark.plans import executed_plan
-    from nimhdfstore_spark.store import Store
 
-    path = str(tmp_path / "gate.h5")
-    _parity_file(path, 130)
-    monkeypatch.setattr(Store, "LOCAL_REWRITE_MAX_ROWS", 130)
-    j0 = _jobs(spark)
-    at = h5src.read_hdf5_table(spark, path, "t", target_records=64)
-    assert len(at.collect()) == 130 and _jobs(spark) == j0
-    assert "LocalTableScan" in executed_plan(at)
-    monkeypatch.setattr(Store, "LOCAL_REWRITE_MAX_ROWS", 129)
-    over = h5src.read_hdf5_table(spark, path, "t", target_records=64)
-    assert sorted(over.collect(), key=lambda r: r.k) == at.collect()
-    assert "MapInPandas" in executed_plan(over)
+    for vlen in (True, False):
+        path = str(tmp_path / f"gate-{vlen}.h5")
+        _parity_file(path, 130, vlen=vlen)
+        for n, plan in ((130, "LocalTableScan"), (129, "MapInPandas")):
+            with monkeypatch.context() as m:
+                # the other gate admits nothing, or everything
+                _set_gates(m, *((-1, n) if vlen else (n, 10**9)))
+                j0 = _jobs(spark)
+                df = h5src.read_hdf5_table(spark, path, "t", target_records=64)
+                rows = sorted(df.collect(), key=lambda r: r.k)
+                assert [r.k for r in rows] == list(range(130))
+                assert (_jobs(spark) == j0) == (n == 130), (vlen, n)
+                assert plan in executed_plan(df), (vlen, n)

@@ -6,14 +6,12 @@ against the same signature."""
 
 from __future__ import annotations
 
-import ast
 import os
 
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
-import nimhdfstore_spark
 from nimhdfstore_spark.rowid import ROWID
 from nimhdfstore_spark.tables import load_events, load_pos, read_parquet
 
@@ -101,54 +99,3 @@ def test_load_pos_rereads_a_rewritten_directory(spark, tmp_path):
     _sorted_dir(path, [range(0, 15), range(15, 40)])
     again = load_pos(spark, sf, "nation").orderBy(ROWID).collect()
     assert [(r[ROWID], r.n_nationkey) for r in again] == [(k, k) for k in range(40)]
-
-
-def _parquet_reads(tree: ast.AST) -> list[int]:
-    """Lines of ``….read….parquet(…)`` calls: a ``parquet`` call whose
-    receiver chain passes through a ``read`` attribute."""
-    hits = []
-    for node in ast.walk(tree):
-        if not (
-            isinstance(node, ast.Call)
-            and isinstance(node.func, ast.Attribute)
-            and node.func.attr == "parquet"
-        ):
-            continue
-        recv = node.func.value
-        while isinstance(recv, (ast.Call, ast.Attribute)):
-            if isinstance(recv, ast.Attribute) and recv.attr == "read":
-                hits.append(node.lineno)
-                break
-            recv = recv.func if isinstance(recv, ast.Call) else recv.value
-    return hits
-
-
-def test_parquet_reads_only_inside_read_parquet_and_table_scan():
-    """``tables.read_parquet`` is the package's one input reader and
-    ``Table._scan`` the store's: no other code reads Parquet through
-    ``spark.read``, so every input load takes the schema memo."""
-    root = os.path.dirname(nimhdfstore_spark.__file__)
-    allowed = {("tables.py", "read_parquet"), ("store.py", "_scan")}
-    stray = []
-    for d, _dirs, files in os.walk(root):
-        for n in files:
-            if not n.endswith(".py"):
-                continue
-            path = os.path.join(d, n)
-            with open(path) as f:
-                src = f.read()
-            tree = ast.parse(src)
-            spans = [
-                (f.lineno, f.end_lineno) for f in ast.walk(tree)
-                if isinstance(f, ast.FunctionDef)
-                and (n, f.name) in allowed
-            ]
-            lines = set(_parquet_reads(tree)) | {
-                no for no, line in enumerate(src.splitlines(), 1)
-                if "read.parquet(" in line
-            }
-            stray += [
-                f"{os.path.relpath(path, root)}:{no}" for no in sorted(lines)
-                if not any(a <= no <= b for a, b in spans)
-            ]
-    assert not stray, f"Parquet read outside read_parquet/Table._scan: {stray}"

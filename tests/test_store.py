@@ -366,26 +366,60 @@ def test_reads_plan_without_jobs(spark, tmp_path):
             assert scanned < total, column
 
 
+def _parquet_reads(tree: ast.AST) -> list[int]:
+    """Lines of ``….read….parquet(…)`` calls: a ``parquet`` call whose
+    receiver chain passes through a ``read`` attribute."""
+    hits = []
+    for node in ast.walk(tree):
+        if not (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "parquet"
+        ):
+            continue
+        recv = node.func.value
+        while isinstance(recv, (ast.Call, ast.Attribute)):
+            if isinstance(recv, ast.Attribute) and recv.attr == "read":
+                hits.append(node.lineno)
+                break
+            recv = recv.func if isinstance(recv, ast.Call) else recv.value
+    return hits
+
+
 def test_parquet_reads_only_inside_table_scan():
-    """``Table._scan`` is the store's one Parquet reader."""
-    path = store_mod.__file__
-    with open(path) as f:
-        src = f.read()
-    table = next(
-        n for n in ast.parse(src).body
-        if isinstance(n, ast.ClassDef) and n.name == "Table"
-    )
-    scan = next(
-        n for n in table.body
-        if isinstance(n, ast.FunctionDef) and n.name == "_scan"
-    )
-    stray = [
-        f"{os.path.basename(path)}:{no}"
-        for no, line in enumerate(src.splitlines(), 1)
-        if "read.parquet(" in line
-        and not scan.lineno <= no <= scan.end_lineno
-    ]
-    assert not stray, f"read.parquet( outside Table._scan: {stray}"
+    """``Table._scan`` is the store's one Parquet reader and
+    ``tables.read_parquet`` the package's one input reader: no other code
+    reads Parquet through ``spark.read``, so every input load takes the
+    schema memo."""
+    root = os.path.dirname(store_mod.__file__)
+    allowed = {("store.py", "Table._scan"), ("tables.py", "read_parquet")}
+    stray = []
+    for d, _dirs, files in os.walk(root):
+        for n in files:
+            if not n.endswith(".py"):
+                continue
+            path = os.path.join(d, n)
+            with open(path) as f:
+                src = f.read()
+            tree = ast.parse(src)
+            funcs = [(getattr(f, "name", None), f) for f in tree.body] + [
+                (f"{c.name}.{f.name}", f) for c in tree.body
+                if isinstance(c, ast.ClassDef)
+                for f in c.body if isinstance(f, ast.FunctionDef)
+            ]
+            spans = [
+                (f.lineno, f.end_lineno) for name, f in funcs
+                if isinstance(f, ast.FunctionDef) and (n, name) in allowed
+            ]
+            lines = set(_parquet_reads(tree)) | {
+                no for no, line in enumerate(src.splitlines(), 1)
+                if "read.parquet(" in line
+            }
+            stray += [
+                f"{os.path.relpath(path, root)}:{no}" for no in sorted(lines)
+                if not any(a <= no <= b for a, b in spans)
+            ]
+    assert not stray, f"Parquet read outside read_parquet/Table._scan: {stray}"
 
 
 def test_pyarrow_table_reads_only_inside_read_local():
